@@ -3,20 +3,21 @@
 Pipeline per command (the reference's declared execution contract,
 SURVEY.md §3.2):
 
-    glob(source) → read DSV (kwargs.read) → normalize columns
-    → token columns from path regex → project+rename to cols
-    → melt if specified → (family union is implicit in the multi-path
-    scan) → caller sinks to Parquet.
+    glob(source) → read DSV members by name (kwargs.read) → token
+    columns from path regex → project+rename to cols → melt if
+    specified → caller sinks to Parquet.
 
-Scale design: a variable family is ONE multi-path scan, not N per-file
-jobs — tokens come from ``regexp_extract(input_file_name())`` executor-
-side, so a 100k-file family plans as a single FileScan with one task per
-split. The whole pipeline is shuffle-free (scan → project → expand →
-write), i.e. embarrassingly parallel at any scale.
+Scale design: files sharing a separator and a header are ONE multi-path
+scan, not N per-file jobs — tokens come from ``regexp_extract(
+input_file_name())`` executor-side, so a uniform 100k-file family plans
+as a single FileScan; differing members add one scan per (sep, header)
+group, unioned by name. The pipeline is shuffle-free (scan → project →
+expand → write), i.e. embarrassingly parallel at any scale.
 """
 
 from __future__ import annotations
 
+import functools
 import glob as globmod
 import os
 import re
@@ -26,7 +27,7 @@ from pyspark.sql import functions as F
 
 from cirro_annotation_spark.manifest.model import TransformCommand
 from cirro_annotation_spark.operators.reshape import melt as melt_op
-from cirro_annotation_spark.sources.dsv import normalize_columns, read_dsv
+from cirro_annotation_spark.sources.dsv import normalize_columns, read_dsv, sniff
 
 TOKEN_RE = re.compile(r"\[(\w+)\]")
 
@@ -94,7 +95,7 @@ def compile_command(
         )
         if not matched:
             raise FileNotFoundError(f"no files match {pattern}")
-        df = _read_family(spark, matched, cmd)
+        df = _read_members(spark, matched, cmd)
         # Group index of each token in the compiled regex (named groups
         # are ordered by position).
         group_idx = {name: i + 1 for i, name in enumerate(extract_tokens(source))}
@@ -124,7 +125,7 @@ def compile_command(
         # would wrongly reject every cloud path (code-review r15).
         if "://" not in source and not os.path.exists(source):
             raise FileNotFoundError(source)
-        df = read_dsv(spark, source, sep=cmd.read.sep, header=cmd.read.header)
+        df = _read_members(spark, [source], cmd)
 
     # Projection + rename with dictionary metadata (run_annotate.py:183-184,
     # 194, 233): keep only dictionary-resolved columns (plus tokens),
@@ -167,7 +168,7 @@ def compile_command(
             )
 
     if cmd.melt:
-        # Normalize the manifest's value_cols the same way read_dsv
+        # Normalize the manifest's value_cols the same way sniff
         # normalized the frame's columns: a mixed-case manifest name
         # would otherwise pass the case-sensitive `not in` below while
         # Spark's case-insensitive resolver still unpivots it — the
@@ -190,39 +191,31 @@ def compile_command(
     return df
 
 
-def _read_family(spark: SparkSession, matched: list[str], cmd: TransformCommand):
-    """Scan a variable family, honoring PER-MEMBER separators.
+def _read_members(
+    spark: SparkSession, paths: list[str], cmd: TransformCommand
+) -> DataFrame:
+    """Read source files by column NAME, like the reference's per-file
+    ``pd.read_csv(sep=None)`` then concat (run_annotate.py:20-28).
 
-    The reference sniffs each file independently (``pd.read_csv(sep=
-    None)`` per member, run_annotate.py:20-22), so a family whose
-    members drifted between comma and tab still reads correctly. With
-    an explicit ``cmd.read.sep`` this is ONE multi-path scan; with
-    sniffing, members are grouped by detected separator — the common
-    all-same-sep family still plans as a single FileScan, and a mixed
-    family becomes one scan PER SEPARATOR unioned by column name
-    (Union is plan-level concatenation: no shuffle, each branch stays
-    embarrassingly parallel).
-
-    The sniff itself is a driver-side head read per member — metadata-
-    scale IO (4 KB/file). At a 100k-file family that is 100k small
-    reads; against object storage this loop is the thing to batch
-    (thread pool / ranged GETs), not the scan design.
+    One head read per file decides its separator (unless ``cmd.read.sep``
+    fixes it) and its column names; files sharing both are one scan, so a
+    uniform family still plans as a single FileScan. The groups are
+    unioned by name (plan-level, no shuffle): a reordered member's values
+    land in their named columns, and a column a member lacks reads null.
+    The head reads are driver-side, 4 KB per file; at object-store scale
+    this loop is the thing to batch (thread pool), not the scan design.
     """
-    if cmd.read.sep is not None:
-        return read_dsv(spark, matched, sep=cmd.read.sep, header=cmd.read.header)
-    from cirro_annotation_spark.sources.dsv import sniff_separator
-
-    by_sep: dict[str, list[str]] = {}
-    for p in matched:
-        by_sep.setdefault(sniff_separator(p), []).append(p)
+    groups: dict[tuple[str, tuple[str, ...]], list[str]] = {}
+    for p in paths:
+        sep, cols = sniff(p, header=cmd.read.header, sep=cmd.read.sep, spark=spark)
+        groups.setdefault((sep, tuple(cols)), []).append(p)
     frames = [
-        read_dsv(spark, paths, sep=sep, header=cmd.read.header)
-        for sep, paths in sorted(by_sep.items())
+        read_dsv(spark, members, sep, list(cols), cmd.read.header)
+        for (sep, cols), members in groups.items()
     ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+    )
 
 
 def _expand_glob(spark: SparkSession, pattern: str) -> list[str]:

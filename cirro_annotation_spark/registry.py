@@ -48,56 +48,56 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # don't resolve — a rename/typo must break loudly, not silently slide a
 # family out of the hash-checked window (the round-2 regression class).
 PRIORITY: list[str] = [
-    "stream_top_types_batch",  # last green driver r8, artifact r16
-    "stream_top_types_stream",  # last green driver r8, artifact r16
-    "text_bpe_encode_fertility",  # last green driver r8, artifact r16
-    "text_bpe_train_merges",  # last green driver r8, artifact r16
-    "text_lexical_diversity",  # last green driver r8, artifact r16
-    "text_redact_terms",  # last green driver r8, artifact r16
-    "window_cume_dist_pct_rank",  # last green driver r8, artifact r16
-    "dataset_chooser_newest_first",  # last green driver r9, artifact r16
-    "dedup_bloom_prefilter",  # last green driver r9, artifact r16
-    "dedup_cluster_assign",  # last green driver r9, artifact r16
-    "dedup_cluster_auto",  # last green driver r9, artifact r16
-    "dedup_cluster_components",  # last green driver r9, artifact r16
-    "dedup_cluster_components_star",  # last green driver r9, artifact r16
-    "dedup_fuzzy_blocked",  # last green driver r9, artifact r16
-    "dedup_incremental_batch",  # last green driver r9, artifact r16
-    "dedup_jaccard_prefix_join",  # last green driver r9, artifact r16
-    "dedup_ngram_containment_sample",  # last green driver r9, artifact r16
-    "dedup_sorted_neighborhood",  # last green driver r9, artifact r16
-    "dedup_survivor_corpus",  # last green driver r9, artifact r16
-    "docs_classifier_train_perceptron",  # last green driver r9, artifact r16
-    "docs_doremi_weights",  # last green driver r9, artifact r16
-    "docs_dup_span_sa",  # last green driver r9, artifact r16
-    "embeddings_rq_train",  # last green driver r9, artifact r16
-    "events_spc_rules",  # last green driver r9, artifact r16
-    "graph_bfs_hops",  # last green driver r9, artifact r16
-    "graph_kcore_parts",  # last green driver r9, artifact r16
-    "graph_label_propagation",  # last green driver r9, artifact r16
-    "graph_pagerank_personalized",  # last green driver r9, artifact r16
-    "graph_pagerank_trade",  # last green driver r9, artifact r16
-    "graph_triangle_parts",  # last green driver r9, artifact r16
-    "join_bloom_semi",  # last green driver r9, artifact r16
-    "join_interval_overlap",  # last green driver r9, artifact r16
-    "manifest_file_to_columns",  # last green driver r9, artifact r16
-    "manifest_harvest_columns",  # last green driver r9, artifact r16
-    "manifest_melt_standard",  # last green driver r9, artifact r16
-    "manifest_project_dictionary",  # last green driver r9, artifact r16
-    "manifest_roundtrip_tokens",  # last green driver r9, artifact r16
-    "manifest_variable_family",  # last green driver r9, artifact r16
-    "multimodal_binary_stats",  # last green driver r9, artifact r16
-    "multimodal_extract_features",  # last green driver r9, artifact r16
-    "multimodal_frame_sample",  # last green driver r9, artifact r16
-    "multimodal_resize",  # last green driver r9, artifact r16
-    "pipeline_entity_resolution",  # last green driver r9, artifact r16
-    "pipeline_entity_resolution_incremental",  # last green driver r9, artifact r16
-    "scan_jsonl_typed",  # last green driver r9, artifact r16
-    "sim_topk_rq",  # last green driver r9, artifact r16
-    "stream_cdc_replay_exactly_once",  # last green driver r9, artifact r16
-    "stream_psi_daily_batch",  # last green driver r9, artifact r16
-    "stream_psi_daily_stream",  # last green driver r9, artifact r16
-    "basket_assoc_rules",  # last green driver r10, artifact r16
+    "dedup_exact",  # last green driver r10, artifact r16
+    "dedup_exact_counts",  # last green driver r10, artifact r16
+    "dedup_fuzzy_levenshtein",  # last green driver r10, artifact r16
+    "dedup_minhash_verify",  # last green driver r10, artifact r16
+    "dedup_ngram_jaccard_sample",  # last green driver r10, artifact r16
+    "docs_kn_perplexity",  # last green driver r10, artifact r16
+    "docs_readability_flesch",  # last green driver r10, artifact r16
+    "embeddings_kcenter_coreset",  # last green driver r10, artifact r16
+    "events_anomaly_consensus",  # last green driver r10, artifact r16
+    "events_bootstrap_ci",  # last green driver r10, artifact r16
+    "events_burst_hysteresis",  # last green driver r10, artifact r16
+    "events_cep_pattern",  # last green driver r10, artifact r16
+    "events_conformal_intervals",  # last green driver r10, artifact r16
+    "events_conversion_latency",  # last green driver r10, artifact r16
+    "events_daily_rollup_ivm",  # last green driver r10, artifact r16
+    "events_dow_profile",  # last green driver r10, artifact r16
+    "events_ewma_daily",  # last green driver r10, artifact r16
+    "events_forecast_accuracy",  # last green driver r10, artifact r16
+    "events_forecast_backtest",  # last green driver r10, artifact r16
+    "events_holt_linear_daily",  # last green driver r10, artifact r16
+    "events_holt_winters_daily",  # last green driver r10, artifact r16
+    "events_markov_next",  # last green driver r10, artifact r16
+    "events_stl_decompose",  # last green driver r10, artifact r16
+    "events_survival_km",  # last green driver r10, artifact r16
+    "events_theil_sen_trend",  # last green driver r10, artifact r16
+    "graph_link_prediction",  # last green driver r10, artifact r16
+    "lineitem_shiplag_percentiles",  # last green driver r10, artifact r16
+    "multimodal_payload_dedup",  # last green driver r10, artifact r16
+    "orders_gini_concentration",  # last green driver r10, artifact r16
+    "orders_monthly_growth",  # last green driver r10, artifact r16
+    "orders_rfm_segments",  # last green driver r10, artifact r16
+    "pipeline_curriculum_order",  # last green driver r10, artifact r16
+    "sample_temperature_mixture",  # last green driver r10, artifact r16
+    "sim_topk_binary",  # last green driver r10, artifact r16
+    "sql_lateral_topk",  # last green driver r10, artifact r16
+    "sql_pivot_status",  # last green driver r10, artifact r16
+    "sql_recursive_clamped_balance",  # last green driver r10, artifact r16
+    "sql_unpivot_metrics",  # last green driver r10, artifact r16
+    "stream_burst_hysteresis_stream",  # last green driver r10, artifact r16
+    "stream_ewma_daily_stream",  # last green driver r10, artifact r16
+    "stream_holt_winters_stream",  # last green driver r10, artifact r16
+    "supplier_scorecard",  # last green driver r10, artifact r16
+    "text_collocations_pmi",  # last green driver r10, artifact r16
+    "text_kn_bigram_lm",  # last green driver r10, artifact r16
+    "text_langid_train_nb",  # last green driver r10, artifact r16
+    "text_rake_keyphrases",  # last green driver r10, artifact r16
+    "agg_count_distinct",  # last green driver r11, artifact r16
+    "agg_cube",  # last green driver r11, artifact r16
+    "agg_grouped_stats",  # last green driver r11, artifact r16
+    "agg_grouping_sets",  # last green driver r11, artifact r16
 ]
 
 

@@ -167,7 +167,13 @@ def _drain_state_partitions(
     size = None
     if source_path is not None:
         try:
-            size = os.path.getsize(source_path)
+            # A Parquet source is a directory: sum the files under it (a
+            # directory's own size is its inode's); a file walks empty.
+            size = sum(
+                os.path.getsize(os.path.join(d, f))
+                for d, _, files in os.walk(source_path)
+                for f in files
+            ) or os.path.getsize(source_path)
         except OSError:
             size = None
     return str(derive_state_partitions(size, default_parallelism()))

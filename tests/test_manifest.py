@@ -185,6 +185,85 @@ def test_variable_family_mixed_separators(spark, tmp_path):
     }
 
 
+def _compile_family(spark, root, members, suffix=".txt", header=True):
+    """Compile ``fam/[g]/s<suffix>`` over ``members`` ({g: file text}),
+    letting every member's separator and header be sniffed."""
+    import gzip
+
+    from cirro_annotation_spark.manifest.model import ReadOptions, TransformCommand
+
+    for g, text in members.items():
+        path = root / "fam" / g / ("s" + suffix)
+        path.parent.mkdir(parents=True)
+        if suffix.endswith(".gz"):
+            with gzip.open(path, "wt") as f:
+                f.write(text)
+        else:
+            path.write_text(text)
+    cmd = TransformCommand(
+        source="$data_directory/fam/[g]/s.txt",
+        target="fam.parquet",
+        read=ReadOptions(header=header),
+    )
+    return compile_command(spark, cmd, str(root))
+
+
+@pytest.mark.parametrize(
+    "b_text, b_row",
+    [
+        # Reordered header: b's values land in b's named columns.
+        ("count\tsgrna\tlfc\n30\tsB\t1.5\n", ("sB", 30, 1.5, "b")),
+        # Missing column: lfc reads null for b's rows.
+        ("sgrna\tcount\nsB\t30\n", ("sB", 30, None, "b")),
+    ],
+    ids=["reordered_header", "missing_column"],
+)
+def test_variable_family_aligns_members_by_name(spark, tmp_path, b_text, b_row):
+    """The reference reads each member by name and concatenates
+    (run_annotate.py:20-28): a member whose header differs from its
+    siblings must not shift values into the wrong columns, and ``count``
+    must stay numeric for the whole family."""
+    from pyspark.sql.types import IntegralType
+
+    df = _compile_family(
+        spark, tmp_path, {"a": "sgrna\tcount\tlfc\nsA\t10\t0.5\n", "b": b_text}
+    )
+    assert isinstance(df.schema["count"].dataType, IntegralType), df.schema
+    rows = {(r["sgrna"], r["count"], r["lfc"], r["g"]) for r in df.collect()}
+    assert rows == {("sA", 10, 0.5, "a"), b_row}
+
+
+@pytest.mark.parametrize("suffix", [".txt", ".txt.gz"])
+def test_variable_family_header_wider_than_sniff_window(spark, tmp_path, suffix):
+    """A header longer than the 4 KB sniff window (a matrix with many
+    sample columns) is read whole, plain or gz: members that order the
+    wide header differently still align by name, including the columns
+    past the window."""
+    names = [f"c{i:04d}" for i in range(800)]
+    a_cols, b_cols = ["id", *names], [*names[::-1], "id"]
+    a = {"id": "1", **{n: str(i) for i, n in enumerate(names)}}
+    b = {"id": "2", **{n: str(1000 + i) for i, n in enumerate(names)}}
+    members = {
+        "a": "\t".join(a_cols) + "\n" + "\t".join(a[c] for c in a_cols) + "\n",
+        "b": "\t".join(b_cols) + "\n" + "\t".join(b[c] for c in b_cols) + "\n",
+    }
+    assert len(members["a"].splitlines()[0]) > 4096
+    df = _compile_family(spark, tmp_path, members, suffix=suffix)
+    rows = {(r["g"], r["id"], r["c0000"], r["c0799"]) for r in df.collect()}
+    assert rows == {("a", 1, 0, 799), ("b", 2, 1000, 1799)}
+
+
+def test_variable_family_header_false_names_fields_positionally(spark, tmp_path):
+    """``header=False`` keeps Spark's positional ``_c0..`` names for
+    every member."""
+    df = _compile_family(
+        spark, tmp_path, {"a": "sA\t10\nsB\t20\n", "b": "sC\t30\n"}, header=False
+    )
+    assert df.columns == ["_c0", "_c1", "g"]
+    rows = {(r["_c0"], r["_c1"], r["g"]) for r in df.collect()}
+    assert rows == {("sA", 10, "a"), ("sB", 20, "a"), ("sC", 30, "b")}
+
+
 def test_token_extraction_with_space_and_plus_in_path(spark, tmp_path):
     """input_file_name() is percent-encoded; the regex must match the
     DECODED path or every token silently extracts '' (code-review r15).

@@ -89,12 +89,12 @@ def test_sniff_via_hadoop_fs_scheme_path(spark, tmp_path):
     """A scheme-qualified path ('file://...') must sniff through the
     Hadoop FileSystem API — the cloud-storage code path — and agree
     with the local-open result."""
-    from cirro_annotation_spark.sources.dsv import sniff_separator
+    from cirro_annotation_spark.sources.dsv import sniff
 
     p = tmp_path / "t.tsv"
     p.write_text("a\tb\tc\n1\t2\t3\n")
-    assert sniff_separator(str(p)) == "\t"
-    assert sniff_separator("file://" + str(p), spark) == "\t"
+    assert sniff(str(p)) == ("\t", ["a", "b", "c"])
+    assert sniff("file://" + str(p), spark=spark) == ("\t", ["a", "b", "c"])
 
 
 def test_sniff_gz_truncation_tolerant(tmp_path):
@@ -103,10 +103,52 @@ def test_sniff_gz_truncation_tolerant(tmp_path):
     window."""
     import gzip as _gzip
 
-    from cirro_annotation_spark.sources.dsv import sniff_separator
+    from cirro_annotation_spark.sources.dsv import sniff
 
     p = tmp_path / "big.csv.gz"
     body = "x,y,z\n" + "\n".join(f"{i},{i},{i}" for i in range(200_000))
     with _gzip.open(p, "wt") as f:
         f.write(body)
-    assert sniff_separator(str(p)) == ","
+    assert sniff(str(p)) == (",", ["x", "y", "z"])
+
+
+def test_sniff_names_follow_spark_header_rules(tmp_path):
+    """Names decided from the head read are the names Spark's CSV
+    header gives, normalized: an empty name is ``_c<i>``, names that
+    repeat case-insensitively get their index, blank lines before the
+    header are skipped, and ``header=False`` names fields ``_c0..``."""
+    from cirro_annotation_spark.sources.dsv import sniff
+
+    p = tmp_path / "t.csv"
+    p.write_text("\n,Gene,gene,Score \n1,a,b,2\n")
+    assert sniff(str(p)) == (",", ["_c0", "gene1", "gene2", "score"])
+    assert sniff(str(p), header=False) == (",", ["_c0", "_c1", "_c2", "_c3"])
+
+
+def test_sniff_rejects_first_line_longer_than_head_bound(tmp_path, monkeypatch):
+    """A first line that does not end within the head-read bound fails
+    loudly instead of being cut into wrong column names."""
+    from cirro_annotation_spark.sources import dsv
+
+    monkeypatch.setattr(dsv, "MAX_HEAD_BYTES", 64 << 10)
+    p = tmp_path / "wide.tsv"
+    p.write_text("\t".join(f"col{i}" for i in range(20_000)) + "\n1\n")
+    with pytest.raises(ValueError, match="first line"):
+        dsv.sniff(str(p))
+
+
+def test_harvest_columns_launches_no_spark_job(tmp_path):
+    """The planner's column harvest is the head read alone: it never
+    touches the session for local files."""
+    from cirro_annotation_spark.sources.dsv import harvest_columns
+
+    class NoSpark:
+        def __getattr__(self, name):
+            raise AssertionError(f"harvest_columns used spark.{name}")
+
+    (tmp_path / "a.tsv").write_text("ID\tScore\n1\t2\n")
+    (tmp_path / "b.csv").write_text("x,y\n1,2\n")
+    assert harvest_columns(NoSpark(), str(tmp_path), ["a.tsv", "b.csv"]) == {
+        "a.tsv": ["id", "score"],
+        "b.csv": ["x", "y"],
+    }

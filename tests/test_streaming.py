@@ -320,3 +320,22 @@ def test_state_partition_derivation_scales_with_source():
     assert d(10 * (64 << 20), 32) == 11        # 640 MB: 1 + 10 partitions
     assert d(100 * (1 << 40), 32) == 32        # 100 TB: capped at cores
     assert d(100 * (1 << 40), 4096) == 4096    # bigger cluster, bigger cap
+
+
+def test_state_partitions_size_a_parquet_directory_by_its_files(
+    spark, tmp_path, monkeypatch
+):
+    """A Parquet source is a directory: its size is the sum of the files
+    under it, not the directory inode's, so a 640 MB source derives
+    1 + 10 state partitions instead of the floor."""
+    import cirro_annotation_spark.session as session
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    monkeypatch.setattr(session, "default_parallelism", lambda: 32)
+    src = tmp_path / "events.parquet"
+    (src / "ts_day=1").mkdir(parents=True)
+    for i in range(10):
+        part = src / ("ts_day=1" if i % 2 else ".") / f"part-{i}.parquet"
+        with open(part, "wb") as f:
+            f.truncate(64 << 20)  # sparse: the size without the bytes
+    assert STRM._drain_state_partitions(spark, str(src)) == "11"
