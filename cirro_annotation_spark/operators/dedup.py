@@ -66,63 +66,54 @@ def shingles(text_col: str, n: int = 3) -> F.Column:
     return F.array_distinct(F.filter(grams, lambda g: g != ""))
 
 
-def minhash_signature(shingle_col: F.Column, num_hashes: int = 32) -> F.Column:
-    """MinHash signature on the engine-neutral md5 32-bit lattice.
+def minhash_signatures(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int = 32,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """MinHash signature of every document: ``(__id, __s0 .. __s{n-1})``.
 
-    Each shingle is md5-hashed ONCE; the first/second 8 hex chars become
-    two 32-bit integers (h1, h2) and permutation i draws from the
-    Kirsch–Mitzenmacher affine family g_i = (h1 + i·h2) mod 2^32 (h2
-    forced odd so it is a unit mod 2^32). 32-bit minhash values are the
-    production norm (Spark's own MinHashLSH uses a ~2^31 prime family);
-    the payoff here is EXACTNESS across engines: DuckDB computes the
-    identical lattice via ('0x'||substr(md5(g),…))::BIGINT, so the
-    banding→verify pipeline gets a full value-hash oracle instead of the
-    rows-only check the old xxhash64 family allowed (VERDICT r10 —
-    "banding interior has no DuckDB twin" — retired).
+    Lattice: each shingle is md5-hashed ONCE; the first/second 8 hex
+    chars become two 32-bit integers (h1, h2) and permutation i draws
+    from the Kirsch–Mitzenmacher affine family g_i = (h1 + i·h2) mod 2^32
+    (h2 forced odd so it is a unit mod 2^32). 32-bit minhash values are
+    the production norm (Spark's own MinHashLSH uses a ~2^31 prime
+    family); the payoff here is EXACTNESS across engines: DuckDB
+    computes the identical lattice via ('0x'||substr(md5(g),…))::BIGINT,
+    so the banding→verify pipeline gets a full value-hash oracle. No
+    ANSI overflow: h1 + i·h2 ≤ 2^32·(num_hashes+1) ≪ 2^63.
 
-    No ANSI overflow: h1 + i·h2 ≤ 2^32·(num_hashes+1) ≪ 2^63 for any
-    sane num_hashes, so the affine re-hash is plain BIGINT arithmetic —
-    cheaper per seed than the xxhash64-per-seed family it replaces.
-
-    Evaluation shape (measured at sf0.1, 5k docs): any form where the
-    shingle expression sits INSIDE a per-seed loop re-evaluates it
-    num_hashes times per row (~100 s); here it is the single input of
-    one F.aggregate — evaluated once per row, all minima folded in one
-    pass. (Round-1 lesson: 2-arg HOF lambdas receive (element, index),
-    so per-seed binding comes from the seeds array, never a captured
-    default arg.)
+    Plan shape (optimization r15, guide §1.2/§2.3): ONE codegen'd hash
+    aggregate — explode shingles to (id, md5) rows, derive (h1, h2),
+    groupBy(id) with ``num_hashes`` plain min() aggregates. The in-row
+    F.aggregate/zip_with fold it replaced was interpreted (HOFs are
+    excluded from whole-stage codegen) and paid a ~2.3 s per-run fixed
+    cost on top of ~2× slower per-row work. The explode adds one narrow
+    exchange of (id, 32 longs ≈ 256 B/doc) — partial map-side
+    aggregation collapses each doc's shingles to one row per map task
+    before the shuffle, so the exchange carries signature-sized rows,
+    never shingle text. Docs with zero shingles (empty text) contribute
+    no exploded rows, so they get no signature row.
     """
     two32 = F.lit(4294967296).cast("long")
-    seeds = F.array(*[F.lit(i).cast("long") for i in range(num_hashes)])
-    init = F.array(*[F.lit(4294967296).cast("long")] * num_hashes)
-    # md5 evaluated ONCE per shingle via an intermediate array: inside a
-    # HOF lambda there is no common-subexpression elimination, so the
-    # struct form computed the digest twice per shingle (optimization
-    # r15, guide §1.2 per-task work: 5.7 -> 4.6 s on the full sf0.1
-    # corpus for the signature select alone).
-    md5s = F.transform(shingle_col, lambda s: F.md5(s))
-    base = F.transform(
-        md5s,
-        lambda m: F.struct(
-            F.conv(F.substring(m, 1, 8), 16, 10)
-            .cast("long")
-            .alias("h1"),
-            F.conv(F.substring(m, 9, 8), 16, 10)
-            .cast("long")
-            .bitwiseOR(F.lit(1).cast("long"))
-            .alias("h2"),
-        ),
+    md5s = F.transform(shingles(text_col, shingle_n), lambda s: F.md5(s))
+    ex = df.select(F.col(id_col).alias("__id"), F.explode(md5s).alias("m"))
+    h1 = F.conv(F.substring("m", 1, 8), 16, 10).cast("long")
+    h2 = (
+        F.conv(F.substring("m", 9, 8), 16, 10)
+        .cast("long")
+        .bitwiseOR(F.lit(1).cast("long"))
     )
-    return F.aggregate(
-        base,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            seeds,
-            lambda a, seed: F.least(
-                a, (h["h1"] + seed * h["h2"]) % two32
-            ),
-        ),
+    hrows = ex.select("__id", h1.alias("h1"), h2.alias("h2"))
+    return hrows.groupBy("__id").agg(
+        *[
+            F.min(
+                (F.col("h1") + F.lit(i).cast("long") * F.col("h2")) % two32
+            ).alias(f"__s{i}")
+            for i in range(num_hashes)
+        ]
     )
 
 
@@ -137,17 +128,9 @@ def minhash_candidates(
     """LSH banding: docs sharing any band of their MinHash signature become
     a candidate pair. Returns (id_a, id_b) distinct pairs, a < b.
 
-    Plan shape (optimization r15, guide §1.2/§2.3): the signature is
-    computed as ONE codegen'd hash aggregate — explode shingles to
-    (id, md5) rows, derive (h1, h2), groupBy(id) with ``num_hashes``
-    plain min() aggregates. The previous in-row F.aggregate/zip_with
-    fold was interpreted (HOFs are excluded from whole-stage codegen)
-    and paid a ~2.3 s per-run fixed cost on top of ~2× slower per-row
-    work; the aggregate form measured 5.2 -> 2.0 s for the whole
-    candidates stage at sf0.1. The explode adds one narrow exchange of
-    (id, 32 longs ≈ 256 B/doc) — partial map-side aggregation collapses
-    each doc's shingles to one row per map task before the shuffle, so
-    the exchange carries signature-sized rows, never shingle text.
+    Signatures come from :func:`minhash_signatures`, one codegen'd hash
+    aggregate (its aggregate form measured 5.2 -> 2.0 s for the whole
+    candidates stage at sf0.1 against the in-row fold it replaced).
 
     Bucket pairs are generated WITHOUT a second shuffle of the banded
     frame: groupBy (band_id, band_hash) collects each bucket's sorted
@@ -165,29 +148,11 @@ def minhash_candidates(
     ≤ ~44 chars for 4×32-bit minima — a perfectly fine shuffle key at
     any corpus size, and the DuckDB oracle reproduces it verbatim with
     string_agg(v, ',' ORDER BY i). Docs with zero shingles (empty text)
-    contribute no exploded rows, so they never reach banding — the same
-    exclusion the old all-sentinel filter enforced (the oracle's
+    have no signature row, so they never reach banding (the oracle's
     unnest-based fold emits no rows for them either).
     """
     rows = num_hashes // bands
-    two32 = F.lit(4294967296).cast("long")
-    md5s = F.transform(shingles(text_col, shingle_n), lambda s: F.md5(s))
-    ex = df.select(F.col(id_col).alias("__id"), F.explode(md5s).alias("m"))
-    h1 = F.conv(F.substring("m", 1, 8), 16, 10).cast("long")
-    h2 = (
-        F.conv(F.substring("m", 9, 8), 16, 10)
-        .cast("long")
-        .bitwiseOR(F.lit(1).cast("long"))
-    )
-    hrows = ex.select("__id", h1.alias("h1"), h2.alias("h2"))
-    sig = hrows.groupBy("__id").agg(
-        *[
-            F.min(
-                (F.col("h1") + F.lit(i).cast("long") * F.col("h2")) % two32
-            ).alias(f"__s{i}")
-            for i in range(num_hashes)
-        ]
-    )
+    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
     banded = sig.select(
         "__id",
         F.explode(

@@ -628,7 +628,8 @@ def label_propagation(
     # argmax(count, then smallest label) via a row_number window — the
     # r15 max_by(struct(c, -label)) rewrite was REVERTED in r16: at the
     # tier scale the driver bench cannot see (120k cliques / 7.2M
-    # mirrored edges, scripts/scale_graph_ab_r16.py), the window shape
+    # mirrored edges, scripts/scale_graph_ab_r16.py in git history up
+    # to e921ddb), the window shape
     # measured consistently faster across 3 interleaved rounds (old
     # 24.5/15.9/23.7 s vs max_by 25.1/25.1/33.0 s for 3 LPA rounds) —
     # the second hash aggregate's struct-comparison update loses to one

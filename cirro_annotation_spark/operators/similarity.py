@@ -1,13 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers, per the scale playbook:
-- brute-force cosine top-k — the exact baseline; dot products run as
-  JVM-side higher-order functions (zip_with + aggregate), the query
-  vector broadcasts, the fact side never shuffles. Fine for one query
-  against any corpus size (single scan), or small query batches.
-- LSH-bucketed (random hyperplane signatures) — the scale path for
-  query batches / all-pairs: both sides hash to sign-bit buckets, the
-  join touches only colliding buckets.
+Search methods, each a top-k by cosine (ties by id ascending):
+- brute force — the exact baseline; dot products run as JVM-side
+  higher-order functions (zip_with + aggregate), the query broadcasts,
+  the corpus never shuffles.
+- LSH (random hyperplane signatures) and multi-probe LSH — both sides
+  hash to sign-bit buckets and the join touches only the query's
+  bucket(s).
+- IVF-Flat — an argmin against k-means centroids assigns each vector a
+  cell, and only the query's ``nprobe`` nearest cells are scored.
+- PQ / IVF-PQ — asymmetric distance over product-quantization codes.
+
+One rule: each method has ONE body, the ``_q`` form, which takes the
+query as a 1-row ``(__qv, __qn)`` frame (:func:`query_vector_frame`).
+A literal-vector form (``topk_cosine_bruteforce``, ``topk_cosine_lsh``,
+``ivf_topk_cosine``) is a wrapper that builds that frame from the vector
+(:func:`_literal_query_frame`) and calls the ``_q`` form.
 """
 
 from __future__ import annotations
@@ -15,7 +23,8 @@ from __future__ import annotations
 import math
 import random
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -57,15 +66,18 @@ def cosine(a: F.Column, b: F.Column) -> F.Column:
     return _cosine(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
-def cosine_to_query(v: F.Column, query_vec: list[float]) -> F.Column:
-    """Cosine against a constant query vector with the query's norm
-    folded driver-side: per row this costs one dot + one norm instead
-    of one dot + two norms (the query norm is the same number for every
-    row). Python's left-to-right sum matches F.aggregate's fold order,
-    so the value is bit-identical to cosine(v, lit(q))."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    qn = math.sqrt(sum(float(x) * float(x) for x in query_vec))
-    return _cosine(dot(v, q), l2_norm(v) * F.lit(qn))
+def _vector_lit(vec: list[float]) -> F.Column:
+    """A driver-side float vector as ONE array<double> literal. Passing
+    the numpy array hands Py4J a Java double[] (37 commands for a 16-d
+    vector) instead of one literal Column per element (71)."""
+    return F.lit(np.asarray(vec, dtype=np.float64))
+
+
+def _matrix_lit(rows: list[list[float]]) -> F.Column:
+    """Centroids or hyperplanes as one array<array<double>> literal. A
+    search builds it once and shares it between the corpus side and the
+    query side of its plan."""
+    return F.array(*[_vector_lit(r) for r in rows])
 
 
 def query_vector_frame(
@@ -88,11 +100,37 @@ def query_vector_frame(
     )
 
 
+def _literal_query_frame(spark: SparkSession, query_vec: list[float]) -> DataFrame:
+    """The :func:`query_vector_frame` of a driver-side query vector: an
+    inline VALUES row, so it plans as a LocalRelation and building it
+    starts no job. Python's left-to-right sum is :func:`l2_norm`'s fold
+    order, so ``__qn`` is bit-identical to the in-plan norm."""
+    qn = math.sqrt(sum(float(x) * float(x) for x in query_vec))
+    return spark.sql(
+        "SELECT * FROM VALUES (:qv, :qn) AS q(__qv, __qn)",
+        args={"qv": _vector_lit(query_vec), "qn": F.lit(qn)},
+    )
+
+
 def cosine_vs_query_frame(v: F.Column) -> F.Column:
     """Cosine of ``v`` against the joined-in ``__qv``/``__qn`` columns of a
-    :func:`query_vector_frame` (same arithmetic as
-    :func:`cosine_to_query`, query norm reused per row)."""
+    query frame; the query norm is reused per row, so each row costs one
+    dot and one norm."""
     return _cosine(dot(v, F.col("__qv")), l2_norm(v) * F.col("__qn"))
+
+
+def _topk_cosine(joined: DataFrame, v: F.Column, id_col: str, k: int) -> DataFrame:
+    """The ranking tail every search shares: cosine against the joined-in
+    query columns, rounded to 6 places, top-k by (cosine desc, id asc)
+    through TakeOrderedAndProject."""
+    return (
+        joined.select(
+            F.col(id_col),
+            F.round(cosine_vs_query_frame(v), 6).alias("cosine_sim"),
+        )
+        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
+        .limit(k)
+    )
 
 
 def topk_cosine_bruteforce_q(
@@ -107,14 +145,42 @@ def topk_cosine_bruteforce_q(
     computes one fused expression per row, TakeOrderedAndProject keeps
     per-partition top-k. Zero corpus shuffle, zero build-time jobs."""
     v = F.col(vec_col).cast("array<double>")
-    return (
-        df.crossJoin(F.broadcast(query_frame))
-        .select(
-            F.col(id_col),
-            F.round(cosine_vs_query_frame(v), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-        .limit(k)
+    return _topk_cosine(df.crossJoin(F.broadcast(query_frame)), v, id_col, k)
+
+
+def topk_cosine_bruteforce(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    query_vec: list[float],
+    k: int = 10,
+) -> DataFrame:
+    """:func:`topk_cosine_bruteforce_q` against one literal query vector."""
+    qf = _literal_query_frame(df.sparkSession, query_vec)
+    return topk_cosine_bruteforce_q(df, vec_col, id_col, qf, k)
+
+
+def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
+    rng = random.Random(seed)
+    return [
+        [rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)
+    ]
+
+
+def lsh_bucket(
+    vec_col: F.Column, planes: list[list[float]] | F.Column
+) -> F.Column:
+    """Random-hyperplane signature: one sign bit per plane, packed to long
+    (bit i is the side of plane i). P(same bucket) = (1 -
+    angle/pi)^n_planes — the SimHash-for-vectors LSH. One ``transform``
+    over the plane-matrix literal (a list is turned into one first)."""
+    if not isinstance(planes, F.Column):
+        planes = _matrix_lit(planes)
+    signs = F.transform(
+        planes, lambda p: F.when(dot(vec_col, p) >= 0, 1).otherwise(0).cast("long")
+    )
+    return F.aggregate(
+        F.reverse(signs), F.lit(0).cast("long"), lambda acc, b: acc * 2 + b
     )
 
 
@@ -128,68 +194,19 @@ def topk_cosine_lsh_q(
     seed: int = 42,
     dim: int = 64,
 ) -> DataFrame:
-    """LSH top-k with the query in-plan: both sides compute their
+    """Approximate top-k: restrict the scan to vectors in the query's LSH
+    bucket, then exact cosine inside the bucket. With 8 planes the bucket
+    holds ~1/256 of the corpus in expectation. Both sides compute their
     sign-bit bucket from the same plane literals, the 1-row query side
-    broadcasts, and the bucket-equality join prunes the corpus to the
-    query's bucket (BroadcastHashJoin — the filter the literal-signature
-    version expressed driver-side, now expressed as a join key)."""
-    planes = _hyperplanes(dim, n_planes, seed)
+    broadcasts, and the bucket-equality join (BroadcastHashJoin) prunes
+    the corpus to the query's bucket."""
+    planes = _matrix_lit(_hyperplanes(dim, n_planes, seed))
     v = F.col(vec_col).cast("array<double>")
     qf = query_frame.withColumn("__qb", lsh_bucket(F.col("__qv"), planes))
-    return (
-        df.withColumn("__bucket", lsh_bucket(v, planes))
-        .join(F.broadcast(qf), F.col("__bucket") == F.col("__qb"))
-        .select(
-            F.col(id_col),
-            F.round(cosine_vs_query_frame(v), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-        .limit(k)
+    joined = df.withColumn("__bucket", lsh_bucket(v, planes)).join(
+        F.broadcast(qf), F.col("__bucket") == F.col("__qb")
     )
-
-
-def topk_cosine_bruteforce(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query_vec: list[float],
-    k: int = 10,
-) -> DataFrame:
-    """Exact top-k by cosine against one query vector.
-
-    The query is a literal array (broadcast by value into the plan); the
-    scan computes one fused expression per row; TakeOrderedAndProject
-    keeps per-partition top-k then merges — no shuffle of the corpus.
-    """
-    sim = cosine_to_query(F.col(vec_col).cast("array<double>"), query_vec)
-    return (
-        df.select(F.col(id_col), F.round(sim, 6).alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    rng = random.Random(seed)
-    return [
-        [rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)
-    ]
-
-
-def lsh_bucket(vec_col: F.Column, planes: list[list[float]]) -> F.Column:
-    """Random-hyperplane signature: one sign bit per plane, packed to long.
-    P(same bucket) = (1 - angle/pi)^n_planes — the SimHash-for-vectors LSH."""
-    bits = [
-        F.when(
-            dot(vec_col, F.array(*[F.lit(p) for p in plane])) >= 0,
-            F.shiftleft(F.lit(1).cast("long"), i),
-        ).otherwise(F.lit(0).cast("long"))
-        for i, plane in enumerate(planes)
-    ]
-    out = F.lit(0).cast("long")
-    for b in bits:
-        out = out.bitwiseXOR(b)  # disjoint bits
-    return out
+    return _topk_cosine(joined, v, id_col, k)
 
 
 def topk_cosine_lsh(
@@ -201,24 +218,11 @@ def topk_cosine_lsh(
     n_planes: int = 8,
     seed: int = 42,
 ) -> DataFrame:
-    """Approximate top-k: restrict the scan to vectors in the query's LSH
-    bucket, then exact cosine inside the bucket. With 8 planes the bucket
-    holds ~1/256 of the corpus in expectation — the candidate scan is 2-3
-    orders of magnitude smaller, and bucketing is a parquet-partitionable
-    column for repeated query workloads."""
-    dim = len(query_vec)
-    planes = _hyperplanes(dim, n_planes, seed)
-    qsig = 0
-    for i, plane in enumerate(planes):
-        if sum(p * v for p, v in zip(plane, query_vec)) >= 0:
-            qsig |= 1 << i
-    v = F.col(vec_col).cast("array<double>")
-    return (
-        df.withColumn("__bucket", lsh_bucket(v, planes))
-        .filter(F.col("__bucket") == qsig)
-        .select(F.col(id_col), F.round(cosine_to_query(v, query_vec), 6).alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-        .limit(k)
+    """:func:`topk_cosine_lsh_q` against one literal query vector; the
+    planes are drawn for the query's dimension."""
+    qf = _literal_query_frame(df.sparkSession, query_vec)
+    return topk_cosine_lsh_q(
+        df, vec_col, id_col, qf, k, n_planes, seed, dim=len(query_vec)
     )
 
 
@@ -238,6 +242,8 @@ def train_centroids_kmeans(
     (cluster, dim, value) triples — k·dim·rows narrow rows, map-side
     partially aggregated. This is the standard scale shape for iterative
     centroid fitting; rounds are few and each is one job.
+
+    Raises ``ValueError`` when the corpus holds fewer than ``k`` vectors.
     """
     init = (
         df.orderBy(F.col(id_col).asc())
@@ -245,6 +251,10 @@ def train_centroids_kmeans(
         .select(F.col(vec_col).cast("array<double>").alias("v"))
         .collect()
     )
+    if len(init) < k:
+        raise ValueError(
+            f"k-means needs at least k={k} vectors; the corpus has {len(init)}"
+        )
     centroids = [list(r["v"]) for r in init]
     v = F.col(vec_col).cast("array<double>")
     for _ in range(iterations):
@@ -269,76 +279,44 @@ def train_centroids_kmeans(
     return centroids
 
 
-def _argmin_centroid(v: F.Column, centroids: list[list[float]]) -> F.Column:
-    """Index of the nearest centroid (squared L2), as one fused expression
-    over broadcast-literal centroids — no join, no shuffle."""
-    dists = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    v,
-                    F.array(*[F.lit(float(x)) for x in c]),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            for c in centroids
-        ]
+def _centroid_dists(
+    v: F.Column, centroids: list[list[float]] | F.Column
+) -> F.Column:
+    """Squared L2 from ``v`` to every centroid, in centroid order: one
+    ``transform`` over the centroid-matrix literal (a list is turned into
+    one first), each distance a left-to-right fold of squared deltas."""
+    if not isinstance(centroids, F.Column):
+        centroids = _matrix_lit(centroids)
+    return F.transform(
+        centroids,
+        lambda c: F.aggregate(
+            F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
     )
+
+
+def _argmin_centroid(
+    v: F.Column, centroids: list[list[float]] | F.Column
+) -> F.Column:
+    """Index of the nearest centroid (squared L2, ties to the lower id),
+    as one fused expression over the centroid literal — no join, no
+    shuffle."""
+    dists = _centroid_dists(v, centroids)
     return F.array_position(dists, F.array_min(dists)).cast("int") - 1
 
 
-def ivf_topk_cosine(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query_vec: list[float],
-    centroids: list[list[float]],
-    k: int = 10,
-    nprobe: int = 4,
-) -> DataFrame:
-    """IVF-Flat search: scan only the ``nprobe`` cells whose centroids are
-    nearest the query, exact cosine within them. With k=16 cells and
-    nprobe=4 the candidate scan is ~1/4 of the corpus; at 100 TB the
-    cell id becomes a parquet partition column and unprobed cells are
-    pruned at the file level (never read)."""
-    def _d2(a: list[float], b: list[float]) -> float:
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
-
-    order = sorted(range(len(centroids)), key=lambda c: _d2(centroids[c], query_vec))
-    probe = order[:nprobe]
-    v = F.col(vec_col).cast("array<double>")
-    return (
-        df.withColumn("__cell", _argmin_centroid(v, centroids))
-        .filter(F.col("__cell").isin(probe))
-        .select(F.col(id_col), F.round(cosine_to_query(v, query_vec), 6).alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
-def nearest_cells(v: F.Column, centroids: list[list[float]], nprobe: int) -> F.Column:
+def nearest_cells(
+    v: F.Column, centroids: list[list[float]] | F.Column, nprobe: int
+) -> F.Column:
     """Ids of the ``nprobe`` centroids nearest ``v`` (squared L2, ties by
-    cell id ascending), as one fused expression over centroid literals:
-    build (distance, cell) structs, array_sort (struct natural order =
-    distance then id), slice, project the ids. No join, no job."""
-    scored = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        v,
-                        F.array(*[F.lit(float(x)) for x in c]),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                F.lit(i).alias("c"),
-            )
-            for i, c in enumerate(centroids)
-        ]
+    cell id ascending), as one fused expression over the centroid
+    literal: build (distance, cell) structs, array_sort (struct natural
+    order = distance then id), slice, project the ids. No join, no job."""
+    scored = F.transform(
+        _centroid_dists(v, centroids),
+        lambda d, i: F.struct(d.alias("d"), i.alias("c")),
     )
     return F.transform(
         F.slice(F.array_sort(scored), 1, nprobe), lambda s: s["c"]
@@ -354,29 +332,40 @@ def ivf_topk_cosine_q(
     k: int = 10,
     nprobe: int = 4,
 ) -> DataFrame:
-    """IVF-Flat search with the query in-plan: the 1-row query frame
-    carries its own probe-cell list (:func:`nearest_cells` over the same
-    centroid literals the corpus argmin uses), broadcasts, and the
-    ``array_contains`` join prunes the corpus to the probed cells. At
-    100 TB the cell id is a parquet partition column, so the probe
-    filter prunes at the file level; construction launches no job."""
+    """IVF-Flat search: scan only the ``nprobe`` cells whose centroids are
+    nearest the query, exact cosine within them. With k=16 cells and
+    nprobe=4 the candidate scan is ~1/4 of the corpus. The 1-row query
+    frame carries its own probe-cell list (:func:`nearest_cells` over the
+    same centroid literal the corpus argmin uses, built once), broadcasts,
+    and the ``array_contains`` join prunes the corpus to the probed cells;
+    construction launches no job. The search assigns cells per query; a
+    corpus stored with its cell id as a parquet partition column lets the
+    probe prune at the file level instead
+    (``tests/test_similarity.py::test_ivf_cells_prune_as_partition_columns``
+    demonstrates it)."""
     v = F.col(vec_col).cast("array<double>")
+    mat = _matrix_lit(centroids)
     qf = query_frame.withColumn(
-        "__probe", nearest_cells(F.col("__qv"), centroids, nprobe)
+        "__probe", nearest_cells(F.col("__qv"), mat, nprobe)
     )
-    return (
-        df.withColumn("__cell", _argmin_centroid(v, centroids))
-        .join(
-            F.broadcast(qf),
-            F.array_contains(F.col("__probe"), F.col("__cell")),
-        )
-        .select(
-            F.col(id_col),
-            F.round(cosine_vs_query_frame(v), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-        .limit(k)
+    joined = df.withColumn("__cell", _argmin_centroid(v, mat)).join(
+        F.broadcast(qf), F.array_contains(F.col("__probe"), F.col("__cell"))
     )
+    return _topk_cosine(joined, v, id_col, k)
+
+
+def ivf_topk_cosine(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    query_vec: list[float],
+    centroids: list[list[float]],
+    k: int = 10,
+    nprobe: int = 4,
+) -> DataFrame:
+    """:func:`ivf_topk_cosine_q` against one literal query vector."""
+    qf = _literal_query_frame(df.sparkSession, query_vec)
+    return ivf_topk_cosine_q(df, vec_col, id_col, qf, centroids, k, nprobe)
 
 
 def near_dup_pairs_cosine(
@@ -526,6 +515,50 @@ def semantic_dedup_removed(
     )
 
 
+def _semdedup_block_kernel(
+    pdf: pd.DataFrame, threshold: float, block: int
+) -> pd.DataFrame:
+    """SemDeDup pairs within one ``(vec_id, cell, __v)`` pandas group: per
+    vector, how many lower-id members reach ``threshold``, the lowest
+    such id and the best cosine, computed ``block`` rows at a time (see
+    :func:`semantic_dedup_removed_arrow`)."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+    ids = pdf["vec_id"].to_numpy()
+    V = np.stack(pdf["__v"].to_numpy())
+    norms = np.sqrt((V * V).sum(axis=1))
+    n = len(ids)
+    cell = int(pdf["cell"].iloc[0]) if n else 0
+    cnt = np.zeros(n, dtype=np.int64)
+    keeper = np.full(n, n, dtype=np.int64)  # min dominating ROW index
+    maxcos = np.full(n, -np.inf)
+    for lo in range(0, n, block):
+        hi = min(lo + block, n)
+        S = V[lo:hi] @ V.T  # (hi-lo) x n
+        S = S / (norms[lo:hi, None] * norms[None, :])
+        S = np.round(S, 6)
+        # dominators of column j are rows i < j (ids ascending)
+        rows_idx = np.arange(lo, hi)[:, None]
+        mask = (S >= threshold) & (rows_idx < np.arange(n)[None, :])
+        any_col = mask.any(axis=0)
+        cnt += mask.sum(axis=0)
+        first = np.where(any_col, lo + mask.argmax(axis=0), n)
+        keeper = np.minimum(keeper, first)
+        maxcos = np.maximum(maxcos, np.where(mask, S, -np.inf).max(axis=0))
+    hit = cnt > 0
+    return pd.DataFrame(
+        {
+            "vec_id": ids[hit],
+            "cell": cell,
+            "n_dominators": cnt[hit],
+            "keeper_id": ids[np.minimum(keeper[hit], n - 1)],
+            "max_cosine": maxcos[hit],
+        }
+    )
+
+
 def semantic_dedup_removed_arrow(
     df: DataFrame,
     vec_col: str,
@@ -559,42 +592,7 @@ def semantic_dedup_removed_arrow(
     )
 
     def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        ids = pdf["vec_id"].to_numpy()
-        V = np.stack(pdf["__v"].to_numpy())
-        norms = np.sqrt((V * V).sum(axis=1))
-        n = len(ids)
-        cell = int(pdf["cell"].iloc[0]) if n else 0
-        cnt = np.zeros(n, dtype=np.int64)
-        keeper = np.full(n, n, dtype=np.int64)  # min dominating ROW index
-        maxcos = np.full(n, -np.inf)
-        for lo in range(0, n, block):
-            hi = min(lo + block, n)
-            S = V[lo:hi] @ V.T  # (hi-lo) x n
-            S = S / (norms[lo:hi, None] * norms[None, :])
-            S = np.round(S, 6)
-            # dominators of column j are rows i < j (ids ascending)
-            rows_idx = np.arange(lo, hi)[:, None]
-            mask = (S >= threshold) & (rows_idx < np.arange(n)[None, :])
-            any_col = mask.any(axis=0)
-            cnt += mask.sum(axis=0)
-            first = np.where(any_col, lo + mask.argmax(axis=0), n)
-            keeper = np.minimum(keeper, first)
-            maxcos = np.maximum(
-                maxcos, np.where(mask, S, -np.inf).max(axis=0)
-            )
-        hit = cnt > 0
-        return pd.DataFrame(
-            {
-                "vec_id": ids[hit],
-                "cell": cell,
-                "n_dominators": cnt[hit],
-                "keeper_id": ids[np.minimum(keeper[hit], n - 1)],
-                "max_cosine": maxcos[hit],
-            }
-        )
+        return _semdedup_block_kernel(pdf, threshold, block)
 
     return assigned.groupBy("cell").applyInPandas(
         _pairs,
@@ -670,39 +668,7 @@ def semantic_dedup_removed_capped(
     )
 
     def _within(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        ids = pdf["vec_id"].to_numpy()
-        V = np.stack(pdf["__v"].to_numpy())
-        norms = np.sqrt((V * V).sum(axis=1))
-        n = len(ids)
-        cell = int(pdf["cell"].iloc[0]) if n else 0
-        cnt = np.zeros(n, dtype=np.int64)
-        keeper = np.full(n, n, dtype=np.int64)
-        maxcos = np.full(n, -np.inf)
-        for lo in range(0, n, block):
-            hi = min(lo + block, n)
-            S = V[lo:hi] @ V.T
-            S = S / (norms[lo:hi, None] * norms[None, :])
-            S = np.round(S, 6)
-            rows_idx = np.arange(lo, hi)[:, None]
-            mask = (S >= threshold) & (rows_idx < np.arange(n)[None, :])
-            any_col = mask.any(axis=0)
-            cnt += mask.sum(axis=0)
-            first = np.where(any_col, lo + mask.argmax(axis=0), n)
-            keeper = np.minimum(keeper, first)
-            maxcos = np.maximum(maxcos, np.where(mask, S, -np.inf).max(axis=0))
-        hit = cnt > 0
-        return pd.DataFrame(
-            {
-                "vec_id": ids[hit],
-                "cell": cell,
-                "n_dominators": cnt[hit],
-                "keeper_id": ids[np.minimum(keeper[hit], n - 1)],
-                "max_cosine": maxcos[hit],
-            }
-        )
+        return _semdedup_block_kernel(pdf, threshold, block)
 
     within = ranked.groupBy("cell", "chunk").applyInPandas(_within, out_schema)
 
@@ -792,20 +758,6 @@ def semantic_dedup_removed_capped(
             F.min("keeper_id").alias("keeper_id"),
             F.round(F.max("max_cosine"), 6).alias("max_cosine"),
         )
-    )
-
-
-def _sq_l2(a: F.Column, centroid: list[float]) -> F.Column:
-    """Squared L2 between an array column and a literal centroid, as one
-    fused fold — the same expression kernel _argmin_centroid builds on."""
-    return F.aggregate(
-        F.zip_with(
-            a,
-            F.array(*[F.lit(float(x)) for x in centroid]),
-            lambda p, q: (p - q) * (p - q),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
 
 
@@ -995,7 +947,7 @@ def topk_cosine_lsh_multiprobe_q(
     a broadcast EQUALITY join on the bucket key — same plan shape and
     partition-pruning story as single-probe, just a k+1-row broadcast.
     """
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _matrix_lit(_hyperplanes(dim, n_planes, seed))
     v = F.col(vec_col).cast("array<double>")
     qb = lsh_bucket(F.col("__qv"), planes)
     probes = F.array(
@@ -1007,16 +959,16 @@ def topk_cosine_lsh_multiprobe_q(
         .withColumn("__probe", F.explode(probes))
         .drop("__qb0")
     )
-    return (
-        df.withColumn("__bucket", lsh_bucket(v, planes))
-        .join(F.broadcast(qf), F.col("__bucket") == F.col("__probe"))
-        .select(
-            F.col(id_col),
-            F.round(cosine_vs_query_frame(v), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-        .limit(k)
+    joined = df.withColumn("__bucket", lsh_bucket(v, planes)).join(
+        F.broadcast(qf), F.col("__bucket") == F.col("__probe")
     )
+    return _topk_cosine(joined, v, id_col, k)
+
+
+# MMR's lam = 0.7 as integer (relevance, redundancy) weights: the score
+# 7*rel - 3*red keeps every comparison exact on the quantized lattice.
+# Another lam needs its own integer pair and a matching oracle.
+_MMR_LATTICE_WEIGHTS = (7, 3)
 
 
 def mmr_rerank_q(
@@ -1026,8 +978,6 @@ def mmr_rerank_q(
     query_frame: DataFrame,
     k: int = 5,
     pool: int = 20,
-    lam: float = 0.7,
-    dim: int = 64,
 ) -> DataFrame:
     """Maximal Marginal Relevance rerank (Carbonell & Goldstein 1998):
     from the top-``pool`` candidates by query relevance, greedily pick
@@ -1041,8 +991,9 @@ def mmr_rerank_q(
     bit-identical in any engine (integer sums are order-independent,
     unlike float cosine) — and the MMR score is 7*rel - 3*red on that
     lattice (lam = 0.7 with both weights scaled by 10 to stay
-    integral). Inner-product similarity is the production RAG shape:
-    encoder embeddings arrive unit-normalized, where dot == cosine.
+    integral, ``_MMR_LATTICE_WEIGHTS``). Inner-product similarity is
+    the production RAG shape: encoder embeddings arrive
+    unit-normalized, where dot == cosine.
     Every argmax (pool cut, each greedy step) therefore has a total
     deterministic order (score desc, id asc) and the whole operator is
     hash-checkable against an unrolled SQL CTE chain.
@@ -1052,15 +1003,8 @@ def mmr_rerank_q(
     matrix — k·pool dot products on ~pool rows, driver-side model-state
     math exactly like the IVF centroid updates (collect() of a bounded
     frame, justified per PLANS.md's collect inventory).
-
-    ``lam`` is retained for API compatibility but the scored lattice
-    weights are fixed at (7, 3): changing lam requires re-deriving the
-    integer pair, so a non-0.7 value raises.
     """
-    if abs(lam - 0.7) > 1e-12:
-        raise ValueError(
-            "exact-integer MMR pins lam=0.7 (weights 7/3 on the lattice)"
-        )
+    w_rel, w_red = _MMR_LATTICE_WEIGHTS
     from cirro_annotation_spark.operators.clustering import quantize_expr
 
     qd = df.select(
@@ -1096,7 +1040,7 @@ def mmr_rerank_q(
         best_i, best_score = None, None
         for i in remaining:
             redundancy = max((sims[i][j] for j in selected), default=0)
-            score = 7 * rel[i] - 3 * redundancy
+            score = w_rel * rel[i] - w_red * redundancy
             if (
                 best_score is None
                 or score > best_score

@@ -525,7 +525,8 @@ def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     .semantic_dedup_removed_capped, cap=1024 — id-rank chunking with
     chunk-0 chaining bounds within-cell pairing at O(cell·cap), the
     VERDICT-r7 fix for the hot-cell quadratic: 49.3 s → tier-trend at
-    the 100× clone tier, scripts/scale_semdedup_skew.py). The oracle
+    the 100× clone tier, scripts/scale_semdedup_skew.py in git history
+    up to e921ddb). The oracle
     states the capped semantics; at driver sf tiers no cell reaches the
     cap, where capped == exact (parity pinned in
     tests/test_similarity.py against both exact twins). Reference

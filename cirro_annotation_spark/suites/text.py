@@ -3239,7 +3239,8 @@ _FUNNEL_ORACLE_ARMS = """
     # Bands chosen so stages 1, 3, 4 all BITE on every sf fixture
     # (vacuous-parity is the kcore lesson); stage 2 is vacuous on the
     # duplicate-free sf fixtures by construction and bites hard on the
-    # N-clone tier (scale_documents_tier) plus a crafted pytest.
+    # N-clone tier (scripts/scale_documents_tier.py in git history up
+    # to e921ddb) plus a crafted pytest.
     # Every stage predicate is exact integer arithmetic or an identical
     # IEEE compare, so the whole funnel carries one value-hash oracle.
     #

@@ -12,8 +12,7 @@ from cirro_annotation_spark.operators.dedup import (
     dedup_near_minhash,
     jaccard_verify,
     minhash_candidates,
-    minhash_signature,
-    shingles,
+    minhash_signatures,
     simhash64,
     simhash_near_pairs,
 )
@@ -34,13 +33,19 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _signatures(df, num_hashes):
+    """doc_id -> MinHash signature, from the stage the banding runs on."""
+    return {
+        r["__id"]: [r[f"__s{i}"] for i in range(num_hashes)]
+        for r in minhash_signatures(df, "text", "doc_id", num_hashes).collect()
+    }
+
+
 def test_minhash_signature_not_degenerate(spark):
     """A 32-hash signature must use 32 DISTINCT hash functions: on a
     many-shingle doc the slots should be (nearly) all distinct."""
     df = _docs(spark)
-    sig = df.filter("doc_id = 0").select(
-        minhash_signature(shingles("text"), 32).alias("sig")
-    ).first()["sig"]
+    sig = _signatures(df.filter("doc_id = 0"), 32)[0]
     assert len(sig) == 32
     assert len(set(sig)) > 16, f"degenerate signature: {len(set(sig))} distinct"
 
@@ -48,12 +53,7 @@ def test_minhash_signature_not_degenerate(spark):
 def test_minhash_signature_similarity_ordering(spark):
     """Near-identical docs agree on most signature slots; unrelated docs
     agree on (almost) none."""
-    sigs = {
-        r["doc_id"]: r["sig"]
-        for r in _docs(spark)
-        .select("doc_id", minhash_signature(shingles("text"), 64).alias("sig"))
-        .collect()
-    }
+    sigs = _signatures(_docs(spark), 64)
     agree_near = sum(a == b for a, b in zip(sigs[0], sigs[1]))
     agree_far = sum(a == b for a, b in zip(sigs[0], sigs[2]))
     assert agree_near > 32, f"near-dup agreement too low: {agree_near}/64"

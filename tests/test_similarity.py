@@ -2,6 +2,9 @@
 against the brute-force baseline."""
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from cirro_annotation_spark.operators import similarity as S
@@ -41,6 +44,63 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     recall = len(exact & approx) / 10
     assert 0 in approx  # self-match lives in a probed cell by construction
     assert recall >= 0.5, f"IVF recall {recall} < 0.5"
+
+
+SF001 = "/root/testdata/sf0.01"
+
+
+@pytest.mark.parametrize("method", ["bruteforce", "lsh", "ivf"])
+def test_literal_search_matches_query_frame_form(spark, method):
+    """A literal-vector search is its ``_q`` form over a literal query
+    frame: on the same query vector both forms return the same rows."""
+    if not os.path.exists(os.path.join(SF001, "embeddings.parquet")):
+        pytest.skip("sf0.01 fixture not present")
+    from cirro_annotation_spark.suites._ivf_centroids import CENTROIDS
+
+    emb = t(spark, SF001, "embeddings")
+    q = _query_vec(spark, SF001)
+    qf = S.query_vector_frame(emb, "embedding", "vec_id", 0)
+    args = (emb, "embedding", "vec_id")
+    literal, framed = {
+        "bruteforce": lambda: (
+            S.topk_cosine_bruteforce(*args, q),
+            S.topk_cosine_bruteforce_q(*args, qf),
+        ),
+        "lsh": lambda: (
+            S.topk_cosine_lsh(*args, q, n_planes=6),
+            S.topk_cosine_lsh_q(*args, qf, n_planes=6, dim=len(q)),
+        ),
+        "ivf": lambda: (
+            S.ivf_topk_cosine(*args, q, CENTROIDS, nprobe=3),
+            S.ivf_topk_cosine_q(*args, qf, CENTROIDS, nprobe=3),
+        ),
+    }[method]()
+    got = [(r["vec_id"], r["cosine_sim"]) for r in literal.collect()]
+    assert got and got[0][0] == 0
+    assert got == [(r["vec_id"], r["cosine_sim"]) for r in framed.collect()]
+
+
+def test_literal_search_construction_launches_no_job(spark):
+    """The literal query frame is an inline 1-row table: building any
+    literal-vector search starts no Spark job."""
+    rows = [(i, [float(i), 1.0, -0.5 * i]) for i in range(8)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q, cents = [1.0, 0.5, 0.0], [[0.0, 1.0, 0.0], [4.0, 1.0, -2.0]]
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None))
+    S.topk_cosine_bruteforce(df, "embedding", "vec_id", q)
+    S.topk_cosine_lsh(df, "embedding", "vec_id", q, n_planes=4)
+    S.ivf_topk_cosine(df, "embedding", "vec_id", q, cents, nprobe=1)
+    assert len(tracker.getJobIdsForGroup(None)) == before
+
+
+def test_kmeans_fewer_vectors_than_k_is_a_value_error(spark):
+    """k-means seeds from the first k vectors, so a corpus smaller than
+    k cannot be fitted; the error names both counts."""
+    rows = [(i, [float(i), 1.0]) for i in range(3)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match=r"k=4.*has 3"):
+        S.train_centroids_kmeans(df, "embedding", "vec_id", k=4, iterations=1)
 
 
 def test_kmeans_assignment_partitions_corpus(spark, sf_dir):
@@ -571,9 +631,8 @@ def test_zero_norm_cosine_is_null_not_nan(spark):
         S.cosine(
             F.array(F.lit(0.0), F.lit(0.0)), F.array(F.lit(1.0), F.lit(2.0))
         ).alias("c"),
-        S.cosine_to_query(F.array(F.lit(0.0), F.lit(0.0)), [1.0, 2.0]).alias("cq"),
     ).first()
-    assert row["c"] is None and row["cq"] is None
+    assert row["c"] is None
 
 
 def test_nan_vector_excluded_like_zero_vector(spark):
