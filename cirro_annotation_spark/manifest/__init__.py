@@ -45,7 +45,6 @@ def annotate(
     index_cols=None,
     process: str = "*",
     optimize: bool = True,
-    coalesce_small: int | None = None,
 ):
     """One-call equivalent of the reference's full ``annotate`` flow
     (run_annotate.py:257-326) with the prompts replaced by arguments:
@@ -64,7 +63,5 @@ def annotate(
     )
     if optimize:
         m = optimize_manifest(m)
-    results = execute_manifest(
-        spark, m, data_directory, output_directory, coalesce_small=coalesce_small
-    )
+    results = execute_manifest(spark, m, data_directory, output_directory)
     return m, results

@@ -1,10 +1,11 @@
 """Execute a manifest: compile every command, sink each to Parquet.
 
 The only sink the reference declares is ``hot.Parquet``
-(run_annotate.py:188, 227). Writes are mode=overwrite for idempotent
-re-runs; each command's pipeline is shuffle-free, so output parallelism
-equals scan parallelism (repartition knob provided for small-files
-control at the sink — the classic 100 TB hygiene issue).
+(run_annotate.py:188, 227). Each target is published through
+``publish.py`` (staged write, rename pair), so a failed or killed run
+leaves it as its previous version or the complete new one; the whole
+manifest is checked before the first write. Each command's pipeline is
+shuffle-free, so output parallelism equals scan parallelism.
 """
 
 from __future__ import annotations
@@ -15,6 +16,36 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cirro_annotation_spark.manifest.compiler import compile_command
 from cirro_annotation_spark.manifest.model import Manifest
+from cirro_annotation_spark.publish import publish
+
+
+def _targets(manifest: Manifest, output_directory: str) -> list[str]:
+    """Every command's output path, after checking the whole manifest."""
+    # An object-store rename is a copy: refuse rather than publish
+    # without the atomic swap.
+    if "://" in output_directory:
+        raise ValueError(
+            f"manifest output must be a local directory: {output_directory!r}"
+        )
+    targets: list[str] = []
+    seen: set[str] = set()
+    for cmd in manifest.commands:
+        if cmd.command != "hot.Parquet":
+            raise ValueError(f"unknown manifest command: {cmd.command}")
+        # cmd.target is manifest input: confine it to output_directory
+        # (an absolute or '..'-laden target would replace arbitrary
+        # writable paths — code-review r15, same contract as
+        # sources/remote.py's catalog-path validation).
+        if os.path.isabs(cmd.target) or ".." in cmd.target.split("/"):
+            raise ValueError(
+                f"manifest target escapes the output directory: {cmd.target!r}"
+            )
+        target = os.path.join(output_directory, cmd.target)
+        if os.path.normpath(target) in seen:
+            raise ValueError(f"two manifest commands share target {cmd.target!r}")
+        seen.add(os.path.normpath(target))
+        targets.append(target)
+    return targets
 
 
 def execute_manifest(
@@ -22,24 +53,11 @@ def execute_manifest(
     manifest: Manifest,
     data_directory: str,
     output_directory: str,
-    coalesce_small: int | None = None,
 ) -> dict[str, DataFrame]:
     """Run every command; returns {target_path: result_df} for inspection."""
     results: dict[str, DataFrame] = {}
-    for cmd in manifest.commands:
-        if cmd.command != "hot.Parquet":
-            raise ValueError(f"unknown manifest command: {cmd.command}")
+    for cmd, target in zip(manifest.commands, _targets(manifest, output_directory)):
         df = compile_command(spark, cmd, data_directory)
-        # cmd.target is manifest input: confine it to output_directory
-        # (an absolute or '..'-laden target would overwrite arbitrary
-        # writable paths under mode=overwrite — code-review r15, same
-        # contract as sources/remote.py's catalog-path validation).
-        if os.path.isabs(cmd.target) or ".." in cmd.target.split("/"):
-            raise ValueError(
-                f"manifest target escapes the output directory: {cmd.target!r}"
-            )
-        target = os.path.join(output_directory, cmd.target)
-        writer = df.coalesce(coalesce_small) if coalesce_small else df
-        writer.write.mode("overwrite").parquet(target)
+        publish(target, df.write.parquet)
         results[target] = spark.read.parquet(target)
     return results

@@ -17,10 +17,10 @@ that prune reads (operators/layout.py) prune WRITES here. Untouched
 files are hard-linked into the new table version, so the rewrite cost
 is proportional to the update's locality, not the table size.
 
-Crash safety reuses the CDC rename-pair discipline
-(streaming/cdc.py:_recover): stage the full next version (links +
-rewritten files + _SUCCESS), rename base aside, rename staging in,
-drop the old — a crash at any point leaves a complete base on disk.
+Crash safety is the shared publish helper (``publish.py``): stage the
+full next version (links + rewritten files + _SUCCESS), rename base
+aside, rename staging in, drop the old (or keep it as a snapshot) — a
+crash at any point leaves a complete base on disk.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cirro_annotation_spark.streaming.cdc import _recover
+from cirro_annotation_spark.publish import publish, recover
 
 
 def file_key_bounds(base_dir: str, key: str) -> list[tuple[str, int, int]]:
@@ -98,7 +98,7 @@ def merge_into_parquet(
     Returns {"files_total": n, "files_rewritten": m} for observability
     (m is the pruning evidence the tests pin).
     """
-    _recover(base_dir)
+    recover(base_dir)
     bounds = file_key_bounds(base_dir, key)
     bdf = spark.createDataFrame(
         [(f, lo, hi) for f, lo, hi in bounds], "file string, lo long, hi long"
@@ -120,9 +120,12 @@ def merge_into_parquet(
     )
     untouched = [f for f, _, _ in bounds if f not in affected]
 
-    staging = f"{base_dir}.staging-{int(time.time() * 1000)}"
-    os.makedirs(staging)
-    try:
+    # the millis stamp names this merge's rewritten files and orders the
+    # retained snapshots (list_table_versions)
+    millis = int(time.time() * 1000)
+
+    def write(staging: str) -> None:
+        os.makedirs(staging)
         # Rewrite = affected base rows that DON'T match a source key,
         # plus (upsert mode) every source row (updates + inserts) — a
         # source-wins full outer merge restricted to the affected files.
@@ -152,36 +155,27 @@ def merge_into_parquet(
                 else keep.unionByName(source, allowMissingColumns=True)
             )
         if new_data is not None:
-            tmp = staging + ".write"
-            new_data.write.mode("overwrite").parquet(tmp)
+            # Spark writes into a hidden subdirectory of the staging dir:
+            # a sibling would match the ``<base>.staging-`` prefix, and
+            # recovery could promote it (it carries Spark's _SUCCESS).
+            tmp = os.path.join(staging, "_write")
+            new_data.write.parquet(tmp)
             # per-merge unique prefix: rewritten files from a PREVIOUS
             # merge survive as untouched files in later merges, so plain
             # ordinal names would collide with them in the staging dir
-            stamp = os.path.basename(staging).rsplit("-", 1)[-1]
             n_out = 0
             for name in sorted(os.listdir(tmp)):
                 if name.endswith(".parquet"):
                     os.rename(
                         os.path.join(tmp, name),
-                        os.path.join(staging, f"merged-{stamp}-{n_out:05d}.parquet"),
+                        os.path.join(staging, f"merged-{millis}-{n_out:05d}.parquet"),
                     )
                     n_out += 1
             shutil.rmtree(tmp)
         for path in untouched:
             os.link(path, os.path.join(staging, os.path.basename(path)))
-        open(os.path.join(staging, "_SUCCESS"), "w").close()
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
 
-    old = base_dir + ".old"
-    os.rename(base_dir, old)
-    os.rename(staging, base_dir)
-    if keep_old:
-        # the millis stamp from the staging name orders the snapshots
-        os.rename(old, f"{base_dir}.v{os.path.basename(staging).rsplit('-', 1)[-1]}")
-    else:
-        shutil.rmtree(old)
+    publish(base_dir, write, keep_as=f"{base_dir}.v{millis}" if keep_old else None)
     return {"files_total": len(bounds), "files_rewritten": len(affected)}
 
 

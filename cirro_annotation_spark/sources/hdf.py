@@ -3,13 +3,14 @@
 
 h5py/pytables are not in this container, so the HDF *decode* step is
 gated behind an import-try; the Spark-side conversion pipeline — chunked
-driver-side iteration → per-chunk Arrow DataFrames → unionByName →
-partitioned parquet write — is real and tested via the fake in-memory
-chunk iterator.
+driver-side iteration → per-chunk Arrow DataFrames → partitioned parquet
+writes into a staging directory → one publish of the whole dataset
+(``publish.py``) — is real and tested via the fake in-memory chunk
+iterator.
 
 Scale design: HDF5 is a single-file, driver-readable format, so ingest
 parallelism comes from CHUNKING, not splitting: read the dataset in
-row-group-sized chunks, createDataFrame each (Arrow path), union — each
+row-group-sized chunks, createDataFrame each (Arrow path), append — each
 chunk becomes ≥1 partition, so the write fans out across the cluster
 even though the read is sequential. For many HDF files, parallelize at
 the file level instead (one task per file via spark.createDataFrame on
@@ -18,10 +19,13 @@ paths + mapInPandas doing the h5py read executor-side).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from cirro_annotation_spark.publish import publish
 
 try:  # pragma: no cover - exercised only where h5py exists
     import h5py  # type: ignore
@@ -57,27 +61,33 @@ def hdf_chunks_to_parquet(
 ) -> DataFrame:
     """Convert a chunk iterator to a single partitioned Parquet dataset.
 
-    Arrow-backed createDataFrame per chunk, written with per-chunk APPEND —
-    an incremental-union plan would grow O(chunks) and bottleneck the
-    driver; append keeps every chunk's plan a constant-size two-node write,
-    and parquet appends are just new files in the target directory. The
-    first chunk overwrites so reruns are idempotent.
+    Arrow-backed createDataFrame per chunk, each APPENDED to one staging
+    directory — an incremental-union plan would grow O(chunks) and
+    bottleneck the driver; append keeps every chunk's plan a
+    constant-size two-node write. The staging directory replaces
+    ``target`` only after every chunk is written and the chunks' schemas
+    merge, so a failing iterator or chunk leaves the previous version.
     """
-    wrote_any = False
-    for pdf in chunks:
-        part = spark.createDataFrame(pdf)
-        writer = part.write.mode("append" if wrote_any else "overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target)
-        wrote_any = True
-    if not wrote_any:
-        raise ValueError("empty chunk iterator")
-    # mergeSchema: under chunk schema drift the default read samples one
-    # footer and can silently omit drifted columns; merging restores the
-    # union-of-columns guarantee (column TYPES must stay consistent
-    # across chunks — parquet cannot reconcile e.g. long vs string).
-    return spark.read.option("mergeSchema", "true").parquet(target)
+    schema = None
+
+    def write(staging: str) -> None:
+        nonlocal schema
+        for pdf in chunks:
+            writer = spark.createDataFrame(pdf).write.mode("append")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(staging)
+        if not os.path.exists(staging):
+            raise ValueError("empty chunk iterator")
+        # mergeSchema: under chunk schema drift the default read samples
+        # one footer and can silently omit drifted columns; merging
+        # restores the union-of-columns guarantee. Column TYPES must stay
+        # consistent across chunks (parquet cannot reconcile e.g. double
+        # vs string): a chunk that breaks that fails here, before the swap.
+        schema = spark.read.option("mergeSchema", "true").parquet(staging).schema
+
+    publish(target, write)
+    return spark.read.schema(schema).parquet(target)
 
 
 def hdf_to_parquet(

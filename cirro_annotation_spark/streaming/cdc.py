@@ -40,16 +40,19 @@ The window shuffle is keyed on the primary key and carries only the
 changed partitions' rows in the Delta version; the parquet fallback
 rewrites the base, which is the honest cost of an ACID-less format —
 documented here so nobody mistakes the fallback for the scale path.
+
+Each rewrite is published through ``publish.py`` (stage, ``_SUCCESS``,
+rename pair, recovery), the helper every Parquet sink shares.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from cirro_annotation_spark.publish import publish, recover
 
 # op: 'u' = upsert (insert or update), 'd' = delete tombstone.
 CHANGELOG_SCHEMA = "key long, ts timestamp, seq long, op string, payload string"
@@ -58,88 +61,12 @@ CHANGELOG_SCHEMA = "key long, ts timestamp, seq long, op string, payload string"
 BASE_SCHEMA = CHANGELOG_SCHEMA
 
 
-def _recover(base_path: str) -> None:
-    """Roll forward/back a swap interrupted between the two renames.
-
-    The swap sequence is: rename(base → base.old), rename(staging →
-    base), rmtree(base.old). A crash between the renames leaves
-    base.old but no base; the staged result (a complete, fsynced
-    parquet dir) may or may not exist. Recovery: prefer a complete
-    staging dir (roll forward), else restore base.old (roll back).
-    Either way the reader sees a complete base, never a half state.
-    """
-    old = base_path + ".old"
-    if os.path.exists(base_path):
-        if os.path.exists(old):  # crash after swap, before cleanup
-            shutil.rmtree(old)
-        return
-    if not os.path.exists(old):
-        return
-    parent = os.path.dirname(base_path) or "."
-    prefix = os.path.basename(base_path) + ".staging-"
-    # Temporal order, two ways: staging names carry a nanos timestamp
-    # (like operators/merge.py's millis names), and the sort key is
-    # st_mtime, not the name — a lexical sort over random suffixes
-    # would promote a STALE leftover snapshot with ~50% probability and
-    # then delete both the good base and the correct staged result
-    # (code-review r15).
-    staged = sorted(
-        (
-            os.path.join(parent, d)
-            for d in os.listdir(parent)
-            if d.startswith(prefix)
-            and os.path.exists(os.path.join(parent, d, "_SUCCESS"))
-        ),
-        key=os.path.getmtime,
-    )
-    if staged:  # roll forward to the newest complete staging dir
-        os.rename(staged[-1], base_path)
-        shutil.rmtree(old)
-        for leftover in staged[:-1]:
-            shutil.rmtree(leftover)
-    else:  # roll back
-        os.rename(old, base_path)
-
-
-def _swap_in(latest: DataFrame, base_path: str) -> None:
-    """Atomically-ish replace base_path with ``latest``.
-
-    Never leaves zero bases on disk: the old base is renamed aside
-    (not deleted) before the staged result takes its place, and
-    :func:`_recover` heals a crash between the two renames. An empty
-    ``latest`` is written through ``repartition(1)`` so one task runs
-    and parquet still gets a footer-bearing file — a bare _SUCCESS dir
-    would break later schema-less reads.
-    """
-    if latest.isEmpty():
-        latest = latest.repartition(1)
-    staging = f"{base_path}.staging-{time.time_ns()}"
-    latest.write.mode("overwrite").parquet(staging)
-    old = base_path + ".old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(base_path):
-        os.rename(base_path, old)
-    os.rename(staging, base_path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    # A staging dir from an earlier crashed swap (complete but never
-    # promoted) must not outlive a SUCCESSFUL swap: recovery prefers
-    # the newest staged result, which after this point is strictly
-    # older than the live base (code-review r15).
-    parent = os.path.dirname(base_path) or "."
-    prefix = os.path.basename(base_path) + ".staging-"
-    for d in os.listdir(parent):
-        if d.startswith(prefix):
-            shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
-
-
 def read_cdc_base(spark: SparkSession, base_path: str) -> DataFrame:
     """The live view of the base table: tombstones filtered, payload
     columns only. Always reads with the explicit BASE_SCHEMA so an
     empty base (every key deleted) is a 0-row frame, not an inference
     error."""
-    _recover(base_path)
+    recover(base_path)
     return (
         spark.read.schema(BASE_SCHEMA)
         .parquet(base_path)
@@ -156,10 +83,11 @@ def apply_cdc_batch(
     latest-wins per key on (ts, seq); the winning row is stored even
     when it is a tombstone (see module docstring). The new base is
     materialized (localCheckpoint) BEFORE the overwrite — Spark cannot
-    lazily read and overwrite the same path — then swapped in via a
-    staged write and a rename pair that keeps a complete base on disk
-    at every instant (the Delta/Iceberg commit does this with real
-    ACID; staging-swap + recovery is the file-level equivalent).
+    lazily read and overwrite the same path — then published with
+    :func:`~cirro_annotation_spark.publish.publish`, whose staged write
+    and rename pair keep a complete base on disk at every instant (the
+    Delta/Iceberg commit does this with real ACID; staging-swap +
+    recovery is the file-level equivalent).
 
     ``tombstone_horizon``: optional SQL interval string (e.g.
     ``'7 days'``). Tombstones older than ``max(ts) - horizon`` are
@@ -170,7 +98,7 @@ def apply_cdc_batch(
     spark = batch_df.sparkSession
     if batch_df.isEmpty():
         return
-    _recover(base_path)
+    recover(base_path)
     batch = batch_df.select("key", "ts", "seq", "op", "payload")
     if os.path.exists(base_path):
         # Base rows replay with their STORED (ts, seq, op) — the merge
@@ -196,7 +124,12 @@ def apply_cdc_batch(
     latest = latest.select("key", "ts", "seq", "op", "payload").localCheckpoint(
         eager=True
     )
-    _swap_in(latest, base_path)
+    # An empty ``latest`` is written through repartition(1) so one task
+    # runs and parquet still gets a footer-bearing file — a bare
+    # _SUCCESS dir would break later schema-less reads.
+    if latest.isEmpty():
+        latest = latest.repartition(1)
+    publish(base_path, latest.write.parquet)
 
 
 def run_cdc_stream(

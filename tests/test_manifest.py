@@ -123,7 +123,7 @@ def test_project_dictionary_metadata(spark, manifest, data_dir):
 
 def test_execute_manifest_writes_parquet(spark, manifest, data_dir, tmp_path):
     out = str(tmp_path / "out")
-    results = execute_manifest(spark, manifest, data_dir, out, coalesce_small=1)
+    results = execute_manifest(spark, manifest, data_dir, out)
     assert len(results) == 3
     for target, df in results.items():
         assert target.startswith(out)
@@ -394,23 +394,31 @@ def test_melt_value_cols_case_normalized(spark, tmp_path):
 
 
 def test_executor_rejects_escaping_targets(spark, tmp_path):
+    """The whole manifest is checked before the first write: a bad
+    command after a good one must not leave the good one written."""
     from cirro_annotation_spark.manifest.model import Manifest, TransformCommand
 
     (tmp_path / "a.txt").write_text("id\n1\n")
-    for bad in ("/abs/x.parquet", "../esc.parquet"):
-        man = Manifest(
-            commands=(
-                TransformCommand(
-                    source="$data_directory/a.txt",
-                    target=bad,
-                    cols=(),
-                ),
+    out = tmp_path / "out"
+
+    def man(*targets):
+        return Manifest(
+            commands=tuple(
+                TransformCommand(source="$data_directory/a.txt", target=t, cols=())
+                for t in targets
             )
         )
-        with pytest.raises(ValueError, match="escapes"):
-            execute_manifest(
-                spark, man, str(tmp_path), str(tmp_path / "out")
-            )
+
+    for targets, output, needle in (
+        (["/abs/x.parquet"], out, "escapes"),
+        (["../esc.parquet"], out, "escapes"),
+        (["b.parquet", "../esc.parquet"], out, "escapes"),
+        (["b.parquet", "./b.parquet"], out, "share"),
+        (["b.parquet"], "objstore://bucket/out", "local directory"),
+    ):
+        with pytest.raises(ValueError, match=needle):
+            execute_manifest(spark, man(*targets), str(tmp_path), str(output))
+        assert not out.exists()
 
 
 def test_load_manifest_validates_melt_and_kwargs_shapes():

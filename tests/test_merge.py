@@ -104,6 +104,22 @@ def test_merge_recovers_interrupted_swap(spark, tmp_path):
     assert got[0] == -1 and got[1] == -2 and len(got) == 100
 
 
+def test_merge_successful_swap_cleans_leaked_staging(spark, tmp_path):
+    """A staging dir leaked by an earlier crash must not survive a later
+    SUCCESSFUL merge — recovery would otherwise consider promoting it
+    forever (the CDC sink's rule, now shared through publish.py)."""
+    base = str(tmp_path / "base")
+    _build_base(spark, base, n=100, files=2)
+    leaked = base + ".staging-leftover"
+    os.makedirs(leaked)
+    merge_into_parquet(
+        spark, base, spark.createDataFrame([(0, -1)], "key long, val long"), "key"
+    )
+    assert not os.path.exists(leaked)
+    got = {r.key: r.val for r in spark.read.parquet(base).collect()}
+    assert got[0] == -1 and len(got) == 100
+
+
 def test_delete_mode_erases_keys_with_pruned_rewrite(spark, tmp_path):
     base = str(tmp_path / "base")
     _build_base(spark, base)

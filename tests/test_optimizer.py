@@ -106,7 +106,6 @@ def test_annotate_end_to_end(spark, tmp_path):
             ]
         },
         dictionary=FIELDS_DICTIONARY,
-        coalesce_small=1,
     )
     assert len(manifest.commands) == 3
     assert len(results) == 3
