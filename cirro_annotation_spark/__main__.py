@@ -43,7 +43,6 @@ def main(argv: list[str] | None = None) -> int:
     an.add_argument("--fields", help="fields.json (rich, flat, or mapping form)")
     an.add_argument("--process", default="*")
     an.add_argument("--manifest-out", help="also write the manifest JSON here")
-    an.add_argument("--no-optimize", action="store_true")
 
     op = sub.add_parser("optimize", help="optimize a manifest JSON in place")
     op.add_argument("--manifest", required=True)
@@ -119,7 +118,6 @@ def main(argv: list[str] | None = None) -> int:
         melt_groups=_parse_melt(args.melt),
         dictionary=dictionary,
         process=args.process,
-        optimize=not args.no_optimize,
     )
     if args.manifest_out:
         with open(args.manifest_out, "w") as f:

@@ -44,12 +44,11 @@ def annotate(
     dictionary=None,
     index_cols=None,
     process: str = "*",
-    optimize: bool = True,
 ):
     """One-call equivalent of the reference's full ``annotate`` flow
     (run_annotate.py:257-326) with the prompts replaced by arguments:
     walk → classify variable families → harvest → resolve dictionary →
-    build manifest → (optimize) → execute to Parquet.
+    build manifest → optimize → execute to Parquet.
 
     Returns (manifest, {target_path: DataFrame})."""
     m = build_manifest(
@@ -61,7 +60,6 @@ def annotate(
         index_cols=index_cols,
         process=process,
     )
-    if optimize:
-        m = optimize_manifest(m)
+    m = optimize_manifest(m)
     results = execute_manifest(spark, m, data_directory, output_directory)
     return m, results

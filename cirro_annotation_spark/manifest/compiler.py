@@ -17,7 +17,6 @@ expand → write), i.e. embarrassingly parallel at any scale.
 
 from __future__ import annotations
 
-import functools
 import glob as globmod
 import os
 import re
@@ -27,6 +26,7 @@ from pyspark.sql import functions as F
 
 from cirro_annotation_spark.manifest.model import TransformCommand
 from cirro_annotation_spark.operators.reshape import melt as melt_op
+from cirro_annotation_spark.operators.reshape import union_by_name
 from cirro_annotation_spark.sources.dsv import normalize_columns, read_dsv, sniff
 
 TOKEN_RE = re.compile(r"\[(\w+)\]")
@@ -209,12 +209,9 @@ def _read_members(
     for p in paths:
         sep, cols = sniff(p, header=cmd.read.header, sep=cmd.read.sep, spark=spark)
         groups.setdefault((sep, tuple(cols)), []).append(p)
-    frames = [
+    return union_by_name(
         read_dsv(spark, members, sep, list(cols), cmd.read.header)
         for (sep, cols), members in groups.items()
-    ]
-    return functools.reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
     )
 
 

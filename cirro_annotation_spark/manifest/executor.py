@@ -30,8 +30,6 @@ def _targets(manifest: Manifest, output_directory: str) -> list[str]:
     targets: list[str] = []
     seen: set[str] = set()
     for cmd in manifest.commands:
-        if cmd.command != "hot.Parquet":
-            raise ValueError(f"unknown manifest command: {cmd.command}")
         # cmd.target is manifest input: confine it to output_directory
         # (an absolute or '..'-laden target would replace arbitrary
         # writable paths — code-review r15, same contract as
@@ -54,10 +52,12 @@ def execute_manifest(
     data_directory: str,
     output_directory: str,
 ) -> dict[str, DataFrame]:
-    """Run every command; returns {target_path: result_df} for inspection."""
+    """Run every command; returns {target_path: result_df} for inspection.
+    Each result reads its target with the compiled frame's schema, so no
+    schema-inference job runs per target."""
     results: dict[str, DataFrame] = {}
     for cmd, target in zip(manifest.commands, _targets(manifest, output_directory)):
         df = compile_command(spark, cmd, data_directory)
         publish(target, df.write.parquet)
-        results[target] = spark.read.parquet(target)
+        results[target] = spark.read.schema(df.schema).parquet(target)
     return results

@@ -4,8 +4,8 @@ The reference emits ``{"commands": [...]}`` (run_annotate.py:314-319) but
 ships a JSON-Schema describing an older ``{files, columns}`` shape
 (manifest.schema.json — a real drift bug, SURVEY.md §5). We define ONE
 canonical dataclass model matching what run_annotate actually emits
-(run_annotate.py:187-197, 226-234), with a loader that also migrates the
-older shape.
+(run_annotate.py:187-197, 226-234), with a loader that checks every
+field as it parses it.
 """
 
 from __future__ import annotations
@@ -58,7 +58,6 @@ class TransformCommand:
     tokens: tuple[str, ...] = ()  # the reference's ``concat`` token list
     melt: MeltSpec | None = None
     read: ReadOptions = field(default_factory=ReadOptions)
-    command: str = "hot.Parquet"
 
 
 @dataclass(frozen=True)
@@ -69,7 +68,7 @@ class Manifest:
         def enc(o):
             if isinstance(o, TransformCommand):
                 d = {
-                    "command": o.command,
+                    "command": "hot.Parquet",
                     "params": {
                         "source": o.source,
                         "target": o.target,
@@ -113,81 +112,90 @@ class ManifestValidationError(ValueError):
     bug we fix rather than replicate, SURVEY.md §5)."""
 
 
-def _validate_command(d: dict, where: str) -> None:
-    if not isinstance(d, dict):
-        raise ManifestValidationError(f"{where}: command must be an object, got {type(d).__name__}")
+def _check(ok: bool, where: str, what: str) -> None:
+    if not ok:
+        raise ManifestValidationError(f"{where}: {what}")
+
+
+def _obj(d: dict, key: str, where: str) -> dict:
+    """``d[key]`` as an object; absent or null reads as ``{}``."""
+    v = d.get(key)
+    _check(v is None or isinstance(v, dict), f"{where}.{key}", "must be an object")
+    return v or {}
+
+
+def _str(d: dict, key: str, where: str, default: str | None = "") -> str | None:
+    """``d[key]`` as a string; absent or null reads as ``default``."""
+    v = d.get(key)
+    if v is None:
+        return default
+    _check(isinstance(v, str), f"{where}.{key}", "must be a string")
+    return v
+
+
+def _strs(d: dict, key: str, where: str) -> tuple[str, ...]:
+    v = d.get(key, [])
+    _check(isinstance(v, list), f"{where}.{key}", "must be a list of strings")
+    for i, item in enumerate(v):
+        _check(isinstance(item, str), f"{where}.{key}[{i}]", "must be a string")
+    return tuple(v)
+
+
+def _parse_command(d, where: str) -> TransformCommand:
+    """One command, every field checked as it is read, so a malformed
+    manifest fails at load time with the path of the bad field instead
+    of deep inside Spark."""
+    _check(isinstance(d, dict), where, f"command must be an object, got {type(d).__name__}")
+    command = d.get("command", "hot.Parquet")
+    _check(
+        command == "hot.Parquet", f"{where}.command",
+        f"unknown command {command!r} (only hot.Parquet is declared, run_annotate.py:188)",
+    )
     p = d.get("params", d)
-    if not isinstance(p, dict):
-        raise ManifestValidationError(f"{where}.params: must be an object")
+    where = f"{where}.params"
+    _check(isinstance(p, dict), where, "must be an object")
     for req in ("source", "target"):
-        if not isinstance(p.get(req), str) or not p.get(req):
-            raise ManifestValidationError(f"{where}.params.{req}: required non-empty string")
-    if not isinstance(p.get("cols", []), list):
-        raise ManifestValidationError(f"{where}.params.cols: must be a list")
-    for i, c in enumerate(p.get("cols", [])):
-        if not isinstance(c, dict) or "col" not in c:
-            raise ManifestValidationError(f"{where}.params.cols[{i}]: needs a 'col' key")
-    if not isinstance(p.get("concat", []), list):
-        raise ManifestValidationError(f"{where}.params.concat: must be a list of token names")
-    # Sub-shapes reached by _parse_command must be validated HERE — a
-    # malformed melt/kwargs otherwise surfaces as a bare AttributeError
-    # deep in parsing instead of the documented load-time error with a
-    # field path (code-review r15).
-    m = p.get("melt")
-    if m is not None and not isinstance(m, dict):
-        raise ManifestValidationError(f"{where}.params.melt: must be an object")
-    if isinstance(m, dict):
-        for k in ("key", "value"):
-            if k in m and not isinstance(m[k], dict):
-                raise ManifestValidationError(
-                    f"{where}.params.melt.{k}: must be an object with name/desc"
-                )
-        if "value_cols" in m and not isinstance(m["value_cols"], list):
-            raise ManifestValidationError(
-                f"{where}.params.melt.value_cols: must be a list"
-            )
-    kwv = p.get("kwargs")
-    if kwv is not None and not isinstance(kwv, dict):
-        raise ManifestValidationError(f"{where}.params.kwargs: must be an object")
-    if isinstance(kwv, dict) and "read" in kwv and not isinstance(kwv["read"], dict):
-        raise ManifestValidationError(f"{where}.params.kwargs.read: must be an object")
-    cmd_name = d.get("command", "hot.Parquet")
-    if cmd_name != "hot.Parquet":
-        raise ManifestValidationError(
-            f"{where}.command: unknown command {cmd_name!r} (only hot.Parquet is declared, run_annotate.py:188)"
-        )
+        _check(isinstance(p.get(req), str) and p[req] != "", f"{where}.{req}", "required non-empty string")
 
+    raw_cols = p.get("cols", [])
+    _check(isinstance(raw_cols, list), f"{where}.cols", "must be a list")
+    cols = []
+    for i, c in enumerate(raw_cols):
+        at = f"{where}.cols[{i}]"
+        _check(isinstance(c, dict) and "col" in c, at, "needs a 'col' key")
+        _check(isinstance(c["col"], str), f"{at}.col", "must be a string")
+        cols.append(ColumnSpec(c["col"], _str(c, "name", at), _str(c, "desc", at)))
 
-def _parse_command(d: dict) -> TransformCommand:
-    p = d.get("params", d)
     melt = None
-    if "melt" in p and p["melt"]:
-        m = p["melt"]
+    m = _obj(p, "melt", where)
+    if m:
+        at = f"{where}.melt"
+        key, value = _obj(m, "key", at), _obj(m, "value", at)
         melt = MeltSpec(
-            key_name=m.get("key", {}).get("name", "variable"),
-            value_name=m.get("value", {}).get("name", "value"),
-            value_cols=tuple(m.get("value_cols", ())),
-            key_desc=m.get("key", {}).get("desc", ""),
-            value_desc=m.get("value", {}).get("desc", ""),
+            key_name=_str(key, "name", f"{at}.key", "variable"),
+            value_name=_str(value, "name", f"{at}.value", "value"),
+            value_cols=_strs(m, "value_cols", at),
+            key_desc=_str(key, "desc", f"{at}.key"),
+            value_desc=_str(value, "desc", f"{at}.value"),
         )
-    kw = p.get("kwargs", {}).get("read", {})
+
+    kw = _obj(_obj(p, "kwargs", where), "read", f"{where}.kwargs")
+    at = f"{where}.kwargs.read"
+    header = kw.get("header", True)
+    _check(isinstance(header, bool), f"{at}.header", "must be true or false")
     return TransformCommand(
         source=p["source"],
         target=p["target"],
-        name=p.get("name", ""),
-        desc=p.get("desc", ""),
-        cols=tuple(
-            ColumnSpec(c["col"], c.get("name", ""), c.get("desc", ""))
-            for c in p.get("cols", [])
-        ),
-        tokens=tuple(p.get("concat", ())),
+        name=_str(p, "name", where),
+        desc=_str(p, "desc", where),
+        cols=tuple(cols),
+        tokens=_strs(p, "concat", where),
         melt=melt,
         read=ReadOptions(
-            sep=kw.get("sep"),
-            header=kw.get("header", True),
-            index_col=kw.get("index_col"),
+            sep=_str(kw, "sep", at, None),
+            header=header,
+            index_col=_str(kw, "index_col", at, None),
         ),
-        command=d.get("command", "hot.Parquet"),
     )
 
 
@@ -206,6 +214,6 @@ def load_manifest(obj: str | dict) -> Manifest:
             flat.extend(item)
         else:
             flat.append(item)
-    for i, c in enumerate(flat):
-        _validate_command(c, f"commands[{i}]")
-    return Manifest(commands=tuple(_parse_command(c) for c in flat))
+    return Manifest(
+        commands=tuple(_parse_command(c, f"commands[{i}]") for i, c in enumerate(flat))
+    )

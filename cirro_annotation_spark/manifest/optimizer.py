@@ -67,7 +67,6 @@ def merge_duplicate_sources(manifest: Manifest) -> Manifest:
             tokens=prev.tokens,
             melt=prev.melt,
             read=prev.read,
-            command=prev.command,
         )
         merged[key] = combined
         out[out.index(prev)] = combined
@@ -93,8 +92,7 @@ def prune_empty_commands(manifest: Manifest) -> Manifest:
     if dropped:
         warnings.warn(
             "prune_empty_commands dropped manifest targets with no "
-            f"resolved columns: {dropped} (write them explicitly with "
-            "cols or disable optimize)",
+            f"resolved columns: {dropped} (write them explicitly with cols)",
             stacklevel=2,
         )
     return Manifest(commands=tuple(kept))

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections import Counter
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import SparkSession
@@ -48,7 +49,8 @@ def group_variable_files(
         regex = re.compile(token_template_to_regex(template) + r"(?:\.gz)?$")
         matched = [f for f in remaining if regex.match(f)]
         groups[template] = sorted(matched)
-        remaining = [f for f in remaining if f not in set(matched)]
+        taken = set(matched)
+        remaining = [f for f in remaining if f not in taken]
     return groups, remaining
 
 
@@ -76,16 +78,18 @@ def build_manifest(
     variable_templates: Sequence[str] = (),
     melt_groups: Mapping[str, Sequence[str]] | None = None,
     dictionary=None,
-    melt_key_name: str = "sample",
-    melt_value_name: str = "reads",
     process: str = "*",
     index_cols: Mapping[str, str] | None = None,
 ) -> Manifest:
     """Walk ``data_directory``, classify files, harvest columns, emit the
-    manifest.
+    manifest: one command per variable family (template order), then one
+    per standard file (discovery order) — the reference's
+    generate_variable_file_manifest and generate_standard_file_manifest
+    (:177-253) as one loop.
 
     - variable_templates: ``[token]`` path templates relative to the root.
-    - melt_groups: {file_or_template: [value columns to fold]}.
+    - melt_groups: {file_or_template: [value columns to fold]}; the folded
+      key and value columns are named ``sample`` and ``reads``.
     - dictionary: any fields.json shape (rich alias/scoped, flat, mapping).
     - process: pipeline process id for scoped dictionary resolution.
     - index_cols: {file_or_template: row-identity column}
@@ -94,58 +98,27 @@ def build_manifest(
     melt_groups = dict(melt_groups or {})
     dictionary = load_fields_dictionary(dictionary or {})
     index_cols = dict(index_cols or {})
-    files = discover_files(data_directory)
-    var_groups, standard = group_variable_files(files, variable_templates)
+    families, standard = group_variable_files(
+        discover_files(data_directory), variable_templates
+    )
+    # (rel path or template, file whose header names the columns, is a family)
+    sources = [(t, members[0], True) for t, members in families.items() if members]
+    sources += [(rel, rel, False) for rel in standard]
+    heads = harvest_columns(spark, data_directory, [head for _, head, _ in sources])
+    targets = _target_names([rel for rel, _, _ in sources])
 
-    commands: list[TransformCommand] = []
-
-    # Variable families (generate_variable_file_manifest, :177-215).
-    for template, members in var_groups.items():
-        if not members:
-            continue
-        cols = harvest_columns(spark, data_directory, members[:1])[members[0]]
-        tokens = extract_tokens(template)
-        melt = _melt_for(template, cols, melt_groups, melt_key_name, melt_value_name)
-        target = _target_name(template)
-        commands.append(
-            TransformCommand(
-                source=f"$data_directory/{template}",
-                target=target,
-                name=target,
-                desc=f"variable family {template}",
-                cols=_resolve_cols(cols, dictionary, process=process, file=template),
-                tokens=tuple(tokens),
-                melt=melt,
-                read=ReadOptions(index_col=index_cols.get(template)),
-            )
-        )
-
-    # Standard files (generate_standard_file_manifest, :218-253).
-    # Basename targets collide when two directories carry a same-named
-    # file; the executor's overwrite would then silently destroy the
-    # first output (code-review r15). Colliding files switch to their
-    # full relative path (separators -> __), unique by construction.
-    by_target: dict[str, list[str]] = {}
-    for rel in standard:
-        by_target.setdefault(_target_name(rel), []).append(rel)
-    target_for = {
-        rel: (tgt if len(rels) == 1
-              else _target_name(rel.replace("/", "__").replace(os.sep, "__")))
-        for tgt, rels in by_target.items()
-        for rel in rels
-    }
-    for rel in standard:
-        cols = harvest_columns(spark, data_directory, [rel])[rel]
-        melt = _melt_for(rel, cols, melt_groups, melt_key_name, melt_value_name)
-        target = target_for[rel]
+    commands = []
+    for (rel, head, family), target in zip(sources, targets):
+        cols = heads[head]
         commands.append(
             TransformCommand(
                 source=f"$data_directory/{rel}",
                 target=target,
                 name=target,
-                desc=f"standard file {rel}",
+                desc=f"{'variable family' if family else 'standard file'} {rel}",
                 cols=_resolve_cols(cols, dictionary, process=process, file=rel),
-                melt=melt,
+                tokens=tuple(extract_tokens(rel)) if family else (),
+                melt=_melt_for(rel, cols, melt_groups),
                 read=ReadOptions(index_col=index_cols.get(rel)),
             )
         )
@@ -153,18 +126,28 @@ def build_manifest(
 
 
 def _melt_for(
-    key: str,
-    cols: Sequence[str],
-    melt_groups: Mapping[str, Sequence[str]],
-    key_name: str,
-    value_name: str,
+    key: str, cols: Sequence[str], melt_groups: Mapping[str, Sequence[str]]
 ) -> MeltSpec | None:
     if key not in melt_groups:
         return None
     value_cols = tuple(c for c in melt_groups[key] if c in set(cols))
     if not value_cols:
         return None
-    return MeltSpec(key_name=key_name, value_name=value_name, value_cols=value_cols)
+    return MeltSpec(key_name="sample", value_name="reads", value_cols=value_cols)
+
+
+def _target_names(rels: Sequence[str]) -> list[str]:
+    """One output name per source: its basename, unless another source
+    shares that name; then its relative path with token brackets dropped
+    (Spark reads ``[gene]`` in a path as a glob class) and separators as
+    ``__``, e.g. ``genes/[gene]/summary.tsv`` -> ``genes__gene__summary.parquet``."""
+    base = [_target_name(rel) for rel in rels]
+    shared = Counter(base)
+    return [
+        b if shared[b] == 1
+        else _target_name(re.sub(r"[\[\]]", "", rel).replace(os.sep, "/").replace("/", "__"))
+        for rel, b in zip(rels, base)
+    ]
 
 
 def _target_name(rel: str) -> str:

@@ -14,22 +14,15 @@ from __future__ import annotations
 
 import os
 
-DEFAULT_EXTENSIONS = (".txt", ".csv", ".tsv")
+EXTENSIONS = tuple(e + gz for e in (".txt", ".csv", ".tsv") for gz in ("", ".gz"))
 
 
-def discover_files(
-    root: str,
-    extensions: tuple[str, ...] = DEFAULT_EXTENSIONS,
-    include_gz: bool = True,
-) -> list[str]:
+def discover_files(root: str) -> list[str]:
     """Relative paths (like the reference) of delimited files under root."""
-    exts = set(extensions)
-    if include_gz:
-        exts |= {e + ".gz" for e in extensions}
     out: list[str] = []
     for dirpath, _dirnames, filenames in os.walk(root):
         for fn in filenames:
-            if any(fn.endswith(e) for e in exts):
+            if fn.endswith(EXTENSIONS):
                 full = os.path.join(dirpath, fn)
                 out.append(os.path.relpath(full, root))
     out.sort()

@@ -4,6 +4,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from cirro_annotation_spark.__main__ import main
 from cirro_annotation_spark.manifest.fixtures import FIELDS_DICTIONARY, build_fixture_tree
 
@@ -71,3 +73,29 @@ def test_annotate_manifest_out_then_execute_twice(spark, tmp_path, capsys):
         "summary.parquet": "4 rows",
     }
     assert sorted(os.listdir(out)) == sorted(counts)
+
+
+def test_annotate_prunes_empty_sources_with_a_warning(spark, tmp_path, capsys):
+    """annotate always prunes commands that resolve no columns: an empty
+    .txt and a blank-lines .tsv are dropped by name, and the rest of the
+    tree is written."""
+    data = build_fixture_tree(str(tmp_path))
+    open(os.path.join(data, "empty.txt"), "w").close()
+    with open(os.path.join(data, "mageck", "blank.tsv"), "w") as f:
+        f.write("\n\n\n")
+    out = str(tmp_path / "out")
+    with pytest.warns(UserWarning, match="dropped manifest targets") as warned:
+        rc = main(
+            [
+                "annotate",
+                "--data-dir", data,
+                "--output-dir", out,
+                "--variable-template", "mageck/[gene]/rra.sgrna_summary.txt",
+            ]
+        )
+    assert rc == 0
+    message = " ".join(str(w.message) for w in warned)
+    assert "empty.parquet" in message and "blank.parquet" in message
+    printed = {l.split(": ")[0].rsplit("/", 1)[-1] for l in _row_lines(capsys)}
+    assert printed == {"counts.parquet", "rra_sgrna_summary.parquet", "summary.parquet"}
+    assert sorted(os.listdir(out)) == sorted(printed)

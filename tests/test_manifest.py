@@ -6,6 +6,7 @@ concat_union_tokens → melt_unpivot → sink_parquet
 """
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -128,6 +129,41 @@ def test_execute_manifest_writes_parquet(spark, manifest, data_dir, tmp_path):
     for target, df in results.items():
         assert target.startswith(out)
         assert df.count() > 0
+
+
+def test_execute_manifest_returns_targets_without_inference_jobs(
+    spark, manifest, data_dir, tmp_path
+):
+    """Each returned frame has the schema a fresh read of its target
+    gives, and execute_manifest launches exactly the jobs of compiling
+    and writing its commands: reading a target back infers nothing."""
+    sc = spark.sparkContext
+
+    def jobs(group, run):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def compile_and_write():
+        for cmd in manifest.commands:
+            compile_command(spark, cmd, data_dir).write.parquet(
+                str(tmp_path / "direct" / cmd.target)
+            )
+
+    results = {}
+    direct = jobs("direct-writes", compile_and_write)
+    executed = jobs(
+        "execute-manifest",
+        lambda: results.update(
+            execute_manifest(spark, manifest, data_dir, str(tmp_path / "out"))
+        ),
+    )
+    assert executed == direct > 0
+    for target, df in results.items():
+        assert df.schema == spark.read.parquet(target).schema
 
 
 def test_manifest_json_roundtrip(manifest):
@@ -312,6 +348,38 @@ def test_planner_disambiguates_basename_collisions(spark, tmp_path):
     assert set(targets) == {"runA__summary.parquet", "runB__summary.parquet"}
 
 
+@pytest.mark.parametrize(
+    "files, templates, expected",
+    [
+        (
+            ["genes/G1/summary.tsv", "genes/G2/summary.tsv", "other/X1/summary.tsv"],
+            ["genes/[gene]/summary.tsv", "other/[x]/summary.tsv"],
+            {"genes__gene__summary.parquet": 2, "other__x__summary.parquet": 1},
+        ),
+        (
+            ["genes/G1/summary.tsv", "genes/G2/summary.tsv", "qc/summary.tsv"],
+            ["genes/[gene]/summary.tsv"],
+            {"genes__gene__summary.parquet": 2, "qc__summary.parquet": 1},
+        ),
+    ],
+    ids=["two_templates", "template_and_standard_file"],
+)
+def test_planner_names_colliding_sources_by_path(spark, tmp_path, files, templates, expected):
+    """Families and standard files share one naming rule: any source
+    whose basename another source shares takes its bracket-free path."""
+    from cirro_annotation_spark.manifest import annotate
+
+    root = tmp_path / "data"
+    for rel in files:
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_text("id\tval\nx\t1\n")
+    out = tmp_path / "out"
+    man, results = annotate(spark, str(root), str(out), variable_templates=templates)
+    assert sorted(c.target for c in man.commands) == sorted(expected)
+    assert sorted(os.listdir(out)) == sorted(expected)
+    assert {os.path.basename(t): df.count() for t, df in results.items()} == expected
+
+
 def test_prune_keeps_melt_only_commands_and_warns(tmp_path):
     """A no-cols command with a melt is real work (empty cols = keep
     all); only truly unresolved commands drop, and loudly
@@ -434,6 +502,15 @@ def test_load_manifest_validates_melt_and_kwargs_shapes():
         ({**base, "melt": {"value_cols": "c1"}}, "value_cols"),
         ({**base, "kwargs": "x"}, "kwargs"),
         ({**base, "kwargs": {"read": 5}}, "kwargs.read"),
+        ({**base, "cols": [{"col": 5}]}, re.escape("params.cols[0].col:")),
+        ({**base, "concat": [1]}, re.escape("params.concat[0]:")),
+        ({**base, "kwargs": {"read": {"sep": 1}}}, re.escape("params.kwargs.read.sep:")),
+        ({**base, "kwargs": {"read": {"header": "no"}}}, re.escape("params.kwargs.read.header:")),
+        ({**base, "melt": {"value_cols": [None]}}, re.escape("params.melt.value_cols[0]:")),
+        (
+            {**base, "melt": {"key": {"name": 1}, "value_cols": ["c1"]}},
+            re.escape("params.melt.key.name:"),
+        ),
     ):
         with pytest.raises(ManifestValidationError, match=needle):
             load_manifest(
