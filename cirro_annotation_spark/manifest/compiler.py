@@ -109,15 +109,10 @@ def compile_command(
         decoded = F.url_decode(
             F.regexp_replace(F.input_file_name(), r"\+", "%2B")
         )
-        for tok in tokens:
-            df = df.withColumn(
-                tok,
-                F.regexp_extract(
-                    decoded,
-                    _file_url_regex(java_safe_regex(regex)),
-                    group_idx[tok],
-                ),
-            )
+        url_regex = _file_url_regex(java_safe_regex(regex))
+        df = df.withColumns(
+            {tok: F.regexp_extract(decoded, url_regex, group_idx[tok]) for tok in tokens}
+        )
     else:
         # Local-only existence pre-check: a URI-scheme source (s3a://,
         # gs://, abfss://) is handed straight to the reader — the dsv
@@ -179,8 +174,14 @@ def compile_command(
         # Spark requires a common type across unpivoted values; try_cast
         # (not cast) for pandas to_numeric(errors='coerce') parity — the
         # domain's 'NA' cells become NULL instead of an ANSI cast error.
-        for vc in value_cols:
-            df = df.withColumn(vc, _qcol(vc).try_cast("double"))
+        # One select: a withColumn per value column re-analyses the
+        # growing plan once per sample.
+        df = df.select(
+            *(
+                _qcol(c) if c in ids else _qcol(c).try_cast("double").alias(c)
+                for c in df.columns
+            )
+        )
         df = melt_op(
             df,
             ids=ids,
@@ -202,8 +203,11 @@ def _read_members(
     uniform family still plans as a single FileScan. The groups are
     unioned by name (plan-level, no shuffle): a reordered member's values
     land in their named columns, and a column a member lacks reads null.
-    The head reads are driver-side, 4 KB per file; at object-store scale
-    this loop is the thing to batch (thread pool), not the scan design.
+    The head reads are driver-side, 4 KB per file, one file at a time
+    within a command; ``execute_manifest`` runs commands on a thread
+    pool, so the head reads of different commands overlap. At
+    object-store scale a large family's own loop is the next thing to
+    batch, not the scan design.
     """
     groups: dict[tuple[str, tuple[str, ...]], list[str]] = {}
     for p in paths:

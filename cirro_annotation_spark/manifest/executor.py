@@ -6,12 +6,25 @@ The only sink the reference declares is ``hot.Parquet``
 leaves it as its previous version or the complete new one; the whole
 manifest is checked before the first write. Each command's pipeline is
 shuffle-free, so output parallelism equals scan parallelism.
+
+Commands run concurrently, each compile → publish → read-back on its
+own thread, so one command's driver work (head reads, planning,
+renames) overlaps another's running job. The pool has
+``min(len(commands), defaultParallelism, 8)`` threads: more would only
+queue jobs the cluster cannot run, and 8 bounds the driver's OS threads
+and Py4J connections on a cluster whose default parallelism runs to
+thousands. In PySpark's default pinned-thread mode, job groups, local
+properties and tags reach the threads.
+Every command runs to completion; if any failed, the failure of the
+first failing command in manifest order is raised after all finished.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from cirro_annotation_spark.manifest.compiler import compile_command
@@ -52,12 +65,25 @@ def execute_manifest(
     data_directory: str,
     output_directory: str,
 ) -> dict[str, DataFrame]:
-    """Run every command; returns {target_path: result_df} for inspection.
-    Each result reads its target with the compiled frame's schema, so no
-    schema-inference job runs per target."""
-    results: dict[str, DataFrame] = {}
-    for cmd, target in zip(manifest.commands, _targets(manifest, output_directory)):
+    """Run every command; returns {target_path: result_df} in manifest
+    order. Each result reads its target with the compiled frame's
+    schema, so no schema-inference job runs per target."""
+    targets = _targets(manifest, output_directory)
+
+    def run(cmd, target: str) -> DataFrame:
         df = compile_command(spark, cmd, data_directory)
         publish(target, df.write.parquet)
-        results[target] = spark.read.schema(df.schema).parquet(target)
-    return results
+        return spark.read.schema(df.schema).parquet(target)
+
+    # Without pinned-thread mode (PYSPARK_PIN_THREAD=false) PySpark has
+    # no per-thread properties to copy and returns the session itself;
+    # ``run`` is then submitted as it is.
+    wrap = inheritable_thread_target(spark)
+    task = run if wrap is spark else wrap(run)
+    workers = min(len(targets), spark.sparkContext.defaultParallelism, 8)
+    with ThreadPoolExecutor(max_workers=max(workers, 1)) as pool:
+        futures = [
+            pool.submit(task, cmd, target)
+            for cmd, target in zip(manifest.commands, targets)
+        ]
+    return {target: f.result() for target, f in zip(targets, futures)}

@@ -162,19 +162,6 @@ def salted_join(
     return out.drop("__salt")
 
 
-def range_join_bands(
-    fact: DataFrame,
-    bands: DataFrame,
-    fact_col: str,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
-) -> DataFrame:
-    """Join a fact column into [lo, hi) bands. Bands are tiny → broadcast
-    nested-loop; the fact side streams without shuffling."""
-    cond = (F.col(fact_col) >= F.col(lo_col)) & (F.col(fact_col) < F.col(hi_col))
-    return fact.join(F.broadcast(bands), cond)
-
-
 def interval_overlap_join(
     left: DataFrame,
     right: DataFrame,

@@ -23,26 +23,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def quantize_by_quantiles(
-    df: DataFrame, col: str, bits: int = 8, relative_error: float = 0.01
-) -> tuple[list[float], F.Column]:
-    """(cut_points, bucket_expr): maps ``col`` to an integer bucket in
-    [0, 2^bits) by its approximate quantiles, so the Z-curve is
-    resistant to skew (equal-POPULATION cells, not equal-width). The
-    cut points are 2^bits-1 doubles fetched driver-side — model state,
-    the same justified-collect class as trained centroids."""
-    n = (1 << bits) - 1
-    probs = [(i + 1) / (n + 1) for i in range(n)]
-    cuts = df.approxQuantile(col, probs, relative_error)
-    return _bucket_expr_from_cuts(col, cuts, n)
-
-
 def _bucket_expr_from_cuts(
     col: str, cuts: list[float], n: int
 ) -> tuple[list[float], F.Column]:
-    """Bucket expression for precomputed quantile cuts (shared by the
-    single-column API and write_zordered's one-pass multi-column
-    quantile job)."""
+    """(cut_points, bucket_expr): maps ``col`` to an integer bucket in
+    [0, n] by precomputed quantile cuts (write_zordered's one-pass
+    multi-column quantile job), so the Z-curve is resistant to skew
+    (equal-POPULATION cells, not equal-width)."""
     # Strictly increasing cuts only (repeated quantiles on low-cardinality
     # columns collapse); bucket = count of cuts <= value, one codegen'd
     # expression, no join.

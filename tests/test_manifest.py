@@ -545,3 +545,37 @@ def test_token_name_colliding_with_cols_spec_selected_once(spark, tmp_path):
     df = compile_command(spark, man.commands[0], str(tmp_path))
     assert df.columns.count("gene") == 1
     assert df.first()["gene"] == "G1"  # token wins, like the reference
+
+
+def test_execute_manifest_more_commands_than_workers(spark, tmp_path):
+    """More commands than pool threads (at most 8): every target is
+    written and the results come back in manifest order."""
+    from cirro_annotation_spark.manifest.model import Manifest, TransformCommand
+
+    data = tmp_path / "data"
+    data.mkdir()
+    names = [f"t{i:02d}" for i in reversed(range(11))]
+    for n in names:
+        (data / f"{n}.txt").write_text(f"id\tname\n1\t{n}\n")
+    manifest = Manifest(
+        commands=tuple(
+            TransformCommand(source=f"$data_directory/{n}.txt", target=f"{n}.parquet")
+            for n in names
+        )
+    )
+    out = str(tmp_path / "out")
+    results = execute_manifest(spark, manifest, str(data), out)
+    assert list(results) == [os.path.join(out, f"{n}.parquet") for n in names]
+    for n, df in zip(names, results.values()):
+        assert [tuple(r) for r in df.collect()] == [(1, n)]
+
+
+def test_execute_manifest_without_pinned_threads(spark, manifest, data_dir, tmp_path, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, ``inheritable_thread_target(spark)``
+    returns the session unchanged; every command still runs."""
+    import cirro_annotation_spark.manifest.executor as executor
+
+    monkeypatch.setattr(executor, "inheritable_thread_target", lambda f: f)
+    results = execute_manifest(spark, manifest, data_dir, str(tmp_path / "out"))
+    assert len(results) == len(manifest.commands)
+    assert all(os.path.exists(t) for t in results)

@@ -136,3 +136,42 @@ def test_kill_between_renames_recovers_on_next_publish(
     s.publish()
     assert _rows(spark, s.target) == before
     assert _debris(s.target) == []
+
+
+def test_failed_command_leaves_other_targets_published(spark, tmp_path, monkeypatch):
+    """Commands run concurrently: a command failing inside its write job
+    leaves its target at the previous version, every other command still
+    publishes, and the failing command's own error is raised."""
+    data, out = tmp_path / "data", str(tmp_path / "out")
+    data.mkdir()
+    names = ("a", "b", "c")
+    manifest = Manifest(
+        commands=tuple(
+            TransformCommand(source=f"$data_directory/{n}.txt", target=f"{n}.parquet")
+            for n in names
+        )
+    )
+
+    def write_inputs(version):
+        for n in names:
+            (data / f"{n}.txt").write_text(f"id\tname\n{version}\t{n}\n")
+
+    write_inputs(1)
+    execute_manifest(spark, manifest, str(data), out)
+    write_inputs(2)
+    compile_command = executor.compile_command
+
+    def failing(spark, cmd, data_directory):
+        df = compile_command(spark, cmd, data_directory)
+        if cmd.target != "b.parquet":
+            return df
+        return df.withColumn("boom", F.raise_error(F.concat(F.lit("boom "), F.col("name"))))
+
+    monkeypatch.setattr(executor, "compile_command", failing)
+    with pytest.raises(Exception, match="boom b"):
+        execute_manifest(spark, manifest, str(data), out)
+    targets = {n: os.path.join(out, f"{n}.parquet") for n in names}
+    assert _rows(spark, targets["a"]) == [(2, "a")]
+    assert _rows(spark, targets["b"]) == [(1, "b")]
+    assert _rows(spark, targets["c"]) == [(2, "c")]
+    assert _debris(targets["b"]) == []
