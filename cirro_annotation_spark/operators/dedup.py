@@ -117,6 +117,35 @@ def minhash_signatures(
     )
 
 
+def _bucket_pairs(rows: DataFrame, keys: list[str], member: F.Column) -> DataFrame:
+    """Every ``(__a, __b)`` pair of ``member`` values that share a bucket
+    (equal ``keys``), ``__a < __b``, once per bucket they share.
+
+    No second shuffle of ``rows``: groupBy the keys collects each
+    bucket's sorted member list, then a two-step posexplode/slice emits
+    each a<b pair exactly once with O(bucket) per-row memory — the
+    self-join it replaces shuffled the bucketed frame twice and
+    re-shuffled the same payload on both sides. Pair volume is identical
+    to the join form; a degenerate hot bucket costs the same quadratic
+    row count either way, streamed row-at-a-time here as there."""
+    buckets = (
+        rows.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(member)).alias("__ms"))
+        .filter(F.size("__ms") >= 2)
+    )
+    anchored = buckets.select(F.posexplode("__ms").alias("__i", "__a"), "__ms")
+    return anchored.select(
+        "__a",
+        F.explode(
+            F.slice(
+                "__ms",
+                F.col("__i") + 2,
+                F.greatest(F.size("__ms") - F.col("__i") - 1, F.lit(0)),
+            )
+        ).alias("__b"),
+    )
+
+
 def minhash_candidates(
     df: DataFrame,
     text_col: str,
@@ -132,15 +161,8 @@ def minhash_candidates(
     aggregate (its aggregate form measured 5.2 -> 2.0 s for the whole
     candidates stage at sf0.1 against the in-row fold it replaced).
 
-    Bucket pairs are generated WITHOUT a second shuffle of the banded
-    frame: groupBy (band_id, band_hash) collects each bucket's sorted
-    id list (ids only — bounded by the bucket size), then a two-step
-    posexplode/slice emits each a<b pair exactly once with O(bucket)
-    per-row memory — the self-join it replaces shuffled the banded
-    frame twice and re-shuffled the same id payload on both sides.
-    Pair volume is identical to the join form (that is the candidate
-    semantics); a degenerate hot bucket costs the same quadratic row
-    count either way, streamed row-at-a-time here as there.
+    Bucket pairs come from :func:`_bucket_pairs` over the band key, with
+    the bare id as the collected member (bounded by the bucket size).
 
     The band key is the literal comma-joined minima string, not a hash
     of it: a hash would be one more thing to keep engine-neutral and
@@ -150,7 +172,15 @@ def minhash_candidates(
     string_agg(v, ',' ORDER BY i). Docs with zero shingles (empty text)
     have no signature row, so they never reach banding (the oracle's
     unnest-based fold emits no rows for them either).
+
+    Raises ``ValueError`` unless ``bands >= 1`` divides ``num_hashes``:
+    a band of zero rows keys every document on ``""``, which makes every
+    pair a candidate.
     """
+    if bands < 1 or num_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must be >= 1 and divide num_hashes={num_hashes}"
+        )
     rows = num_hashes // bands
     sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
     banded = sig.select(
@@ -177,23 +207,9 @@ def minhash_candidates(
         F.col("band.band_id").alias("band_id"),
         F.col("band.band_hash").alias("band_hash"),
     )
-    buckets = (
-        banded.groupBy("band_id", "band_hash")
-        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
-        .filter(F.size("__ids") >= 2)
-    )
-    anchored = buckets.select(
-        F.posexplode("__ids").alias("__i", "id_a"), "__ids"
-    )
-    return anchored.select(
-        "id_a",
-        F.explode(
-            F.slice(
-                "__ids",
-                F.col("__i") + 2,
-                F.greatest(F.size("__ids") - F.col("__i") - 1, F.lit(0)),
-            )
-        ).alias("id_b"),
+    pairs = _bucket_pairs(banded, ["band_id", "band_hash"], F.col("__id"))
+    return pairs.select(
+        F.col("__a").alias("id_a"), F.col("__b").alias("id_b")
     ).distinct()
 
 
@@ -270,10 +286,11 @@ def dedup_near_minhash(
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-def simhash64(text_col: str) -> F.Column:
-    """64-bit SimHash over whitespace tokens, fully vectorized:
-    per-token xxhash64 → per-bit ±1 votes folded with aggregate over the
-    token array → sign bits packed into one long.
+def _simhash_sql(text_col: str, token_hash: str, bits: int) -> F.Column:
+    """SimHash over whitespace tokens, fully vectorized: per-token
+    ``token_hash`` (a SQL lambda body over ``x``) → per-bit ±1 votes
+    folded with aggregate over the token array → sign bits of the low
+    ``bits`` bits packed into one long.
 
     Expressed as SQL text: the Python API's shiftleft/shiftright accept
     only a literal int for numBits, but inside a higher-order-function
@@ -281,19 +298,24 @@ def simhash64(text_col: str) -> F.Column:
     both args. Still one codegen'd scan, zero Python in the loop.
     """
     toks = f"filter(split(trim(`{text_col}`), '\\\\s+'), x -> x != '')"
-    hashes = f"transform({toks}, x -> xxhash64(lower(x)))"
+    hashes = f"transform({toks}, x -> {token_hash})"
     votes = (
-        f"aggregate({hashes}, array_repeat(0, 64), "
+        f"aggregate({hashes}, array_repeat(0, {bits}), "
         "(acc, h) -> zip_with(acc, "
-        "transform(sequence(0, 63), i -> IF(shiftright(h, i) & 1 = 1, 1, -1)), "
+        f"transform(sequence(0, {bits - 1}), i -> IF(shiftright(h, i) & 1 = 1, 1, -1)), "
         "(a, v) -> a + v))"
     )
     packed = (
-        f"aggregate(zip_with({votes}, sequence(0, 63), "
+        f"aggregate(zip_with({votes}, sequence(0, {bits - 1}), "
         "(v, i) -> IF(v > 0, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))), "
         "CAST(0 AS BIGINT), (acc, x) -> acc | x)"
     )
     return F.expr(packed)
+
+
+def simhash64(text_col: str) -> F.Column:
+    """64-bit SimHash with an xxhash64 token hash (see :func:`_simhash_sql`)."""
+    return _simhash_sql(text_col, "xxhash64(lower(x))", 64)
 
 
 def hamming64(a: F.Column, b: F.Column) -> F.Column:
@@ -305,27 +327,14 @@ def simhash60_md5(text_col: str) -> F.Column:
     of md5(lower(token)) as a BIGINT — computable identically in Spark
     (conv(…,16,10)) and DuckDB ('0x'||… cast), unlike xxhash64. 60 bits
     keeps the packed signature positive in a signed 64-bit lane on both
-    engines. This is the VERIFY-kernel twin of :func:`simhash64`: the
-    FULL construction (tokenize → hash → ±1 bit votes → sign packing)
-    hash-checks against a DuckDB oracle, not just the Hamming
-    arithmetic (VERDICT r10 item 3)."""
-    toks = f"filter(split(trim(`{text_col}`), '\\\\s+'), x -> x != '')"
-    hashes = (
-        f"transform({toks}, "
-        "x -> cast(conv(substring(md5(lower(x)), 1, 15), 16, 10) as bigint))"
+    engines. It shares :func:`_simhash_sql` with :func:`simhash64`, so the
+    ``dedup_simhash_verify`` oracle hash-checks the construction
+    (tokenize → hash → ±1 bit votes → sign packing) that
+    :func:`simhash_near_pairs` runs; only the token hash and the bit
+    width differ."""
+    return _simhash_sql(
+        text_col, "cast(conv(substring(md5(lower(x)), 1, 15), 16, 10) as bigint)", 60
     )
-    votes = (
-        f"aggregate({hashes}, array_repeat(0, 60), "
-        "(acc, h) -> zip_with(acc, "
-        "transform(sequence(0, 59), i -> IF(shiftright(h, i) & 1 = 1, 1, -1)), "
-        "(a, v) -> a + v))"
-    )
-    packed = (
-        f"aggregate(zip_with({votes}, sequence(0, 59), "
-        "(v, i) -> IF(v > 0, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))), "
-        "CAST(0 AS BIGINT), (acc, x) -> acc | x)"
-    )
-    return F.expr(packed)
 
 
 def simhash_near_pairs(
@@ -360,10 +369,9 @@ def simhash_near_pairs(
     always broadcastable; signatures shuffle, text never does.
     """
     # The per-token xxhash64 + 64-bit vote fold is the expensive term
-    # and the frame below feeds THREE consumers (bucket-size agg, both
-    # sides of the self-join) — lazy-checkpoint the 16-byte/doc
-    # signature frame so the fold runs once (shared-frame law; measured
-    # 9.9 -> ~6 s at sf0.1).
+    # and the frame below feeds TWO consumers (bucket-size agg, bucket
+    # pairs) — lazy-checkpoint the 16-byte/doc signature frame so the
+    # fold runs once (shared-frame law; measured 9.9 -> ~6 s at sf0.1).
     sig = df.select(
         F.col(id_col).alias("__id"), simhash64(text_col).alias("__sim")
     ).localCheckpoint(eager=False)
@@ -400,45 +408,20 @@ def simhash_near_pairs(
         )
     else:
         chunks = chunks.withColumn("sub_val", F.lit(-1))
-    # Bucket pairs WITHOUT a second shuffle of the chunk frame
-    # (optimization r15, the minhash_candidates shape): groupBy the
-    # bucket key, collect each bucket's (id, sim) members sorted by id,
-    # and emit a<b pairs with a two-step posexplode/slice. The
-    # collected array is bounded by bucket_cap per the sub-banding
-    # above (a degenerate identical-signature bucket stays together,
-    # but there the join form's quadratic OUTPUT dominates any
-    # per-row array cost). Measured 3.55 -> 3.17 s at sf0.1, pair set
-    # exceptAll-identical.
-    buckets = (
-        chunks.groupBy("chunk_id", "chunk_val", "sub_val")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("__id", "__sim"))).alias(
-                "__ms"
-            )
-        )
-        .filter(F.size("__ms") >= 2)
-    )
-    anchored = buckets.select(
-        F.posexplode("__ms").alias("__i", "__ma"), "__ms"
+    # Bucket pairs come from _bucket_pairs with (id, sim) members, so
+    # Hamming is scored on each pair without a join back to the
+    # signatures. The collected array is bounded by bucket_cap per the
+    # sub-banding above (a degenerate identical-signature bucket stays
+    # together, but there the quadratic OUTPUT dominates any per-row
+    # array cost).
+    pairs = _bucket_pairs(
+        chunks, ["chunk_id", "chunk_val", "sub_val"], F.struct("__id", "__sim")
     )
     return (
-        anchored.select(
-            F.col("__ma.__id").alias("id_a"),
-            F.col("__ma.__sim").alias("__sim_a"),
-            F.explode(
-                F.slice(
-                    "__ms",
-                    F.col("__i") + 2,
-                    F.greatest(F.size("__ms") - F.col("__i") - 1, F.lit(0)),
-                )
-            ).alias("__mb"),
-        )
-        .select(
-            "id_a",
-            F.col("__mb.__id").alias("id_b"),
-            hamming64(F.col("__sim_a"), F.col("__mb.__sim")).alias(
-                "hamming"
-            ),
+        pairs.select(
+            F.col("__a.__id").alias("id_a"),
+            F.col("__b.__id").alias("id_b"),
+            hamming64(F.col("__a.__sim"), F.col("__b.__sim")).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .distinct()

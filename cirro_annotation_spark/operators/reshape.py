@@ -1,10 +1,11 @@
-"""Reshaping operators: melt (wide→long), pivot (long→wide), token-union.
+"""Reshaping operators: melt (wide→long), pivot (long→wide), union by name.
 
 The reference's signature operator is melt — a wide frame of per-sample
 columns folded into (key, value) long form, declared in its manifest as
 ``kwargs.melt`` / ``params.melt`` (reference: run_annotate.py:104-120,
 202-211, 240-249; json/example/transform.json:20). Its family-union with
-path tokens is ``concat`` (run_annotate.py:195).
+path tokens, ``concat`` (run_annotate.py:195), is one multi-path scan
+plus ``regexp_extract(input_file_name())`` in manifest/compiler.py.
 
 Scale notes: melt/unpivot is a narrow transformation — each row expands
 to k rows in place, no shuffle, perfectly parallel. pivot with explicit
@@ -14,7 +15,7 @@ unionByName is metadata-only.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Mapping
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -78,21 +79,3 @@ def union_by_name(frames: Iterable[DataFrame]) -> DataFrame:
         out = out.unionByName(f, allowMissingColumns=True)
     return out
 
-
-def concat_union_tokens(
-    tagged_frames: Iterable[tuple[Mapping[str, str], DataFrame]],
-) -> DataFrame:
-    """The reference's ``concat`` (run_annotate.py:195): union a variable
-    file-group, each member tagged with its path-token values as literal
-    columns (e.g. ``{"gene": "GENE_A"}``).
-
-    Used when files were read individually; the single-pass alternative
-    (one multi-path scan + regexp_extract(input_file_name())) lives in
-    manifest/compiler.py and is preferred at scale.
-    """
-    tagged = []
-    for tokens, df in tagged_frames:
-        for name, value in tokens.items():
-            df = df.withColumn(name, F.lit(value))
-        tagged.append(df)
-    return union_by_name(tagged)

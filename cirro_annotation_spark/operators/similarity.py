@@ -11,11 +11,18 @@ Search methods, each a top-k by cosine (ties by id ascending):
   cell, and only the query's ``nprobe`` nearest cells are scored.
 - PQ / IVF-PQ — asymmetric distance over product-quantization codes.
 
-One rule: each method has ONE body, the ``_q`` form, which takes the
-query as a 1-row ``(__qv, __qn)`` frame (:func:`query_vector_frame`).
-A literal-vector form (``topk_cosine_bruteforce``, ``topk_cosine_lsh``,
-``ivf_topk_cosine``) is a wrapper that builds that frame from the vector
-(:func:`_literal_query_frame`) and calls the ``_q`` form.
+One rule: each kernel has ONE body.
+- A search's body is its ``_q`` form, which takes the query as a 1-row
+  ``(__qv, __qn)`` frame (:func:`query_vector_frame`). A literal-vector
+  form (``topk_cosine_bruteforce``, ``topk_cosine_lsh``,
+  ``ivf_topk_cosine``) is a wrapper that builds that frame from the
+  vector (:func:`_literal_query_frame`) and calls the ``_q`` form.
+- Within-key cosine pairs (LSH near-dups, SemDeDup cells) are one
+  norm-once self-join, :func:`_cosine_pairs_within`.
+- SemDeDup is the SQL reference :func:`semantic_dedup_removed` plus one
+  Arrow operator, :func:`semantic_dedup_removed_capped`, whose within-
+  and cross-chunk stages both run :func:`_semdedup_block_kernel`.
+- PQ and IVF-PQ share the ADC ranking tail, :func:`_adc_topk`.
 """
 
 from __future__ import annotations
@@ -382,27 +389,40 @@ def near_dup_pairs_cosine(
     documented recall trade-off; raise recall with multiple plane sets)."""
     planes = _hyperplanes(dim, n_planes, seed)
     v = F.col(vec_col).cast("array<double>")
-    # Norms are per-VECTOR, so compute them once in the narrow pre-join
-    # projection — inside the join each candidate pair then costs one
-    # dot product instead of dot + two norm folds (3× the HOF work,
-    # re-done per pair; measured ~25% off the query wall at sf0.1).
-    sig = df.select(
+    return _cosine_pairs_within(
+        df, v, id_col, lsh_bucket(v, planes), threshold
+    ).select("id_a", "id_b", "cosine_sim")
+
+
+def _cosine_pairs_within(
+    df: DataFrame, v: F.Column, id_col: str, key: F.Column, threshold: float
+) -> DataFrame:
+    """Every pair of rows with equal ``key`` whose cosine, rounded to 6
+    places, reaches ``threshold``: ``(id_a, id_b, key, cosine_sim)`` with
+    ``id_a < id_b`` — one self-join on the key.
+
+    Norms are per-VECTOR, so they are computed once in the narrow
+    pre-join projection — inside the join each candidate pair then costs
+    one dot product instead of dot + two norm folds (3× the HOF work,
+    re-done per pair; measured ~25% off the query wall at sf0.1)."""
+    sl = df.select(
         F.col(id_col).alias("__id"),
+        key.alias("__key"),
         v.alias("__v"),
         l2_norm(v).alias("__n"),
-        lsh_bucket(v, planes).alias("__bucket"),
     )
-    a, b = sig.alias("a"), sig.alias("b")
+    a, b = sl.alias("a"), sl.alias("b")
     sim = _cosine(dot(F.col("a.__v"), F.col("b.__v")), F.col("a.__n") * F.col("b.__n"))
     return (
         a.join(
             b,
-            (F.col("a.__bucket") == F.col("b.__bucket"))
+            (F.col("a.__key") == F.col("b.__key"))
             & (F.col("a.__id") < F.col("b.__id")),
         )
         .select(
             F.col("a.__id").alias("id_a"),
             F.col("b.__id").alias("id_b"),
+            F.col("a.__key").alias("key"),
             F.round(sim, 6).alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
@@ -486,27 +506,13 @@ def semantic_dedup_removed(
     dedup_first_wins).
     """
     v = F.col(vec_col).cast("array<double>")
-    sl = df.select(
-        F.col(id_col).alias("__id"),
-        _argmin_centroid(v, centroids).alias("__cell"),
-        v.alias("__v"),
-        l2_norm(v).alias("__n"),
-    )
-    a, b = sl.alias("a"), sl.alias("b")
-    sim = _cosine(dot(F.col("a.__v"), F.col("b.__v")), F.col("a.__n") * F.col("b.__n"))
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.__cell") == F.col("b.__cell"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("vec_id"),
-            F.col("b.__cell").alias("cell"),
-            F.round(sim, 6).alias("__cs"),
-        )
-        .filter(F.col("__cs") >= threshold)
+    pairs = _cosine_pairs_within(
+        df, v, id_col, _argmin_centroid(v, centroids), threshold
+    ).select(
+        "id_a",
+        F.col("id_b").alias("vec_id"),
+        F.col("key").alias("cell"),
+        F.col("cosine_sim").alias("__cs"),
     )
     return pairs.groupBy("vec_id", "cell").agg(
         F.count("*").alias("n_dominators"),
@@ -516,90 +522,58 @@ def semantic_dedup_removed(
 
 
 def _semdedup_block_kernel(
-    pdf: pd.DataFrame, threshold: float, block: int
+    pdf: pd.DataFrame,
+    threshold: float,
+    block: int,
+    dominators: pd.DataFrame | None = None,
 ) -> pd.DataFrame:
-    """SemDeDup pairs within one ``(vec_id, cell, __v)`` pandas group: per
-    vector, how many lower-id members reach ``threshold``, the lowest
-    such id and the best cosine, computed ``block`` rows at a time (see
-    :func:`semantic_dedup_removed_arrow`)."""
+    """SemDeDup scores for one pandas group of ``(vec_id, cell, __v)``
+    rows, in the output schema of :func:`semantic_dedup_removed`: per
+    row, how many ``dominators`` (default: the group itself) have a
+    LOWER id and a cosine that reaches ``threshold`` at 6 dp, the lowest
+    such id and the best such cosine; rows with none are dropped.
+
+    The vectorized hot path for the O(cell²) pair stage: ``block`` rows
+    at a time against every dominator as one numpy matmul (~10-100x the
+    per-pair zip_with fold, the documented Pandas-UDF exception for work
+    built-ins can't express efficiently). A partial similarity matrix
+    holds block × len(dominators) doubles, so a 1e5-vector cell peaks at
+    ~0.8 GB instead of an 80 GB full V·Vᵀ. Cosines are rounded to 6 dp
+    BEFORE thresholding and aggregation — the SQL reference's and the
+    DuckDB oracle's grain."""
     import numpy as np
     import pandas as pd
 
     pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+    dom = pdf if dominators is None else dominators.sort_values("vec_id")
     ids = pdf["vec_id"].to_numpy()
-    V = np.stack(pdf["__v"].to_numpy())
-    norms = np.sqrt((V * V).sum(axis=1))
+    dom_ids = dom["vec_id"].to_numpy()
     n = len(ids)
-    cell = int(pdf["cell"].iloc[0]) if n else 0
     cnt = np.zeros(n, dtype=np.int64)
-    keeper = np.full(n, n, dtype=np.int64)  # min dominating ROW index
-    maxcos = np.full(n, -np.inf)
-    for lo in range(0, n, block):
-        hi = min(lo + block, n)
-        S = V[lo:hi] @ V.T  # (hi-lo) x n
-        S = S / (norms[lo:hi, None] * norms[None, :])
-        S = np.round(S, 6)
-        # dominators of column j are rows i < j (ids ascending)
-        rows_idx = np.arange(lo, hi)[:, None]
-        mask = (S >= threshold) & (rows_idx < np.arange(n)[None, :])
-        any_col = mask.any(axis=0)
-        cnt += mask.sum(axis=0)
-        first = np.where(any_col, lo + mask.argmax(axis=0), n)
-        keeper = np.minimum(keeper, first)
-        maxcos = np.maximum(maxcos, np.where(mask, S, -np.inf).max(axis=0))
+    first = np.zeros(n, dtype=np.int64)  # lowest dominating dominator index
+    maxcos = np.zeros(n)
+    if n and len(dom_ids):
+        V = np.stack(pdf["__v"].to_numpy())
+        D = np.stack(dom["__v"].to_numpy())
+        norms = np.sqrt((V * V).sum(axis=1))
+        dom_norms = np.sqrt((D * D).sum(axis=1))
+        for lo in range(0, n, block):
+            hi = min(lo + block, n)
+            S = V[lo:hi] @ D.T / (norms[lo:hi, None] * dom_norms[None, :])
+            S = np.round(S, 6)
+            mask = (S >= threshold) & (dom_ids[None, :] < ids[lo:hi, None])
+            cnt[lo:hi] = mask.sum(axis=1)
+            first[lo:hi] = mask.argmax(axis=1)
+            maxcos[lo:hi] = np.where(mask, S, -np.inf).max(axis=1)
     hit = cnt > 0
     return pd.DataFrame(
         {
             "vec_id": ids[hit],
-            "cell": cell,
+            "cell": int(pdf["cell"].iloc[0]) if n else 0,
             "n_dominators": cnt[hit],
-            "keeper_id": ids[np.minimum(keeper[hit], n - 1)],
+            "keeper_id": dom_ids[first[hit]],
             "max_cosine": maxcos[hit],
         }
-    )
-
-
-def semantic_dedup_removed_arrow(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    centroids: list[list[float]],
-    threshold: float,
-    block: int = 1024,
-) -> DataFrame:
-    """Arrow/BLAS twin of :func:`semantic_dedup_removed`: identical
-    output contract, but the within-cell pair stage runs as one
-    ``applyInPandas`` per quantizer cell with a BLOCKED numpy matmul
-    instead of a per-pair zip_with fold — the vectorized hot path for
-    the O(cell²) stage (~10-100x the HOF expression tree, the
-    documented Pandas-UDF exception for work built-ins can't express
-    efficiently).
-
-    Block structure bounds memory at block×cell_size doubles per
-    partial similarity matrix, so a 1e5-vector cell needs ~0.8 GB
-    peaks instead of an 80 GB full S = V·Vᵀ. Per-pair cosines are
-    rounded to 6dp BEFORE thresholding/aggregation — bit-compatible
-    with the SQL twin and the DuckDB oracle at the contract's rounding
-    grain.
-    """
-    import pandas as pd
-
-    v = F.col(vec_col).cast("array<double>")
-    assigned = df.select(
-        F.col(id_col).alias("vec_id"),
-        _argmin_centroid(v, centroids).alias("cell"),
-        v.alias("__v"),
-    )
-
-    def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _semdedup_block_kernel(pdf, threshold, block)
-
-    return assigned.groupBy("cell").applyInPandas(
-        _pairs,
-        schema=(
-            "vec_id long, cell int, n_dominators long, "
-            "keeper_id long, max_cosine double"
-        ),
     )
 
 
@@ -649,8 +623,6 @@ def semantic_dedup_removed_capped(
     operators.dedup.global_rank keyed by cell. Detection of cells that
     need the cap at all is sim_ivf_cell_stats' job (ships since r7).
     """
-    import pandas as pd
-
     v = F.col(vec_col).cast("array<double>")
     assigned = df.select(
         F.col(id_col).alias("vec_id"),
@@ -667,14 +639,14 @@ def semantic_dedup_removed_capped(
         "keeper_id long, max_cosine double"
     )
 
-    def _within(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _semdedup_block_kernel(pdf, threshold, block)
+    within = ranked.groupBy("cell", "chunk").applyInPandas(
+        lambda pdf: _semdedup_block_kernel(pdf, threshold, block), out_schema
+    )
 
-    within = ranked.groupBy("cell", "chunk").applyInPandas(_within, out_schema)
-
-    # Cross stage: every chunk>0 member vs its cell's FULL chunk 0. All
-    # chunk-0 ids are strictly below every chunk>0 id (rank ordering),
-    # so no per-pair id predicate is needed. chunk0 replicates via a
+    # Cross stage: every chunk>0 member vs its cell's FULL chunk 0 as its
+    # dominators. All chunk-0 ids are strictly below every chunk>0 id
+    # (rank ordering), so the kernel's lower-id rule keeps every
+    # chunk-0 member in play. chunk0 replicates via a
     # broadcast of the (cell, chunk) key list — tiny: one row per chunk.
     nonzero = ranked.filter(F.col("chunk") > 0)
     chunk_keys = nonzero.groupBy(F.col("cell").alias("__kcell")).agg(
@@ -696,58 +668,13 @@ def semantic_dedup_removed_capped(
     # the flatMapCoGroupsInPandas plan.
     chunk0_rep = chunk0_rep.toDF(*chunk0_rep.columns)
 
-    def _cross(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        if left.empty or right.empty:
-            return pd.DataFrame(
-                {
-                    "vec_id": pd.Series(dtype="int64"),
-                    "cell": pd.Series(dtype="int32"),
-                    "n_dominators": pd.Series(dtype="int64"),
-                    "keeper_id": pd.Series(dtype="int64"),
-                    "max_cosine": pd.Series(dtype="float64"),
-                }
-            )
-        left = left.sort_values("vec_id").reset_index(drop=True)
-        right = right.sort_values("vec_id").reset_index(drop=True)
-        ids = left["vec_id"].to_numpy()
-        ids0 = right["vec_id"].to_numpy()
-        V = np.stack(left["__v"].to_numpy())
-        V0 = np.stack(right["__v"].to_numpy())
-        n = len(ids)
-        cell = int(left["cell"].iloc[0])
-        norms = np.sqrt((V * V).sum(axis=1))
-        norms0 = np.sqrt((V0 * V0).sum(axis=1))
-        cnt = np.zeros(n, dtype=np.int64)
-        keeper = np.full(n, len(ids0), dtype=np.int64)
-        maxcos = np.full(n, -np.inf)
-        for lo in range(0, n, block):
-            hi = min(lo + block, n)
-            S = V[lo:hi] @ V0.T
-            S = S / (norms[lo:hi, None] * norms0[None, :])
-            S = np.round(S, 6)
-            mask = S >= threshold
-            any_row = mask.any(axis=1)
-            cnt[lo:hi] = mask.sum(axis=1)
-            first = np.where(any_row, mask.argmax(axis=1), len(ids0))
-            keeper[lo:hi] = first
-            maxcos[lo:hi] = np.where(mask, S, -np.inf).max(axis=1)
-        hit = cnt > 0
-        return pd.DataFrame(
-            {
-                "vec_id": ids[hit],
-                "cell": cell,
-                "n_dominators": cnt[hit],
-                "keeper_id": ids0[np.minimum(keeper[hit], len(ids0) - 1)],
-                "max_cosine": maxcos[hit],
-            }
-        )
-
     cross = (
         nonzero.groupBy("cell", "chunk")
         .cogroup(chunk0_rep.groupBy("cell", "chunk"))
-        .applyInPandas(_cross, out_schema)
+        .applyInPandas(
+            lambda left, right: _semdedup_block_kernel(left, threshold, block, right),
+            out_schema,
+        )
     )
 
     return (
@@ -788,6 +715,13 @@ def pq_topk_adc(
     m = len(codebooks)
     enc = _pq_encode_arrow(df, vec_col, id_col, codebooks)
     joined = enc.crossJoin(F.broadcast(_with_adc_tables(query_frame, codebooks)))
+    return _adc_topk(joined, m, k)
+
+
+def _adc_topk(joined: DataFrame, m: int, k: int) -> DataFrame:
+    """The ranking tail PQ and IVF-PQ share: asymmetric distance = the
+    sum of the m table lookups ``__t{s}[__c{s}]``, rounded to 6 places,
+    top-k by (distance asc, vec_id asc) through TakeOrderedAndProject."""
     adc = None
     for s in range(m):
         term = F.element_at(F.col(f"__t{s}"), F.col(f"__c{s}") + 1)
@@ -872,15 +806,7 @@ def ivfpq_topk_adc(
     joined = enc.join(
         F.broadcast(qf), F.array_contains(F.col("__probe"), F.col("__cell"))
     )
-    adc = None
-    for s in range(m):
-        term = F.element_at(F.col(f"__t{s}"), F.col(f"__c{s}") + 1)
-        adc = term if adc is None else adc + term
-    return (
-        joined.select("vec_id", F.round(adc, 6).alias("adc_dist"))
-        .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
-        .limit(k)
-    )
+    return _adc_topk(joined, m, k)
 
 
 def _pq_encode_arrow(
@@ -892,14 +818,14 @@ def _pq_encode_arrow(
 ) -> DataFrame:
     """Arrow-vectorized PQ encoder: vec_id + __c0..__c{m-1} code columns
     (+ __cell when IVF centroids are given), computed with numpy
-    broadcast arithmetic in one mapInPandas pass. The expression-tree
+    broadcast arithmetic in one mapInPandas pass. An expression-tree
     encoder builds m×16 = 128 fold nodes per row — correct but
     Catalyst-heavy (1.5 MB codegen binaries); this is the same
-    BLAS-for-the-hot-kernel trade as semantic_dedup_removed_arrow, with
-    the expression twin kept for the parity test. Code selection is a
-    discrete argmin (first-minimum tie rule in BOTH paths), so results
-    are engine-identical. At production scale this pass runs ONCE at
-    ingest and the codes persist as tiny columns."""
+    BLAS-for-the-hot-kernel trade as :func:`_semdedup_block_kernel`.
+    Code selection is a discrete argmin with the first-minimum tie rule,
+    the DuckDB oracle's rule, so results are engine-identical. At
+    production scale this pass runs ONCE at ingest and the codes persist
+    as tiny columns."""
     import numpy as np
     import pandas as pd
 

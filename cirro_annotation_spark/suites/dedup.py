@@ -228,40 +228,22 @@ def dedup_minhash_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_minhash_sig_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash SIGNATURE construction under a full oracle (VERDICT
-    r11 item 6b, the dedup_simhash_verify pattern): recompute the md5
-    affine-lattice signature — tokenize → distinct 3-gram shingles →
+    r11 item 6b, the dedup_simhash_verify pattern): run
+    operators.dedup.minhash_signatures, the md5 affine-lattice
+    signature — tokenize → distinct 3-gram shingles →
     md5 once per shingle → (h1 + i·h2) mod 2^32 minima for 32 seeds —
     on a pinned 100-doc slice and emit it exploded as (doc_id, seed,
     minval). dedup_minhash_verify hash-checks the Jaccard VERIFY stage;
     this one hash-checks the signatures the banding stage builds on, so
     together only the band-key equality join remains rows-only."""
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    # Same codegen'd hash-aggregate signature shape as
-    # minhash_candidates (optimization r15: the interpreted in-row fold
-    # paid a ~2.3 s per-run fixed cost — 2.6 -> ~0.8 s here); the left
-    # join restores the all-sentinel rows the fold emitted for
-    # zero-shingle docs, which the aggregate path has no rows for.
+    # The signature IS minhash_signatures, the stage minhash_candidates
+    # bands, so the oracle checks the code that runs; the left join
+    # restores the all-sentinel rows for zero-shingle docs, which the
+    # aggregate has no rows for.
     two32 = F.lit(4294967296).cast("long")
-    md5s = F.transform(D.shingles("text"), lambda s: F.md5(s))
-    ex = d.select("doc_id", F.explode(md5s).alias("m"))
-    h1 = F.conv(F.substring("m", 1, 8), 16, 10).cast("long")
-    h2 = (
-        F.conv(F.substring("m", 9, 8), 16, 10)
-        .cast("long")
-        .bitwiseOR(F.lit(1).cast("long"))
-    )
-    sig = (
-        ex.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min(
-                    (F.col("h1") + F.lit(i).cast("long") * F.col("h2"))
-                    % two32
-                ).alias(f"__s{i}")
-                for i in range(32)
-            ]
-        )
+    sig = D.minhash_signatures(d, "text", "doc_id").withColumnRenamed(
+        "__id", "doc_id"
     )
     full = d.select("doc_id").join(sig, "doc_id", "left")
     arr = F.array(

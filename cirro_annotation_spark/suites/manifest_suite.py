@@ -80,8 +80,9 @@ def _command(spark: SparkSession, target: str):
     """,
 )
 def manifest_variable_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """scan_glob_tokens + concat_union_tokens: the 3-gene family unions into
-    one frame with the [gene] path token as a column (150 rows = 3×50)."""
+    """scan_glob_tokens + the compiler's token union: the 3-gene family
+    unions into one frame with the [gene] path token as a column
+    (150 rows = 3×50)."""
     cmd = _command(spark, "rra_sgrna_summary.parquet")
     return compile_command(spark, cmd, fixture_data_dir()).orderBy("gene", "sgrna")
 

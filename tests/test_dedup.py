@@ -78,6 +78,21 @@ def test_lsh_recall_on_planted_duplicates(spark):
     assert recall >= 0.9, f"LSH recall {recall} < 0.9 (found {len(found & planted)}/20)"
 
 
+def test_minhash_rejects_bands_that_do_not_divide_hashes(spark):
+    """A band of zero rows (num_hashes < bands) keys every document on
+    the empty string, so every pair would become a candidate; a band
+    count that does not divide num_hashes would leave signature slots
+    unused. Both are rejected before any plan is built."""
+    import pytest
+
+    df = _docs(spark)
+    for num_hashes, bands in ((4, 8), (32, 0), (32, 5)):
+        with pytest.raises(ValueError, match="bands="):
+            minhash_candidates(df, "text", "doc_id", num_hashes, bands)
+    with pytest.raises(ValueError, match="bands="):
+        dedup_near_minhash(df, "text", "doc_id", num_hashes=4, bands=8)
+
+
 def test_dedup_near_minhash_drops_only_duplicates(spark):
     df = _docs(spark)
     kept = dedup_near_minhash(df, "text", "doc_id", threshold=0.6)

@@ -1,7 +1,8 @@
 """Golden manifest tests: the reference's declared pipeline (SURVEY.md §3.2)
 run end-to-end on the FIXTURES.md §B tree — scan_dsv_sniffed →
-normalize_colnames → project_rename → scan_glob_tokens →
-concat_union_tokens → melt_unpivot → sink_parquet
+normalize_colnames → project_rename → scan_glob_tokens → token union
+(the compiler's regexp_extract(input_file_name())) → melt_unpivot →
+sink_parquet
 (reference: run_annotate.py:177-253).
 """
 from __future__ import annotations

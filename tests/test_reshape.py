@@ -1,29 +1,13 @@
 """Coverage for the reshape/join operators not exercised via queries:
-per-file token union (concat_union_tokens), non-count pivots, and the
-bucketized interval-overlap join."""
+union by name, non-count pivots, and the bucketized interval-overlap
+join. The per-file token union runs in manifest/compiler.py and is
+covered by tests/test_manifest.py."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from cirro_annotation_spark.operators.joins import interval_overlap_join
-from cirro_annotation_spark.operators.reshape import (
-    concat_union_tokens,
-    pivot,
-    union_by_name,
-)
-
-
-def test_concat_union_tokens(spark):
-    """The reference's per-file 'concat' (run_annotate.py:195): each member
-    tagged with its token values, then name-wise union with null fill."""
-    f1 = spark.createDataFrame([(1, 10.0)], "sgrna long, score double")
-    f2 = spark.createDataFrame([(2, 20.0, 0.1)], "sgrna long, score double, fdr double")
-    out = concat_union_tokens([
-        ({"gene": "GENE_A"}, f1),
-        ({"gene": "GENE_B"}, f2),
-    ])
-    rows = {(r["sgrna"], r["gene"], r["fdr"]) for r in out.collect()}
-    assert rows == {(1, "GENE_A", None), (2, "GENE_B", 0.1)}
+from cirro_annotation_spark.operators.reshape import pivot, union_by_name
 
 
 def test_union_by_name_empty_raises(spark):

@@ -257,41 +257,6 @@ def test_semantic_dedup_respects_cell_boundary(spark):
     assert out == []  # same-cell pairs only; cross-cell near-dup ignored
 
 
-def test_semantic_dedup_arrow_sql_parity(spark, sf_dir):
-    """The Arrow/BLAS pair stage and the pure-SQL HOF twin must agree
-    EXACTLY (both round per-pair cosines to 6dp before threshold/agg),
-    including under a block size smaller than the cell population."""
-    from cirro_annotation_spark.suites._ivf_centroids import CENTROIDS
-
-    emb = t(spark, sf_dir, "embeddings")
-
-    def canon(rows):
-        return sorted(
-            (
-                r["vec_id"],
-                r["cell"],
-                r["n_dominators"],
-                r["keeper_id"],
-                r["max_cosine"],
-            )
-            for r in rows
-        )
-
-    ref = canon(
-        S.semantic_dedup_removed(
-            emb, "embedding", "vec_id", CENTROIDS, 0.43
-        ).collect()
-    )
-    assert ref  # fixture must actually exercise the pair stage
-    for blk in (1024, 3):
-        got = canon(
-            S.semantic_dedup_removed_arrow(
-                emb, "embedding", "vec_id", CENTROIDS, 0.43, block=blk
-            ).collect()
-        )
-        assert got == ref
-
-
 def _canon_removed(rows):
     return sorted(
         (
@@ -307,9 +272,11 @@ def _canon_removed(rows):
 
 def test_semantic_dedup_capped_exact_when_under_cap(spark, sf_dir):
     """With no cell at the cap, the occupancy-capped operator must equal
-    the exact twin bit-for-bit — the degrades-gracefully half of the
+    the SQL reference bit-for-bit — the degrades-gracefully half of the
     VERDICT-r7 hot-cell fix (every member lands in chunk 0, the cross
-    stage is empty, within-chunk pairing IS exact pairing)."""
+    stage is empty, within-chunk pairing IS exact pairing). Both round
+    per-pair cosines to 6dp before threshold/agg; block=3 runs the
+    blocked matmul with a block smaller than the cell population."""
     from cirro_annotation_spark.suites._ivf_centroids import CENTROIDS
 
     emb = t(spark, sf_dir, "embeddings")
@@ -318,13 +285,15 @@ def test_semantic_dedup_capped_exact_when_under_cap(spark, sf_dir):
             emb, "embedding", "vec_id", CENTROIDS, 0.43
         ).collect()
     )
-    assert ref
-    got = _canon_removed(
-        S.semantic_dedup_removed_capped(
-            emb, "embedding", "vec_id", CENTROIDS, 0.43, cap=1024
-        ).collect()
-    )
-    assert got == ref
+    assert ref  # fixture must actually exercise the pair stage
+    for blk in (1024, 3):
+        got = _canon_removed(
+            S.semantic_dedup_removed_capped(
+                emb, "embedding", "vec_id", CENTROIDS, 0.43, cap=1024,
+                block=blk,
+            ).collect()
+        )
+        assert got == ref, f"block={blk}"
 
 
 def test_semantic_dedup_capped_matches_capped_oracle(spark, sf_dir):
