@@ -1,6 +1,6 @@
 """CLI — the reference's ``annotate`` command (main.py:11-19), prompts
-replaced by flags, plus the ``optimize`` pass it stubbed and a plain
-``execute`` for pre-built manifests.
+replaced by flags, plus a plain ``execute`` for pre-built manifests and
+a ``datasets`` listing.
 
     python -m cirro_annotation_spark annotate \
         --data-dir ./data --output-dir ./out \
@@ -8,7 +8,6 @@ replaced by flags, plus the ``optimize`` pass it stubbed and a plain
         --melt 'mageck/count/combined/counts.txt:ctrl_r1,ctrl_r2' \
         --fields fields.json --manifest-out manifest.json
 
-    python -m cirro_annotation_spark optimize --manifest manifest.json
     python -m cirro_annotation_spark execute --manifest manifest.json \
         --data-dir ./data --output-dir ./out
 """
@@ -44,9 +43,6 @@ def main(argv: list[str] | None = None) -> int:
     an.add_argument("--process", default="*")
     an.add_argument("--manifest-out", help="also write the manifest JSON here")
 
-    op = sub.add_parser("optimize", help="optimize a manifest JSON in place")
-    op.add_argument("--manifest", required=True)
-
     ex = sub.add_parser("execute", help="run an existing manifest")
     ex.add_argument("--manifest", required=True)
     ex.add_argument("--data-dir", required=True)
@@ -62,18 +58,6 @@ def main(argv: list[str] | None = None) -> int:
     ch.add_argument("--limit", type=int, default=25)
 
     args = ap.parse_args(argv)
-
-    if args.cmd == "optimize":
-        from cirro_annotation_spark.manifest.model import load_manifest
-        from cirro_annotation_spark.manifest.optimizer import optimize_manifest
-
-        with open(args.manifest) as f:
-            m = load_manifest(json.load(f))
-        m = optimize_manifest(m)
-        with open(args.manifest, "w") as f:
-            f.write(m.to_json())
-        print(f"optimized: {len(m.commands)} commands")
-        return 0
 
     from cirro_annotation_spark.session import get_spark
 

@@ -24,31 +24,19 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cirro_annotation_spark.manifest.model import TransformCommand
+from cirro_annotation_spark.manifest.model import TOKEN_RE, TransformCommand, extract_tokens
 from cirro_annotation_spark.operators.reshape import melt as melt_op
 from cirro_annotation_spark.operators.reshape import union_by_name
-from cirro_annotation_spark.sources.dsv import normalize_columns, read_dsv, sniff
-
-TOKEN_RE = re.compile(r"\[(\w+)\]")
-
-
-def extract_tokens(template: str) -> list[str]:
-    """Token names from a ``[token]`` path template (run_annotate.py:133)."""
-    return TOKEN_RE.findall(template)
+from cirro_annotation_spark.sources.dsv import normalize_columns, normalize_name, read_dsv, sniff
 
 
 def token_template_to_regex(template: str) -> str:
     """``[tok]`` template → named-group regex, exactly the reference's
     substitution semantics (run_annotate.py:134-136): each token matches
     one path segment ``([^/]+)``; the rest of the template is literal."""
-    out = []
-    pos = 0
-    for m in TOKEN_RE.finditer(template):
-        out.append(re.escape(template[pos : m.start()]))
-        out.append(f"(?P<{m.group(1)}>[^/]+)")
-        pos = m.end()
-    out.append(re.escape(template[pos:]))
-    return "".join(out)
+    literals = TOKEN_RE.split(template)[::2]
+    groups = [f"(?P<{tok}>[^/]+)" for tok in extract_tokens(template)]
+    return "".join(re.escape(lit) + g for lit, g in zip(literals, groups)) + re.escape(literals[-1])
 
 
 def token_template_to_glob(template: str) -> str:
@@ -59,7 +47,7 @@ def java_safe_regex(regex: str) -> str:
     """Python named groups ``(?P<name>…)`` are a Python-only spelling —
     Java regex (what regexp_extract runs) rejects them with
     INVALID_PARAMETER_VALUE.PATTERN. Token extraction is positional
-    (group_idx below), so plain groups carry the same information."""
+    (the regexp_extract group index), so plain groups carry the same information."""
     return re.sub(r"\(\?P<\w+>", "(", regex)
 
 
@@ -81,7 +69,7 @@ def compile_command(
 ) -> DataFrame:
     """Compile one hot.Parquet command to a lazy DataFrame."""
     source = substitute_data_directory(cmd.source, data_directory)
-    tokens = list(cmd.tokens) or extract_tokens(source)
+    tokens = extract_tokens(source)
 
     if tokens:
         pattern = token_template_to_glob(source)
@@ -96,9 +84,6 @@ def compile_command(
         if not matched:
             raise FileNotFoundError(f"no files match {pattern}")
         df = _read_members(spark, matched, cmd)
-        # Group index of each token in the compiled regex (named groups
-        # are ordered by position).
-        group_idx = {name: i + 1 for i, name in enumerate(extract_tokens(source))}
         # input_file_name() is a percent-ENCODED file: URI; the regex is
         # built from the raw template, so match against the decoded path
         # or any space/special char in the tree silently yields ''
@@ -109,9 +94,11 @@ def compile_command(
         decoded = F.url_decode(
             F.regexp_replace(F.input_file_name(), r"\+", "%2B")
         )
-        url_regex = _file_url_regex(java_safe_regex(regex))
+        # input_file_name() is a file: URL; anchor the path regex at its
+        # end. Group i is the i-th token (groups are ordered by position).
+        url_regex = f".*{java_safe_regex(regex)}$"
         df = df.withColumns(
-            {tok: F.regexp_extract(decoded, url_regex, group_idx[tok]) for tok in tokens}
+            {tok: F.regexp_extract(decoded, url_regex, i) for i, tok in enumerate(tokens, 1)}
         )
     else:
         # Local-only existence pre-check: a URI-scheme source (s3a://,
@@ -129,7 +116,7 @@ def compile_command(
         keep = []
         df_cols = set(df.columns)
         for spec in cmd.cols:
-            col_norm = normalize_columns([spec.col])[0]
+            col_norm = normalize_name(spec.col)
             if col_norm in df_cols:
                 keep.append(
                     _qcol(col_norm).alias(
@@ -145,7 +132,7 @@ def compile_command(
         # token value wins either way — withColumn above replaced any
         # same-named data column, matching the reference's assignment
         # overwrite (code-review r15).
-        spec_names = {normalize_columns([sp.col])[0] for sp in cmd.cols}
+        spec_names = {normalize_name(sp.col) for sp in cmd.cols}
         keep.extend(_qcol(tok) for tok in tokens if tok not in spec_names)
         df = df.select(*keep)
 
@@ -153,7 +140,7 @@ def compile_command(
     # keep it as an ordinary column, hoisted first and tagged as the row
     # identity in column metadata (§1.2 mapping).
     if cmd.read.index_col:
-        idx = normalize_columns([cmd.read.index_col])[0]
+        idx = normalize_name(cmd.read.index_col)
         if idx in df.columns:
             meta = dict(df.schema[idx].metadata or {})
             meta["index"] = True
@@ -232,8 +219,3 @@ def _expand_glob(spark: SparkSession, pattern: str) -> list[str]:
     statuses = fs.globStatus(hpath)
     return [] if statuses is None else [str(st.getPath()) for st in statuses]
 
-
-def _file_url_regex(path_regex: str) -> str:
-    """input_file_name() yields a file: URL — anchor the path regex to
-    match it with a permissive prefix."""
-    return f".*{path_regex}$" if not path_regex.startswith(".*") else path_regex

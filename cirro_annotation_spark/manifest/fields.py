@@ -12,7 +12,8 @@ Scope matching: a metadata record applies when its process/file patterns
 match the query (exact or ``*`` wildcard; fnmatch-style globs accepted
 since the reference uses ``*``). More-specific records win: exact beats
 wildcard, process specificity beats file specificity (process is the
-outer scope in the reference's layout).
+outer scope in the reference's layout). Aliases and queried columns are
+matched under the sniffer's column-name rule, ``dsv.normalize_name``.
 """
 
 from __future__ import annotations
@@ -21,11 +22,7 @@ from collections.abc import Mapping, Sequence
 from dataclasses import dataclass
 from fnmatch import fnmatchcase
 
-
-def _norm(col: str) -> str:
-    """Column-name normalization, same as dsv.normalize_columns first step
-    (run_annotate.py:48): trim + lowercase."""
-    return col.strip().lower()
+from cirro_annotation_spark.sources.dsv import normalize_name
 
 
 @dataclass(frozen=True)
@@ -57,7 +54,7 @@ class FieldsDictionary:
 
     def add(self, aliases: Sequence[str], metas: Sequence[ScopedMeta]) -> None:
         for alias in aliases:
-            self._by_alias.setdefault(_norm(alias), []).extend(metas)
+            self._by_alias.setdefault(normalize_name(alias), []).extend(metas)
 
     def resolve(
         self, column: str, process: str = "*", file: str = "*"
@@ -66,7 +63,7 @@ class FieldsDictionary:
         Empty name/desc records (the reference uses them as 'known but
         undescribed here' placeholders, fields.json:19-24) lose to any
         record with content at equal specificity."""
-        metas = self._by_alias.get(_norm(column))
+        metas = self._by_alias.get(normalize_name(column))
         if not metas:
             return None
         applicable = [m for m in metas if m.matches(process, file)]
@@ -76,7 +73,7 @@ class FieldsDictionary:
         return {"name": best.name, "desc": best.desc}
 
     def __contains__(self, column: str) -> bool:
-        return _norm(column) in self._by_alias
+        return normalize_name(column) in self._by_alias
 
 
 def load_fields_dictionary(obj) -> FieldsDictionary:

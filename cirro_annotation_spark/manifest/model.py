@@ -5,13 +5,29 @@ ships a JSON-Schema describing an older ``{files, columns}`` shape
 (manifest.schema.json — a real drift bug, SURVEY.md §5). We define ONE
 canonical dataclass model matching what run_annotate actually emits
 (run_annotate.py:187-197, 226-234), with a loader that checks every
-field as it parses it.
+field as it parses it. ``concat`` is not stored: it is the source
+template's token list, so the loader only checks that a written one
+agrees.
 """
 
 from __future__ import annotations
 
 import json
+import re
+from collections import Counter
 from dataclasses import dataclass, field
+
+TOKEN_RE = re.compile(r"\[(\w+)\]")
+
+
+def extract_tokens(template: str) -> list[str]:
+    """Token names from a ``[token]`` path template (run_annotate.py:133).
+    A token named twice has no single value per file, so it is rejected."""
+    tokens = TOKEN_RE.findall(template)
+    repeated = [t for t, n in Counter(tokens).items() if n > 1]
+    if repeated:
+        raise ValueError(f"{template}: token [{repeated[0]}] appears more than once")
+    return tokens
 
 
 @dataclass(frozen=True)
@@ -55,9 +71,14 @@ class TransformCommand:
     name: str = ""
     desc: str = ""
     cols: tuple[ColumnSpec, ...] = ()
-    tokens: tuple[str, ...] = ()  # the reference's ``concat`` token list
     melt: MeltSpec | None = None
     read: ReadOptions = field(default_factory=ReadOptions)
+
+    @property
+    def tokens(self) -> tuple[str, ...]:
+        """The reference's ``concat`` list, derived from the source
+        template (``"concat": file['tokens']``, run_annotate.py:195)."""
+        return tuple(extract_tokens(self.source))
 
 
 @dataclass(frozen=True)
@@ -156,6 +177,15 @@ def _parse_command(d, where: str) -> TransformCommand:
     _check(isinstance(p, dict), where, "must be an object")
     for req in ("source", "target"):
         _check(isinstance(p.get(req), str) and p[req] != "", f"{where}.{req}", "required non-empty string")
+    try:
+        tokens = extract_tokens(p["source"])
+    except ValueError as e:
+        raise ManifestValidationError(f"{where}.source: {e}") from None
+    concat = _strs(p, "concat", where)
+    _check(
+        concat in ((), tuple(tokens)), f"{where}.concat",
+        f"must be empty or the source's tokens {tokens}, got {list(concat)}",
+    )
 
     raw_cols = p.get("cols", [])
     _check(isinstance(raw_cols, list), f"{where}.cols", "must be a list")
@@ -189,7 +219,6 @@ def _parse_command(d, where: str) -> TransformCommand:
         name=_str(p, "name", where),
         desc=_str(p, "desc", where),
         cols=tuple(cols),
-        tokens=_strs(p, "concat", where),
         melt=melt,
         read=ReadOptions(
             sep=_str(kw, "sep", at, None),

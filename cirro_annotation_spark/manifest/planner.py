@@ -17,10 +17,7 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import SparkSession
 
-from cirro_annotation_spark.manifest.compiler import (
-    extract_tokens,
-    token_template_to_regex,
-)
+from cirro_annotation_spark.manifest.compiler import token_template_to_regex
 from cirro_annotation_spark.manifest.fields import (
     FieldsDictionary,
     load_fields_dictionary,
@@ -33,7 +30,7 @@ from cirro_annotation_spark.manifest.model import (
     TransformCommand,
 )
 from cirro_annotation_spark.sources.discovery import discover_files
-from cirro_annotation_spark.sources.dsv import harvest_columns
+from cirro_annotation_spark.sources.dsv import harvest_columns, normalize_name
 
 
 def group_variable_files(
@@ -88,8 +85,9 @@ def build_manifest(
     (:177-253) as one loop.
 
     - variable_templates: ``[token]`` path templates relative to the root.
-    - melt_groups: {file_or_template: [value columns to fold]}; the folded
-      key and value columns are named ``sample`` and ``reads``.
+    - melt_groups: {file_or_template: [value columns to fold]}, names
+      matched trimmed and lowercased; the folded key and value columns
+      are named ``sample`` and ``reads``.
     - dictionary: any fields.json shape (rich alias/scoped, flat, mapping).
     - process: pipeline process id for scoped dictionary resolution.
     - index_cols: {file_or_template: row-identity column}
@@ -117,7 +115,6 @@ def build_manifest(
                 name=target,
                 desc=f"{'variable family' if family else 'standard file'} {rel}",
                 cols=_resolve_cols(cols, dictionary, process=process, file=rel),
-                tokens=tuple(extract_tokens(rel)) if family else (),
                 melt=_melt_for(rel, cols, melt_groups),
                 read=ReadOptions(index_col=index_cols.get(rel)),
             )
@@ -130,7 +127,11 @@ def _melt_for(
 ) -> MeltSpec | None:
     if key not in melt_groups:
         return None
-    value_cols = tuple(c for c in melt_groups[key] if c in set(cols))
+    # cols are the sniffed, normalized names: match the caller's under
+    # the same rule (or a mixed-case list silently melts nothing), once
+    # each (two spellings of one column would melt it twice).
+    names = dict.fromkeys(map(normalize_name, melt_groups[key]))
+    value_cols = tuple(n for n in names if n in set(cols))
     if not value_cols:
         return None
     return MeltSpec(key_name="sample", value_name="reads", value_cols=value_cols)

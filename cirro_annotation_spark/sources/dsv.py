@@ -29,15 +29,14 @@ def _read_head_bytes(path: str, n: int, spark: SparkSession | None = None) -> by
     Local paths use plain ``open`` (no JVM round-trip). Any path with a
     scheme (s3a://, hdfs://, abfss://, ...) goes through Spark's Hadoop
     FileSystem API — the same connectors the executor scan will use —
-    so sniffing works against cloud storage, not only local disk.
+    so sniffing works against cloud storage, not only local disk. Such
+    a path needs the caller's session: a head read never starts one.
     """
     if "://" not in path:
         with open(path, "rb") as f:
             return f.read(n)
     if spark is None:
-        from cirro_annotation_spark.session import get_spark
-
-        spark = get_spark("sniff")
+        raise ValueError(f"{path}: reading a scheme-qualified path needs a SparkSession")
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     jpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -115,8 +114,13 @@ def sniff(
     ])
 
 
+def normalize_name(c: str) -> str:
+    """The one column-name rule: trim + lowercase (run_annotate.py:48)."""
+    return c.strip().lower()
+
+
 def normalize_columns(cols: list[str]) -> list[str]:
-    """trim + lowercase + first-wins dedup (run_annotate.py:48-49).
+    """:func:`normalize_name` + first-wins dedup (run_annotate.py:48-49).
 
     Later duplicates get a __dupN suffix so the frame stays addressable;
     the reference simply dropped them via dict.fromkeys — callers that
@@ -125,7 +129,7 @@ def normalize_columns(cols: list[str]) -> list[str]:
     seen: dict[str, int] = {}
     out = []
     for c in cols:
-        norm = c.strip().lower()
+        norm = normalize_name(c)
         if norm in seen:
             seen[norm] += 1
             out.append(f"{norm}__dup{seen[norm]}")

@@ -462,6 +462,44 @@ def test_melt_value_cols_case_normalized(spark, tmp_path):
     assert row["sample"] == "ctrl_r1" and row["count"] == 3.0
 
 
+def test_planner_melts_mixed_case_names(spark, tmp_path):
+    """Melt names are matched under the sniffer's column-name rule, so a
+    mixed-case list melts instead of leaving the target wide, and two
+    spellings of one column melt it once."""
+    from cirro_annotation_spark.manifest import annotate
+
+    data = build_fixture_tree(str(tmp_path))
+    counts = "mageck/count/combined/counts.txt"
+    man, results = annotate(
+        spark, data, str(tmp_path / "out"), melt_groups={counts: ["CTRL_R1", "Ctrl_R2 ", "ctrl_r1"]}
+    )
+    melt = next(c.melt for c in man.commands if c.source.endswith(counts))
+    assert melt.value_cols == ("ctrl_r1", "ctrl_r2")
+    df = next(df for t, df in results.items() if t.endswith("/counts.parquet"))
+    assert {"sample", "reads"} <= set(df.columns)
+    assert not {"ctrl_r1", "ctrl_r2"} & set(df.columns)
+    assert {r["sample"] for r in df.select("sample").distinct().collect()} == {
+        "ctrl_r1", "ctrl_r2",
+    }
+
+
+def test_template_naming_a_token_twice_is_rejected(spark, tmp_path):
+    """``runs/[s]/[s].tsv`` gives a token two values per path: the
+    planner and the loader both refuse it, naming the token."""
+    from cirro_annotation_spark.manifest.model import load_manifest
+
+    (tmp_path / "runs" / "A").mkdir(parents=True)
+    (tmp_path / "runs" / "A" / "A.tsv").write_text("id\tval\nx\t1\n")
+    with pytest.raises(ValueError, match=re.escape("token [s] appears more than once")):
+        build_manifest(spark, str(tmp_path), variable_templates=["runs/[s]/[s].tsv"])
+    with pytest.raises(ValueError, match=re.escape("params.source:")):
+        load_manifest(
+            {"commands": [{"params": {
+                "source": "$data_directory/runs/[s]/[s].tsv", "target": "runs.parquet",
+            }}]}
+        )
+
+
 def test_executor_rejects_escaping_targets(spark, tmp_path):
     """The whole manifest is checked before the first write: a bad
     command after a good one must not leave the good one written."""
@@ -505,6 +543,7 @@ def test_load_manifest_validates_melt_and_kwargs_shapes():
         ({**base, "kwargs": {"read": 5}}, "kwargs.read"),
         ({**base, "cols": [{"col": 5}]}, re.escape("params.cols[0].col:")),
         ({**base, "concat": [1]}, re.escape("params.concat[0]:")),
+        ({**base, "concat": ["gene"]}, re.escape("params.concat:")),
         ({**base, "kwargs": {"read": {"sep": 1}}}, re.escape("params.kwargs.read.sep:")),
         ({**base, "kwargs": {"read": {"header": "no"}}}, re.escape("params.kwargs.read.header:")),
         ({**base, "melt": {"value_cols": [None]}}, re.escape("params.melt.value_cols[0]:")),

@@ -7,89 +7,20 @@ from cirro_annotation_spark.manifest.fixtures import (
     FIELDS_DICTIONARY,
     build_fixture_tree,
 )
-from cirro_annotation_spark.manifest.model import (
-    ColumnSpec,
-    Manifest,
-    MeltSpec,
-    ReadOptions,
-    TransformCommand,
-)
-from cirro_annotation_spark.manifest.optimizer import (
-    merge_duplicate_sources,
-    optimize_manifest,
-    prune_empty_commands,
-)
+from cirro_annotation_spark.manifest.model import ColumnSpec, Manifest, TransformCommand
+from cirro_annotation_spark.manifest.optimizer import prune_empty_commands
 
 
-def _cmd(source, cols, target="t.parquet", melt=None, sep=None):
+def _cmd(source, cols):
     return TransformCommand(
-        source=source,
-        target=target,
-        cols=tuple(ColumnSpec(c) for c in cols),
-        melt=melt,
-        read=ReadOptions(sep=sep),
+        source=source, target="t.parquet", cols=tuple(ColumnSpec(c) for c in cols)
     )
-
-
-def test_merge_same_source_unions_cols():
-    m = Manifest(
-        commands=(
-            _cmd("a.txt", ["x", "y"]),
-            _cmd("a.txt", ["y", "z"]),
-            _cmd("b.txt", ["q"]),
-        )
-    )
-    out = merge_duplicate_sources(m)
-    assert len(out.commands) == 2
-    merged = out.commands[0]
-    assert [c.col for c in merged.cols] == ["x", "y", "z"]
-    assert merged.target == "t.parquet"
-    assert out.commands[1].source == "b.txt"
-
-
-def test_merge_keeps_distinct_targets():
-    """Same source, DIFFERENT declared outputs: both must survive —
-    merging would silently never write the second dataset (round-2
-    advisor finding against the old source-only merge key)."""
-    m = Manifest(
-        commands=(
-            _cmd("a.txt", ["x", "y"]),
-            _cmd("a.txt", ["y", "z"], target="other.parquet"),
-        )
-    )
-    out = merge_duplicate_sources(m)
-    assert len(out.commands) == 2
-    assert {c.target for c in out.commands} == {"t.parquet", "other.parquet"}
-    assert [c.col for c in out.commands[0].cols] == ["x", "y"]
-    assert [c.col for c in out.commands[1].cols] == ["y", "z"]
-
-
-def test_merge_respects_read_options_and_melt():
-    melt = MeltSpec(key_name="k", value_name="v", value_cols=("x",))
-    m = Manifest(
-        commands=(
-            _cmd("a.txt", ["x"], sep="\t"),
-            _cmd("a.txt", ["x"], sep=","),       # different sep → distinct scan
-            _cmd("a.txt", ["x"], sep="\t", melt=melt),  # melt changes cardinality
-        )
-    )
-    out = merge_duplicate_sources(m)
-    assert len(out.commands) == 3
 
 
 def test_prune_empty():
     m = Manifest(commands=(_cmd("a.txt", []), _cmd("b.txt", ["x"])))
     out = prune_empty_commands(m)
     assert len(out.commands) == 1 and out.commands[0].source == "b.txt"
-
-
-def test_optimize_composes():
-    m = Manifest(
-        commands=(_cmd("a.txt", ["x"]), _cmd("a.txt", ["y"]), _cmd("c.txt", []))
-    )
-    out = optimize_manifest(m)
-    assert len(out.commands) == 1
-    assert [c.col for c in out.commands[0].cols] == ["x", "y"]
 
 
 def test_annotate_end_to_end(spark, tmp_path):

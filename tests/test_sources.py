@@ -97,6 +97,22 @@ def test_sniff_via_hadoop_fs_scheme_path(spark, tmp_path):
     assert sniff("file://" + str(p), spark=spark) == ("\t", ["a", "b", "c"])
 
 
+def test_sniff_scheme_path_without_session_raises(tmp_path, monkeypatch):
+    """A head read of a scheme-qualified path uses the caller's session
+    and never starts one of its own."""
+    from cirro_annotation_spark import session
+    from cirro_annotation_spark.sources.dsv import sniff
+
+    def no_new_session(*args, **kwargs):
+        raise AssertionError("a head read started a SparkSession")
+
+    monkeypatch.setattr(session, "get_spark", no_new_session)
+    p = tmp_path / "t.tsv"
+    p.write_text("a\tb\n1\t2\n")
+    with pytest.raises(ValueError, match="needs a SparkSession"):
+        sniff("file://" + str(p))
+
+
 def test_sniff_gz_truncation_tolerant(tmp_path):
     """gz sniffing decompresses a HEAD slice tolerantly (no EOFError on
     the truncated member) — pin with a file larger than the sniff
