@@ -3,16 +3,22 @@
 Pipeline per command (the reference's declared execution contract,
 SURVEY.md §3.2):
 
-    glob(source) → read DSV members by name (kwargs.read) → token
-    columns from path regex → project+rename to cols → melt if
-    specified → caller sinks to Parquet.
+    glob(source) → read DSV members by name (kwargs.read) as strings →
+    token columns from path regex → project+rename to cols, each column
+    cast to the type its members' head reads gave → melt if specified →
+    caller sinks to Parquet.
 
 Scale design: files sharing a separator and a header are ONE multi-path
 scan, not N per-file jobs — tokens come from ``regexp_extract(
 input_file_name())`` executor-side, so a uniform 100k-file family plans
 as a single FileScan; differing members add one scan per (sep, header)
-group, unioned by name. The pipeline is shuffle-free (scan → project →
-expand → write), i.e. embarrassingly parallel at any scale.
+group, unioned by name. Every scan has an explicit all-string schema and
+the types are frozen from the head reads the compiler already makes, so
+compiling starts no Spark job: the casts are one SQL-text projection.
+A later value its frozen type cannot hold reads null there; the
+executor's write counts such values with a :class:`TypeCheck` and
+rewrites with the widened type. The pipeline is shuffle-free (scan →
+project → expand → write), i.e. embarrassingly parallel at any scale.
 """
 
 from __future__ import annotations
@@ -21,13 +27,25 @@ import glob as globmod
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cirro_annotation_spark.manifest.model import TOKEN_RE, TransformCommand, extract_tokens
 from cirro_annotation_spark.operators.reshape import melt as melt_op
 from cirro_annotation_spark.operators.reshape import union_by_name
-from cirro_annotation_spark.sources.dsv import normalize_columns, normalize_name, read_dsv, sniff
+from cirro_annotation_spark.sources.dsv import (
+    column_type,
+    join_kind,
+    normalize_columns,
+    normalize_name,
+    quote_name,
+    read_dsv,
+    sniff_kinds,
+    typed_sql,
+)
+
+# The types a typed column may widen to, tried in order before string.
+_WIDENINGS = {"bigint": ("bigint", "double"), "double": ("double",), "boolean": ("boolean",)}
 
 
 def token_template_to_regex(template: str) -> str:
@@ -51,23 +69,65 @@ def java_safe_regex(regex: str) -> str:
     return re.sub(r"\(\?P<\w+>", "(", regex)
 
 
-def _qcol(name: str) -> F.Column:
-    """Column reference that survives dotted names (`p.low` — mageck output
-    columns, faithful to the reference domain): backtick-quote so neither
-    F.col nor df[...] parses the dot as struct access."""
-    return F.col(f"`{name}`") if "." in name else F.col(name)
-
-
 def substitute_data_directory(source: str, data_directory: str) -> str:
     """The manifest stores ``$data_directory``-anchored sources
     (run_annotate.py:190); execution substitutes the real root."""
     return source.replace("$data_directory", data_directory.rstrip("/"))
 
 
+class TypeCheck:
+    """The write-path check of the types frozen from the head reads.
+
+    Passed to :func:`compile_command`, it observes in the job that runs
+    the frame, per typed column, the values that are neither null nor an
+    NA token and that the type cannot hold. :meth:`widen` then reads the
+    counts and widens exactly those columns as pandas would (bigint to
+    double when every such value parses as double, else string); the
+    next compile with this check uses the widened types and observes
+    nothing, as they hold every value. Queries compile without a check:
+    an observed column cannot be pruned from the scan.
+    """
+
+    def __init__(self) -> None:
+        self.widened: dict[str, str] = {}
+        self._checked: list[tuple[str, str]] = []
+        self._observation: Observation | None = None
+
+    def observe(self, df: DataFrame, types: dict[str, str]) -> DataFrame:
+        if self._observation is not None:
+            return df
+        self._checked = [(c, t) for c, t in types.items() if t in _WIDENINGS]
+        if not self._checked:
+            return df
+        fails = ", ".join(
+            f"count_if({typed_sql(c, 'string')} IS NOT NULL AND {typed_sql(c, w)} IS NULL)"
+            for c, t in self._checked
+            for w in _WIDENINGS[t]
+        )
+        self._observation = Observation()
+        return df.observe(self._observation, F.expr(f"array({fails})").alias("fails"))
+
+    def widen(self) -> bool:
+        """Widen the columns the observed job found values for; True if any."""
+        if self._observation is None:
+            return False
+        fails = iter(self._observation.get["fails"])
+        for c, t in self._checked:
+            counts = [next(fails) for _ in _WIDENINGS[t]]
+            wider = next((w for w, n in zip(_WIDENINGS[t], counts) if n == 0), "string")
+            if wider != t:
+                self.widened[c] = wider
+        return bool(self.widened)
+
+
 def compile_command(
-    spark: SparkSession, cmd: TransformCommand, data_directory: str
+    spark: SparkSession,
+    cmd: TransformCommand,
+    data_directory: str,
+    check: TypeCheck | None = None,
 ) -> DataFrame:
-    """Compile one hot.Parquet command to a lazy DataFrame."""
+    """Compile one hot.Parquet command to a lazy DataFrame; no Spark job
+    starts. ``check`` is the executor's write-path type check."""
     source = substitute_data_directory(cmd.source, data_directory)
     tokens = extract_tokens(source)
 
@@ -83,7 +143,7 @@ def compile_command(
         )
         if not matched:
             raise FileNotFoundError(f"no files match {pattern}")
-        df = _read_members(spark, matched, cmd)
+        df, types = _read_members(spark, matched, cmd)
         # input_file_name() is a percent-ENCODED file: URI; the regex is
         # built from the raw template, so match against the decoded path
         # or any space/special char in the tree silently yields ''
@@ -107,72 +167,62 @@ def compile_command(
         # would wrongly reject every cloud path (code-review r15).
         if "://" not in source and not os.path.exists(source):
             raise FileNotFoundError(source)
-        df = _read_members(spark, [source], cmd)
+        df, types = _read_members(spark, [source], cmd)
 
     # Projection + rename with dictionary metadata (run_annotate.py:183-184,
     # 194, 233): keep only dictionary-resolved columns (plus tokens),
     # attach {name, desc} as column metadata.
     if cmd.cols:
-        keep = []
-        df_cols = set(df.columns)
-        for spec in cmd.cols:
-            col_norm = normalize_name(spec.col)
-            if col_norm in df_cols:
-                keep.append(
-                    _qcol(col_norm).alias(
-                        col_norm, metadata={"name": spec.name, "desc": spec.desc}
-                    )
-                )
-            else:
-                # §1.3 schema discipline: manifest column missing from the
-                # file → explicit null column, stable output schema.
-                keep.append(F.lit(None).cast("string").alias(col_norm))
-        # A token already named in cmd.cols must not be selected twice
-        # (duplicate output columns fail at the parquet sink); the
-        # token value wins either way — withColumn above replaced any
-        # same-named data column, matching the reference's assignment
-        # overwrite (code-review r15).
-        spec_names = {normalize_name(sp.col) for sp in cmd.cols}
-        keep.extend(_qcol(tok) for tok in tokens if tok not in spec_names)
-        df = df.select(*keep)
-
+        meta = {normalize_name(spec.col): {"name": spec.name, "desc": spec.desc} for spec in cmd.cols}
+        names = [*meta, *(tok for tok in tokens if tok not in meta)]
+    else:
+        meta, names = {}, df.columns
     # kwargs.read.index_col (transform.json:16-19): Spark has no index —
     # keep it as an ordinary column, hoisted first and tagged as the row
     # identity in column metadata (§1.2 mapping).
-    if cmd.read.index_col:
-        idx = normalize_name(cmd.read.index_col)
-        if idx in df.columns:
-            meta = dict(df.schema[idx].metadata or {})
-            meta["index"] = True
-            df = df.select(
-                _qcol(idx).alias(idx, metadata=meta),
-                *[_qcol(c) for c in df.columns if c != idx],
-            )
+    idx = normalize_name(cmd.read.index_col) if cmd.read.index_col else None
+    if idx in names:
+        names = [idx, *(c for c in names if c != idx)]
+        meta[idx] = {**meta.get(idx, {}), "index": True}
+    # Normalize the manifest's value_cols the same way sniff normalized
+    # the frame's columns: a mixed-case manifest name would otherwise
+    # stay an id while Spark's case-insensitive resolver still unpivots
+    # it (code-review r15). Melted values are read as double, pandas
+    # to_numeric(errors='coerce') parity: a cell that is not a number is
+    # null, not a cast error.
+    value_cols = normalize_columns(list(cmd.melt.value_cols)) if cmd.melt else []
 
+    def cast(c: str) -> str:
+        if c in tokens:
+            # A token replaced any same-named data column (withColumns
+            # above; the reference's assignment overwrite): path text.
+            return quote_name(c)
+        if c in value_cols:
+            return typed_sql(c, "double")
+        if c not in types:
+            # §1.3 schema discipline: a manifest column no member has
+            # reads as an explicit null column, stable output schema.
+            return "CAST(NULL AS STRING)"
+        return typed_sql(c, types[c])
+
+    if check is not None:
+        types.update(check.widened)
+        typed = [c for c in names if c in types and c not in tokens and c not in value_cols]
+        df = check.observe(df, {c: types[c] for c in typed})
+
+    df = df.selectExpr(*(f"{cast(c)} AS {quote_name(c)}" for c in names))
+    # Metadata only on columns the melt keeps: unpivot drops the rest's.
+    if any(c in meta for c in names if c not in value_cols):
+        df = df.select(*(
+            F.col(quote_name(c)).alias(c, metadata=meta[c])
+            if c in meta and c not in value_cols else quote_name(c)
+            for c in names
+        ))
     if cmd.melt:
-        # Normalize the manifest's value_cols the same way sniff
-        # normalized the frame's columns: a mixed-case manifest name
-        # would otherwise pass the case-sensitive `not in` below while
-        # Spark's case-insensitive resolver still unpivots it — the
-        # column would appear BOTH as an id and as melted rows
-        # (code-review r15).
-        value_cols = normalize_columns(list(cmd.melt.value_cols))
-        ids = [c for c in df.columns if c not in value_cols]
-        # Spark requires a common type across unpivoted values; try_cast
-        # (not cast) for pandas to_numeric(errors='coerce') parity — the
-        # domain's 'NA' cells become NULL instead of an ANSI cast error.
-        # One select: a withColumn per value column re-analyses the
-        # growing plan once per sample.
-        df = df.select(
-            *(
-                _qcol(c) if c in ids else _qcol(c).try_cast("double").alias(c)
-                for c in df.columns
-            )
-        )
         df = melt_op(
             df,
-            ids=ids,
-            values=list(value_cols),
+            ids=[c for c in names if c not in value_cols],
+            values=value_cols,
             var_name=cmd.melt.key_name,
             value_name=cmd.melt.value_name,
         )
@@ -181,29 +231,36 @@ def compile_command(
 
 def _read_members(
     spark: SparkSession, paths: list[str], cmd: TransformCommand
-) -> DataFrame:
+) -> tuple[DataFrame, dict[str, str]]:
     """Read source files by column NAME, like the reference's per-file
-    ``pd.read_csv(sep=None)`` then concat (run_annotate.py:20-28).
+    ``pd.read_csv(sep=None)`` then concat (run_annotate.py:20-28); returns
+    the frame of string columns and each column's type.
 
     One head read per file decides its separator (unless ``cmd.read.sep``
-    fixes it) and its column names; files sharing both are one scan, so a
-    uniform family still plans as a single FileScan. The groups are
-    unioned by name (plan-level, no shuffle): a reordered member's values
-    land in their named columns, and a column a member lacks reads null.
-    The head reads are driver-side, 4 KB per file, one file at a time
+    fixes it), its column names and the kinds of its head values; files
+    sharing separator and names are one scan, so a uniform family still
+    plans as a single FileScan. The groups are unioned by name
+    (plan-level, no shuffle): a reordered member's values land in their
+    named columns, and a column a member lacks reads null. A column's
+    type joins its kinds across members, as pandas' concat would. The
+    head reads are driver-side, 4 KB per file, one file at a time
     within a command; ``execute_manifest`` runs commands on a thread
     pool, so the head reads of different commands overlap. At
     object-store scale a large family's own loop is the next thing to
     batch, not the scan design.
     """
     groups: dict[tuple[str, tuple[str, ...]], list[str]] = {}
+    kinds: dict[str, str | None] = {}
     for p in paths:
-        sep, cols = sniff(p, header=cmd.read.header, sep=cmd.read.sep, spark=spark)
+        sep, cols, member = sniff_kinds(p, header=cmd.read.header, sep=cmd.read.sep, spark=spark)
         groups.setdefault((sep, tuple(cols)), []).append(p)
-    return union_by_name(
+        for c, k in member.items():
+            kinds[c] = join_kind(kinds.get(c), k)
+    df = union_by_name(
         read_dsv(spark, members, sep, list(cols), cmd.read.header)
         for (sep, cols), members in groups.items()
     )
+    return df, {c: column_type(k) for c, k in kinds.items()}
 
 
 def _expand_glob(spark: SparkSession, pattern: str) -> list[str]:

@@ -7,6 +7,14 @@ leaves it as its previous version or the complete new one; the whole
 manifest is checked before the first write. Each command's pipeline is
 shuffle-free, so output parallelism equals scan parallelism.
 
+Compiling starts no Spark job, so each target costs one write job. The
+column types were frozen from the head reads; the write job also counts,
+through a :class:`~cirro_annotation_spark.manifest.compiler.TypeCheck`,
+the values a frozen type cannot hold. If it finds any, exactly those
+columns are widened and the staging directory is written once more
+before the swap, so a type that drifts after the head gets pandas'
+type instead of silent nulls.
+
 Commands run concurrently, each compile → publish → read-back on its
 own thread, so one command's driver work (head reads, planning,
 renames) overlaps another's running job. The pool has
@@ -27,7 +35,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
-from cirro_annotation_spark.manifest.compiler import compile_command
+from cirro_annotation_spark.manifest.compiler import TypeCheck, compile_command
 from cirro_annotation_spark.manifest.model import Manifest
 from cirro_annotation_spark.publish import publish
 
@@ -71,8 +79,17 @@ def execute_manifest(
     targets = _targets(manifest, output_directory)
 
     def run(cmd, target: str) -> DataFrame:
-        df = compile_command(spark, cmd, data_directory)
-        publish(target, df.write.parquet)
+        check = TypeCheck()
+        df = compile_command(spark, cmd, data_directory, check)
+
+        def write(staging: str) -> None:
+            nonlocal df
+            df.write.parquet(staging)
+            if check.widen():
+                df = compile_command(spark, cmd, data_directory, check)
+                df.write.mode("overwrite").parquet(staging)
+
+        publish(target, write)
         return spark.read.schema(df.schema).parquet(target)
 
     # Without pinned-thread mode (PYSPARK_PIN_THREAD=false) PySpark has

@@ -5,8 +5,13 @@ engine='python')`` — csv.Sniffer separator detection — lowercases/dedups
 the column names and concatenates the frames by name (run_annotate.py:
 20-28, 48-49). Spark has no sniffer and maps fields to columns by
 position, so :func:`sniff` reads the head of EVERY file once driver-side
-(metadata-scale IO) and decides its separator and column names there;
-:func:`read_dsv` scans files sharing both with an explicit ``sep``.
+(metadata-scale IO) and decides its separator and column names there.
+:func:`sniff_kinds` also classifies each column's head values by pandas'
+rule (bigint, then double, then string; booleans; pandas' default NA
+tokens read as null), so no distributed inference pass is needed:
+:func:`read_dsv` scans files sharing a separator and header with an
+all-string schema, starting no job, and :func:`typed_sql` is the SQL
+text that gives a string column its type.
 """
 
 from __future__ import annotations
@@ -17,10 +22,22 @@ import zlib
 from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 SNIFF_BYTES = 4096
 MAX_HEAD_BYTES = 16 << 20  # the first line must end within this
 _SNIFF_DELIMS = [",", "\t", ";", "|"]
+
+# pandas' default ``na_values`` (pandas._libs.parsers.STR_NA_VALUES):
+# these cells read as null in every column, whatever its type.
+NA_TOKENS = (
+    "", "#N/A", "#N/A N/A", "#NA", "-1.#IND", "-1.#QNAN", "-NaN", "-nan", "1.#IND",
+    "1.#QNAN", "<NA>", "N/A", "NA", "NULL", "NaN", "None", "n/a", "nan", "null",
+)
+_NA_SQL = ", ".join(f"'{t}'" for t in NA_TOKENS)
+_TRUE, _FALSE = ("True", "TRUE", "true"), ("False", "FALSE", "false")
+_INT = re.compile(r"\s*[+-]?\d+\s*")
+_FLOAT = re.compile(r"\s*[+-]?(?:(?:\d+\.?\d*|\.\d+)(?:e[+-]?\d+)?|inf|infinity)\s*", re.I)
 
 
 def _read_head_bytes(path: str, n: int, spark: SparkSession | None = None) -> bytes:
@@ -53,8 +70,8 @@ def _read_head_bytes(path: str, n: int, spark: SparkSession | None = None) -> by
         stream.close()
 
 
-def _read_head(path: str, spark: SparkSession | None = None) -> tuple[bytes, bytes]:
-    """``(head, first non-blank line)`` of ``path``, gz-aware.
+def _read_head(path: str, spark: SparkSession | None = None) -> tuple[bytes, list[bytes]]:
+    """``(head, its complete non-blank lines)`` of ``path``, gz-aware.
 
     Spark takes the header from the first non-blank physical line, so a
     header wider than the sniff window (a matrix with thousands of
@@ -75,9 +92,9 @@ def _read_head(path: str, spark: SparkSession | None = None) -> tuple[bytes, byt
         lines = re.split(rb"\r\n|\r|\n", head)
         if not whole:
             lines.pop()  # may be cut mid-line
-        line = next((ln for ln in lines if ln.strip()), b"" if whole else None)
-        if line is not None:
-            return head, line
+        lines = [ln for ln in lines if ln.strip()]
+        if lines or whole:
+            return head, lines
         if n >= MAX_HEAD_BYTES:
             raise ValueError(f"{path}: the first line does not end within {n} bytes")
         n = min(n * 8, MAX_HEAD_BYTES)
@@ -86,15 +103,26 @@ def _read_head(path: str, spark: SparkSession | None = None) -> tuple[bytes, byt
 def sniff(
     path: str, header: bool = True, sep: str | None = None, spark: SparkSession | None = None
 ) -> tuple[str, list[str]]:
-    """``(separator, normalized column names)`` of one file, from one head
-    read. ``sep=None`` detects the separator from the first SNIFF_BYTES:
-    csv.Sniffer first, then a count-based vote (the Sniffer rejects
-    single-column files the reference happily reads). Names are the ones
-    Spark's CSV header gives (CSVUtils.makeSafeHeader: empty → ``_c<i>``,
-    case-insensitive repeats get ``<i>``), normalized; ``header=False``
-    names the fields ``_c0..``.
+    """``(separator, normalized column names)`` of one file: see
+    :func:`sniff_kinds`."""
+    sep, columns, _ = sniff_kinds(path, header, sep, spark)
+    return sep, columns
+
+
+def sniff_kinds(
+    path: str, header: bool = True, sep: str | None = None, spark: SparkSession | None = None
+) -> tuple[str, list[str], dict[str, str | None]]:
+    """``(separator, normalized column names, {name: kind})`` of one file,
+    from one head read. ``sep=None`` detects the separator from the first
+    SNIFF_BYTES: csv.Sniffer first, then a count-based vote (the Sniffer
+    rejects single-column files the reference happily reads). Names are
+    the ones Spark's CSV header gives (CSVUtils.makeSafeHeader: empty →
+    ``_c<i>``, case-insensitive repeats get ``<i>``), normalized;
+    ``header=False`` names the fields ``_c0..``. A column's kind (see
+    :func:`join_kind`) covers the head's complete data rows; it is None
+    when they hold no value for it.
     """
-    head, line = _read_head(path, spark)
+    head, lines = _read_head(path, spark)
     if sep is None:
         text = head[:SNIFF_BYTES].decode("utf-8", errors="replace")
         try:
@@ -104,14 +132,81 @@ def sniff(
             counts = {d: first.count(d) for d in _SNIFF_DELIMS}
             best = max(counts, key=lambda d: counts[d])
             sep = best if counts[best] > 0 else ","
-    fields = next(csv.reader([line.decode("utf-8-sig", errors="replace")], delimiter=sep), [])
+    # One record per physical line, as Spark's reader (multiLine off) splits them.
+    rows = [
+        next(csv.reader([ln.decode("utf-8-sig", errors="replace")], delimiter=sep), [])
+        for ln in lines
+    ]
+    fields = rows[0] if rows else []
     if not header:
-        return sep, [f"_c{i}" for i in range(len(fields))]
-    repeats = Counter(f.lower() for f in fields if f)
-    return sep, normalize_columns([
-        f"_c{i}" if not f else f"{f}{i}" if repeats[f.lower()] > 1 else f
-        for i, f in enumerate(fields)
-    ])
+        columns = [f"_c{i}" for i in range(len(fields))]
+    else:
+        repeats = Counter(f.lower() for f in fields if f)
+        columns = normalize_columns([
+            f"_c{i}" if not f else f"{f}{i}" if repeats[f.lower()] > 1 else f
+            for i, f in enumerate(fields)
+        ])
+        rows = rows[1:]
+    kinds: dict[str, str | None] = dict.fromkeys(columns)
+    for row in rows:
+        for name, value in zip(columns, row):
+            kinds[name] = join_kind(kinds[name], _kind(value))
+    return sep, columns, kinds
+
+
+def _kind(value: str) -> str:
+    """pandas' ``read_csv`` reading of one cell: ``null`` for an NA token."""
+    if value in NA_TOKENS:
+        return "null"
+    if _INT.fullmatch(value):
+        # pandas leaves an integer past int64 as text (object)
+        return "bigint" if -(1 << 63) <= int(value) < 1 << 63 else "string"
+    if _FLOAT.fullmatch(value):
+        return "double"
+    if value in _TRUE or value in _FALSE:
+        return "boolean"
+    return "string"
+
+
+def join_kind(a: str | None, b: str | None) -> str | None:
+    """The kind of one column holding values of kinds ``a`` and ``b``, as
+    pandas' column inference and ``concat`` decide it: NA cells (``null``)
+    and absent values (None) defer to the rest, bigint widens to double,
+    any other mix is string. Unlike pandas, NA cells do not turn a bigint
+    or boolean column into float or object: they stay nulls of its type.
+    """
+    for x, y in ((a, b), (b, a)):
+        if x is None or x == "null":
+            return x if y is None else y
+    if a == b:
+        return a
+    return "double" if {a, b} == {"bigint", "double"} else "string"
+
+
+def column_type(kind: str | None) -> str:
+    """The type a column of ``kind`` is written as: an all-NA column is
+    double (pandas' float64 NaN column), one without values a string."""
+    return {None: "string", "null": "double"}.get(kind, kind)
+
+
+def quote_name(name: str) -> str:
+    """``name`` as a SQL identifier (backtick-quoted, so dots and spaces stay in the name)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def typed_sql(name: str, type_: str) -> str:
+    """SQL text of the string column ``name`` read as ``type_`` (a
+    :func:`column_type` value): NA tokens are null, and a value the type
+    cannot hold is null too (``try_cast``; booleans take only pandas'
+    spellings)."""
+    col = quote_name(name)
+    if type_ == "boolean":
+        return (
+            f"CASE WHEN {col} IN {_TRUE} THEN true "
+            f"WHEN {col} IN {_FALSE} THEN false END"
+        )
+    text = f"IF({col} IN ({_NA_SQL}), NULL, {col})"
+    return text if type_ == "string" else f"try_cast({text} AS {type_.upper()})"
 
 
 def normalize_name(c: str) -> str:
@@ -143,13 +238,15 @@ def read_dsv(
     spark: SparkSession, paths: str | list[str], sep: str, columns: list[str], header: bool = True
 ) -> DataFrame:
     """Scan files sharing one separator and one header (see :func:`sniff`)
-    as a DataFrame named ``columns``. Spark maps fields by position, so
-    callers group files by ``(sep, columns)`` and union groups by name.
-    Types come from Spark's inferSchema pass (pandas infer_objects
-    parity); gz is transparent to Spark's text source.
+    as a DataFrame of string columns named ``columns``; the explicit
+    schema means no job starts until the frame runs. Spark maps fields by
+    position, so callers group files by ``(sep, columns)`` and union
+    groups by name; types come from :func:`typed_sql` over the kinds the
+    head reads gave. gz is transparent to Spark's text source.
     """
-    reader = spark.read.options(header=header, sep=sep, inferSchema=True, mode="PERMISSIVE")
-    return reader.csv(paths).toDF(*columns)
+    schema = StructType([StructField(c, StringType()) for c in columns])
+    reader = spark.read.schema(schema).options(header=header, sep=sep, mode="PERMISSIVE")
+    return reader.csv(paths)
 
 
 def harvest_columns(spark: SparkSession, root: str, rel_paths: list[str]) -> dict[str, list[str]]:

@@ -170,15 +170,3 @@ def hdf_chunks_to_parquet(
     publish(target, write)
     return spark.read.schema(spark_schema).parquet(target)
 
-
-def hdf_to_parquet(
-    spark: SparkSession,
-    path: str,
-    dataset: str,
-    target: str,
-    chunk_rows: int = 1_000_000,
-) -> DataFrame:
-    """End-to-end HDF5 → Parquet (requires h5py at runtime)."""
-    return hdf_chunks_to_parquet(
-        spark, iter_hdf_chunks(path, dataset, chunk_rows), target
-    )

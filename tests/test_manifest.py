@@ -132,21 +132,22 @@ def test_execute_manifest_writes_parquet(spark, manifest, data_dir, tmp_path):
         assert df.count() > 0
 
 
+def _job_count(spark, group, run):
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_execute_manifest_returns_targets_without_inference_jobs(
     spark, manifest, data_dir, tmp_path
 ):
     """Each returned frame has the schema a fresh read of its target
     gives, and execute_manifest launches exactly the jobs of compiling
     and writing its commands: reading a target back infers nothing."""
-    sc = spark.sparkContext
-
-    def jobs(group, run):
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        try:
-            run()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
 
     def compile_and_write():
         for cmd in manifest.commands:
@@ -155,16 +156,86 @@ def test_execute_manifest_returns_targets_without_inference_jobs(
             )
 
     results = {}
-    direct = jobs("direct-writes", compile_and_write)
-    executed = jobs(
-        "execute-manifest",
+    compiled = _job_count(
+        spark, "compile", lambda: [compile_command(spark, cmd, data_dir) for cmd in manifest.commands]
+    )
+    direct = _job_count(spark, "direct-writes", compile_and_write)
+    executed = _job_count(
+        spark, "execute-manifest",
         lambda: results.update(
             execute_manifest(spark, manifest, data_dir, str(tmp_path / "out"))
         ),
     )
-    assert executed == direct > 0
+    # Types come from the head reads, so compiling starts no job and each
+    # target is one write job.
+    assert compiled == 0
+    assert executed == direct == len(manifest.commands)
     for target, df in results.items():
         assert df.schema == spark.read.parquet(target).schema
+
+
+def test_na_cells_read_as_null_of_the_column_type(spark, tmp_path):
+    """pandas reads its default NA tokens as null and types the column by
+    the other values: an unmelted ``NA`` leaves ``score`` a double and
+    ``ok`` a boolean, and a family member's ``NA`` leaves the family's
+    ``count`` integral (pandas would give float64 and object there; the
+    engine keeps the type)."""
+    from pyspark.sql.types import BooleanType, DoubleType, IntegralType
+
+    from cirro_annotation_spark.manifest import annotate
+
+    root = tmp_path / "data"
+    (root / "std").mkdir(parents=True)
+    (root / "std" / "scores.tsv").write_text("id\tscore\tok\na\t0.5\tTrue\nb\tNA\tNA\n")
+    for g, count in (("A", "10"), ("B", "NA")):
+        (root / "fam" / g).mkdir(parents=True)
+        (root / "fam" / g / "counts.tsv").write_text(f"sgrna\tcount\ns{g}\t{count}\n")
+    _, results = annotate(
+        spark, str(root), str(tmp_path / "out"), variable_templates=["fam/[g]/counts.tsv"]
+    )
+    frames = {os.path.basename(t): df for t, df in results.items()}
+    scores, fam = frames["scores.parquet"], frames["counts.parquet"]
+    assert isinstance(scores.schema["score"].dataType, DoubleType), scores.schema
+    assert isinstance(scores.schema["ok"].dataType, BooleanType), scores.schema
+    assert {tuple(r) for r in scores.collect()} == {("a", 0.5, True), ("b", None, None)}
+    assert isinstance(fam.schema["count"].dataType, IntegralType), fam.schema
+    assert {tuple(r) for r in fam.collect()} == {("sA", 10, "A"), ("sB", None, "B")}
+
+
+def test_types_drifting_after_the_head_are_widened_in_the_write(spark, tmp_path):
+    """Types are frozen from a 4 KB head; a later value the frozen type
+    cannot hold makes the write widen that column as pandas would and
+    rewrite once: ``p.low`` (integers in the head) becomes double, ``lfc``
+    (floats in the head) becomes string, and no value is nulled."""
+    import pandas as pd
+    from pyspark.sql.types import DoubleType, StringType
+
+    from cirro_annotation_spark.manifest.model import Manifest, TransformCommand
+
+    rows = [f"sg{i:04d}\t{i % 3}\t{i / 7:.3f}" for i in range(400)]
+    rows[-2] = "sg0398\t0.05\t1.000"
+    rows[-1] = "sg0399\t2\tn.d."
+    text = "sgrna\tp.low\tlfc\n" + "\n".join(rows) + "\n"
+    assert text.index("0.05") > 4096 and text.index("n.d.") > 4096
+    data = tmp_path / "data"
+    data.mkdir()
+    (data / "rra.txt").write_text(text)
+    manifest = Manifest(commands=(TransformCommand(source="$data_directory/rra.txt", target="rra.parquet"),))
+    results = {}
+    jobs = _job_count(
+        spark, "drift", lambda: results.update(
+            execute_manifest(spark, manifest, str(data), str(tmp_path / "out"))
+        )
+    )
+    assert jobs == 2  # the write, and one rewrite with the widened types
+    (df,) = results.values()
+    assert isinstance(df.schema["p.low"].dataType, DoubleType), df.schema
+    assert isinstance(df.schema["lfc"].dataType, StringType), df.schema
+    expected = pd.read_csv(data / "rra.txt", sep=None, engine="python")
+    assert (expected.dtypes["p.low"], expected.dtypes["lfc"]) == ("float64", "object")
+    got = sorted(tuple(r) for r in df.collect())
+    assert got == sorted(expected.itertuples(index=False, name=None))
+    assert all(v is not None for row in got for v in row)
 
 
 def test_manifest_json_roundtrip(manifest):

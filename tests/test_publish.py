@@ -161,8 +161,8 @@ def test_failed_command_leaves_other_targets_published(spark, tmp_path, monkeypa
     write_inputs(2)
     compile_command = executor.compile_command
 
-    def failing(spark, cmd, data_directory):
-        df = compile_command(spark, cmd, data_directory)
+    def failing(spark, cmd, data_directory, check=None):
+        df = compile_command(spark, cmd, data_directory, check)
         if cmd.target != "b.parquet":
             return df
         return df.withColumn("boom", F.raise_error(F.concat(F.lit("boom "), F.col("name"))))

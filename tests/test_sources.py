@@ -168,3 +168,25 @@ def test_harvest_columns_launches_no_spark_job(tmp_path):
         "a.tsv": ["id", "score"],
         "b.csv": ["x", "y"],
     }
+
+
+def test_sniff_kinds_reads_head_values_by_the_pandas_rule(tmp_path):
+    """Kinds of the head's data rows as pd.read_csv types them: NA tokens
+    defer to the other values, integers past int64 and a bool/number mix
+    are text, and a column with no values has no kind."""
+    from cirro_annotation_spark.sources.dsv import column_type, sniff_kinds
+
+    p = tmp_path / "k.tsv"
+    p.write_text(
+        "i\tf\tb\tna\tbig\tmix\tempty\n"
+        "1\t1e5\tTrue\tNA\t9223372036854775808\tTrue\t\n"
+        " 2 \tinf\tfalse\tnan\t1\t1\t\n"
+        "NULL\t.5\tN/A\t\t2\t\t\n"
+    )
+    sep, cols, kinds = sniff_kinds(str(p))
+    assert sep == "\t" and cols == list(kinds)
+    assert kinds == {
+        "i": "bigint", "f": "double", "b": "boolean", "na": "null",
+        "big": "string", "mix": "string", "empty": "null",
+    }
+    assert [column_type(k) for k in ("null", None, "bigint")] == ["double", "string", "bigint"]
