@@ -75,7 +75,8 @@ def _read_head(path: str, spark: SparkSession | None = None) -> tuple[bytes, lis
 
     Spark takes the header from the first non-blank physical line, so a
     header wider than the sniff window (a matrix with thousands of
-    sample columns) is read on in 8x steps up to MAX_HEAD_BYTES; a first
+    sample columns) is read on in 8x steps up to MAX_HEAD_BYTES, until
+    a second line (a data row, for the column kinds) ends too; a first
     line that still does not end raises instead of being cut.
     """
     n = SNIFF_BYTES
@@ -93,7 +94,7 @@ def _read_head(path: str, spark: SparkSession | None = None) -> tuple[bytes, lis
         if not whole:
             lines.pop()  # may be cut mid-line
         lines = [ln for ln in lines if ln.strip()]
-        if lines or whole:
+        if len(lines) >= 2 or whole or (lines and n >= MAX_HEAD_BYTES):
             return head, lines
         if n >= MAX_HEAD_BYTES:
             raise ValueError(f"{path}: the first line does not end within {n} bytes")

@@ -173,7 +173,7 @@ def test_harvest_columns_launches_no_spark_job(tmp_path):
 def test_sniff_kinds_reads_head_values_by_the_pandas_rule(tmp_path):
     """Kinds of the head's data rows as pd.read_csv types them: NA tokens
     defer to the other values, integers past int64 and a bool/number mix
-    are text, and a column with no values has no kind."""
+    are text, and an all-NA column is double."""
     from cirro_annotation_spark.sources.dsv import column_type, sniff_kinds
 
     p = tmp_path / "k.tsv"
@@ -190,3 +190,7 @@ def test_sniff_kinds_reads_head_values_by_the_pandas_rule(tmp_path):
         "big": "string", "mix": "string", "empty": "null",
     }
     assert [column_type(k) for k in ("null", None, "bigint")] == ["double", "string", "bigint"]
+    # A first data row longer than the 4 KB window is read on for.
+    wide = tmp_path / "w.tsv"
+    wide.write_text("id\tpad\tv\n1\t" + "x" * 5000 + "\t0.5\n")
+    assert sniff_kinds(str(wide))[2] == {"id": "bigint", "pad": "string", "v": "double"}
