@@ -94,6 +94,7 @@ class TypeCheck:
         self._observation: Observation | None = None
 
     def observe(self, df: DataFrame, types: dict[str, str]) -> DataFrame:
+        """``df`` (string columns) observing the cast failures of ``types``."""
         if self._observation is not None:
             return df
         self._checked = [(c, t) for c, t in types.items() if t in _WIDENINGS]
