@@ -1,9 +1,8 @@
-"""Catalog: load the test tables as temp views.
+"""Catalog: where a test table lives and how one is read.
 
 Mirrors the reference's "dataset = directory of files, one frame per
-file" model (run_annotate.py:54-66, 69-101) as a Spark catalog namespace:
-one DataFrame per parquet table, registered as a temp view so both the
-DataFrame API and spark.sql can address it.
+file" model (run_annotate.py:54-66, 69-101): one DataFrame per parquet
+table, with its ``ts`` column normalized whatever the file stores.
 """
 
 from __future__ import annotations
@@ -11,22 +10,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -112,20 +95,3 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
         cache.clear()
     cache[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Read every table under ``sf_dir`` and register temp views.
-
-    Plain ``spark.read.parquet`` keeps the scan lazy and column-prunable;
-    no caching here — callers decide what is hot.
-    """
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = table_path(sf_dir, name)
-        if not os.path.exists(path):
-            continue
-        df = read_table(spark, path)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

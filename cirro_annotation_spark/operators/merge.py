@@ -264,36 +264,3 @@ def read_table_version(
             f"snapshots at {base_dir}"
         )
     return spark.read.option("mergeSchema", "true").parquet(versions[version])
-
-
-def vacuum_table_versions(base_dir: str, keep_last: int) -> dict:
-    """Retention vacuum — the snapshot lifecycle's terminal step (the
-    Delta VACUUM / Iceberg expire_snapshots shape): drop every retained
-    snapshot older than the newest ``keep_last``, never the live table.
-
-    Hard-link economics make this precise: a data file shared with the
-    live table (or a younger snapshot) has link count > 1 and its bytes
-    survive; only bytes whose last reference lived in an expired
-    snapshot are reclaimed. Returns {'removed_snapshots',
-    'files_deleted', 'bytes_reclaimed'} where bytes_reclaimed counts
-    exactly the files whose final link was in an expired snapshot.
-    """
-    if keep_last < 0:
-        raise ValueError(f"keep_last must be >= 0, got {keep_last}")
-    versions = list_table_versions(base_dir)
-    expired = versions[: max(0, len(versions) - keep_last)]
-    files_deleted = 0
-    bytes_reclaimed = 0
-    for snap in expired:
-        for name in os.listdir(snap):
-            path = os.path.join(snap, name)
-            st = os.stat(path)
-            if st.st_nlink == 1:
-                bytes_reclaimed += st.st_size
-            files_deleted += 1
-        shutil.rmtree(snap)
-    return {
-        "removed_snapshots": len(expired),
-        "files_deleted": files_deleted,
-        "bytes_reclaimed": bytes_reclaimed,
-    }

@@ -3,15 +3,30 @@
 Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default 32); the same
 config block is what we would ship to a 1000-executor cluster, minus the
 master/memory lines which are deployment-specific.
+
+A driver JVM that this process launches starts from a dynamic class-data
+sharing archive (JDK ``-XX:SharedArchiveFile``) kept in the user's cache,
+``$XDG_CACHE_HOME/cirro_annotation_spark`` (``~/.cache/...`` by default):
+the JVM maps the Spark classes it loaded last time instead of parsing and
+verifying them again, which cuts session set-up (``get_spark`` and the
+first job) from about 10 s to about 6 s. The first process per JDK and Spark install has no archive
+yet; its JVM writes one when it exits (:func:`_publish_archive`), and only
+an archive whose JVM exited 0 is ever put where the next launch maps it.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
 import re
-from contextlib import contextmanager
+import shutil
+import subprocess
+from contextlib import contextmanager, suppress
 from functools import lru_cache
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 
@@ -59,6 +74,10 @@ def default_parallelism() -> int:
 def get_spark(app_name: str = "cirro_annotation_spark") -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
+    - When this call launches the driver JVM, the JVM starts from the
+      class-data archive in the user's cache, or writes that archive at
+      exit when there is none yet (see :func:`_launch`). Nothing changes
+      in the session: the archive only holds parsed JDK and Spark classes.
     - AQE on: runtime partition coalescing + skew-join handling, the
       scale levers that matter at 100 TB.
     - shuffle.partitions = local cores (cluster deployments override to
@@ -91,7 +110,7 @@ def get_spark(app_name: str = "cirro_annotation_spark") -> SparkSession:
         # 100 TB this skips row groups the join would discard anyway.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     )
-    spark = builder.getOrCreate()
+    spark = _launch(builder)
     spark.sparkContext.setLogLevel("WARN")
     # Runtime-settable confs live in ONE place: tune_existing. The
     # builder block above carries only what must be set before the JVM
@@ -101,6 +120,153 @@ def get_spark(app_name: str = "cirro_annotation_spark") -> SparkSession:
     # SPARK_GRAFT_MAX_PARTITION_BYTES knob was silently ignored
     # (code-review r15: the two conf blocks had already drifted).
     return tune_existing(spark)
+
+
+_UNQUOTABLE = re.compile(r"[\s'\"\\:]")  # breaks a JVM option string or a classpath
+
+
+def _cache_dir() -> str:
+    """Where the class-data archive lives: the XDG user cache."""
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(base, "cirro_annotation_spark")
+
+
+def _archive_path() -> str | None:
+    """``<cache>/spark-<key>.jsa``: ``key`` hashes the ``java`` binary
+    spark-submit runs and the Spark ``jars/`` listing (names and sizes),
+    so a JDK or Spark upgrade gets a new archive. None without a java."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if not java or not os.path.isfile(java):
+        return None
+    key = hashlib.sha256(os.path.realpath(java).encode())
+    with os.scandir(os.path.join(_find_spark_home(), "jars")) as it:
+        for e in sorted(it, key=lambda e: e.name):
+            key.update(f"\0{e.name}\0{e.stat().st_size}".encode())
+    return os.path.join(_cache_dir(), f"spark-{key.hexdigest()[:16]}.jsa")
+
+
+def _cds_launch() -> tuple[str, str, str | None] | None:
+    """``(extraJavaOptions, conf dir, temp archive)`` when the driver JVM
+    this process is about to launch can use class-data sharing, else None
+    (a plain start, exactly as without an archive).
+
+    JDK 17 refuses to dump when a non-empty directory is on the classpath,
+    and spark-submit puts the conf dir first, so the JVM launches with an
+    empty conf dir from the cache. That is the same launch only while the
+    real conf dir holds nothing but ``*.template`` files, which Spark never
+    reads, and nothing else joins the classpath (a Hadoop or YARN conf
+    dir, ``SPARK_DIST_CLASSPATH``).
+    ``temp archive`` is where the JVM dumps at exit when no archive exists.
+    """
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None  # this process does not launch the JVM
+    if any(os.environ.get(v) for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")):
+        return None
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    try:
+        if any(not n.endswith(".template") for n in os.listdir(conf_dir)):
+            return None
+    except OSError:
+        pass  # no conf dir: nothing Spark would read
+    try:
+        archive = _archive_path()
+        if archive is None or _UNQUOTABLE.search(archive):
+            return None
+        empty_conf = os.path.join(_cache_dir(), "empty-conf")
+        os.makedirs(empty_conf, exist_ok=True)
+        if os.listdir(empty_conf) or not os.access(_cache_dir(), os.W_OK):
+            return None
+    except OSError:
+        return None  # the cache cannot be written
+    # cds=off: the JVM logs CDS warnings (skipped classes, a stale
+    # archive) to the driver's stdout, which belongs to the caller.
+    if os.path.isfile(archive):
+        return f"-XX:SharedArchiveFile={archive} -Xshare:auto -Xlog:cds=off", empty_conf, None
+    tmp = f"{archive}.{os.getpid()}.tmp"
+    return f"-XX:ArchiveClassesAtExit={tmp} -Xlog:cds=off", empty_conf, tmp
+
+
+def _launch(builder: SparkSession.Builder) -> SparkSession:
+    """``builder.getOrCreate()``, launching the driver JVM from the
+    class-data archive (or dumping one at exit) when :func:`_cds_launch`
+    allows it. ``SPARK_CONF_DIR`` is changed only for the launch."""
+    launch = _cds_launch()
+    if launch is None:
+        return builder.getOrCreate()
+    options, conf_dir, tmp = launch
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        spark = builder.config("spark.driver.extraJavaOptions", options).getOrCreate()
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    if tmp is not None:
+        atexit.register(_publish_archive, SparkContext._gateway.proc, tmp)
+    return spark
+
+
+def _publish_archive(proc, tmp: str) -> None:
+    """At interpreter exit: stop the session and let the JVM exit (it
+    ends when the pipe to its stdin closes), so that it dumps its archive
+    to ``tmp``, then :func:`_publish` it by the JVM's exit code."""
+    if not tmp.endswith(f".{os.getpid()}.tmp"):
+        return  # a forked child: the JVM belongs to its parent
+    sc = SparkContext._active_spark_context
+    try:
+        if sc is not None:
+            sc.stop()
+    except Exception:
+        pass  # the JVM is already gone; its exit code decides below
+    proc.stdin.close()
+    try:
+        code = proc.wait(timeout=300)  # a dump takes about 10 s
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        code = None
+    _publish(tmp, code)
+
+
+def _publish(tmp: str, code: int | None) -> None:
+    """Move the archive dumped to ``tmp`` into place only if its JVM
+    exited 0; else delete it. A JVM that failed or was killed mid-dump
+    leaves at most a partial temp file, which is never mapped: a
+    truncated archive at the mapped path would crash the next JVM."""
+    if code == 0 and os.path.isfile(tmp):
+        archive = tmp.rsplit(".", 2)[0]
+        os.replace(tmp, archive)
+        _clean_cache(archive)
+    else:
+        with suppress(OSError):
+            os.remove(tmp)
+
+
+def _clean_cache(keep: str) -> None:
+    """Delete the archives of other keys (an upgraded JDK or Spark) and
+    the temp files of processes that no longer run."""
+    folder = os.path.dirname(keep)
+    for name in os.listdir(folder):
+        path = os.path.join(folder, name)
+        if path == keep or not name.startswith("spark-"):
+            continue
+        if name.endswith(".jsa") or (
+            name.endswith(".tmp") and not _pid_alive(name.rsplit(".", 2)[-2])
+        ):
+            with suppress(OSError):
+                os.remove(path)
+
+
+def _pid_alive(pid: str) -> bool:
+    try:
+        os.kill(int(pid), 0)
+    except (ValueError, ProcessLookupError):
+        return False
+    except PermissionError:
+        pass  # another user's process
+    return True
 
 
 NANOS_CONF_KEY = "spark.sql.legacy.parquet.nanosAsLong"

@@ -38,6 +38,8 @@ _NA_SQL = ", ".join(f"'{t}'" for t in NA_TOKENS)
 _TRUE, _FALSE = ("True", "TRUE", "true"), ("False", "FALSE", "false")
 _INT = re.compile(r"\s*[+-]?\d+\s*")
 _FLOAT = re.compile(r"\s*[+-]?(?:(?:\d+\.?\d*|\.\d+)(?:e[+-]?\d+)?|inf|infinity)\s*", re.I)
+# The same grammar as a Spark SQL (Java regex) literal, for typed_sql.
+_FLOAT_SQL = "'(?i)^(?:" + _FLOAT.pattern.replace("\\", "\\\\") + ")$'"
 
 
 def _read_head_bytes(path: str, n: int, spark: SparkSession | None = None) -> bytes:
@@ -199,14 +201,18 @@ def typed_sql(name: str, type_: str) -> str:
     """SQL text of the string column ``name`` read as ``type_`` (a
     :func:`column_type` value): NA tokens are null, and a value the type
     cannot hold is null too (``try_cast``; booleans take only pandas'
-    spellings)."""
+    spellings, doubles only pandas' float grammar: ``try_cast`` also
+    reads Java's suffixed ``1.5d`` and ``2F``, which pandas keeps as text)."""
     col = quote_name(name)
     if type_ == "boolean":
         return (
             f"CASE WHEN {col} IN {_TRUE} THEN true "
             f"WHEN {col} IN {_FALSE} THEN false END"
         )
-    text = f"IF({col} IN ({_NA_SQL}), NULL, {col})"
+    if type_ == "double":  # no NA token matches the float grammar
+        text = f"IF({col} RLIKE {_FLOAT_SQL}, {col}, NULL)"
+    else:
+        text = f"IF({col} IN ({_NA_SQL}), NULL, {col})"
     return text if type_ == "string" else f"try_cast({text} AS {type_.upper()})"
 
 

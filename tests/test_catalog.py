@@ -69,18 +69,3 @@ def test_rows_only_floor_is_the_documented_four():
         "must ship an oracle, or this documented floor (and README) "
         "must be amended deliberately"
     )
-
-
-def test_load_tables_registers_views(spark, sf_dir):
-    """The temp-view catalog surface (reference dataset-directory model):
-    every present table registers, spark.sql can address it, and the
-    frames go through read_table's ts normalization."""
-    from cirro_annotation_spark.catalog import load_tables
-
-    out = load_tables(spark, sf_dir)
-    assert {"region", "events", "documents"} <= set(out)
-    n = spark.sql("SELECT count(*) AS n FROM region").first()["n"]
-    assert n == out["region"].count() > 0
-    assert dict(out["events"].dtypes)["ts"] == "timestamp"
-    for name in out:
-        spark.catalog.dropTempView(name)

@@ -238,6 +238,32 @@ def test_types_drifting_after_the_head_are_widened_in_the_write(spark, tmp_path)
     assert all(v is not None for row in got for v in row)
 
 
+def test_java_float_suffix_after_the_head_widens_to_string(spark, tmp_path):
+    """Spark's ``try_cast`` reads ``1.5d`` (Java's double suffix) as a
+    number; pandas keeps the column as text. A float column whose later
+    row holds one is written as string, with pandas' values."""
+    import pandas as pd
+    from pyspark.sql.types import StringType
+
+    from cirro_annotation_spark.manifest.model import Manifest, TransformCommand
+
+    rows = [f"sg{i:04d}\t{i / 7:.3f}" for i in range(600)]
+    rows[-1] = "sg0599\t1.5d"
+    text = "sgrna\tlfc\n" + "\n".join(rows) + "\n"
+    assert text.index("1.5d") > 4096
+    data = tmp_path / "data"
+    data.mkdir()
+    (data / "rra.txt").write_text(text)
+    manifest = Manifest(commands=(TransformCommand(source="$data_directory/rra.txt", target="rra.parquet"),))
+    (df,) = execute_manifest(spark, manifest, str(data), str(tmp_path / "out")).values()
+    assert isinstance(df.schema["lfc"].dataType, StringType), df.schema
+    expected = pd.read_csv(data / "rra.txt", sep=None, engine="python")
+    assert expected.dtypes["lfc"] == "object"
+    assert sorted(tuple(r) for r in df.collect()) == sorted(
+        expected.itertuples(index=False, name=None)
+    )
+
+
 def test_manifest_json_roundtrip(manifest):
     """to_json → load_manifest is lossless for the executed fields."""
     loaded = load_manifest(manifest.to_json())

@@ -224,78 +224,6 @@ def test_merge_validated_by_table_diff(spark, tmp_path):
     assert got == want
 
 
-def test_vacuum_expires_oldest_keeps_live_and_shared_bytes(spark, tmp_path):
-    """Three merges with keep_old=True -> three retained snapshots;
-    vacuum(keep_last=1) removes the two oldest, keeps the newest
-    snapshot and the live table byte-identical, and reclaims ONLY
-    bytes whose last hard link lived in an expired snapshot."""
-    import os
-
-    from cirro_annotation_spark.operators.merge import (
-        list_table_versions,
-        merge_into_parquet,
-        read_table_version,
-        vacuum_table_versions,
-    )
-
-    base = str(tmp_path / "t")
-    spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    ).coalesce(2).write.parquet(base)
-    for i in range(3):
-        src = spark.range(5).select(
-            (F.col("id") + i * 5).alias("k"),
-            F.lit(1000 + i).alias("v"),
-        )
-        merge_into_parquet(spark, base, src, key="k", keep_old=True)
-    assert len(list_table_versions(base)) == 3
-    live_before = sorted(
-        (r["k"], r["v"]) for r in spark.read.parquet(base).collect()
-    )
-    newest = list_table_versions(base)[-1]
-    newest_rows = sorted(
-        (r["k"], r["v"])
-        for r in spark.read.parquet(newest).collect()
-    )
-
-    stats = vacuum_table_versions(base, keep_last=1)
-    assert stats["removed_snapshots"] == 2
-    assert list_table_versions(base) == [newest]
-    # live table and surviving snapshot untouched
-    assert sorted(
-        (r["k"], r["v"]) for r in spark.read.parquet(base).collect()
-    ) == live_before
-    assert sorted(
-        (r["k"], r["v"]) for r in read_table_version(spark, base, 0).collect()
-    ) == newest_rows
-    # idempotent: nothing further to reclaim
-    again = vacuum_table_versions(base, keep_last=1)
-    assert again["removed_snapshots"] == 0 and again["bytes_reclaimed"] == 0
-
-
-def test_vacuum_keep_zero_drops_all_snapshots_but_never_live(spark, tmp_path):
-    from cirro_annotation_spark.operators.merge import (
-        list_table_versions,
-        merge_into_parquet,
-        vacuum_table_versions,
-    )
-
-    base = str(tmp_path / "t0")
-    spark.range(10).select(
-        F.col("id").alias("k"), F.col("id").alias("v")
-    ).write.parquet(base)
-    merge_into_parquet(
-        spark,
-        base,
-        spark.range(3).select(F.col("id").alias("k"), F.lit(9).alias("v")),
-        key="k",
-        keep_old=True,
-    )
-    vacuum_table_versions(base, keep_last=0)
-    assert list_table_versions(base) == []
-    assert spark.read.parquet(base).count() == 10
-
-
 def test_merge_schema_evolution_widens_table(spark, tmp_path):
     """A source bringing a NEW column widens the table: matched rows
     carry the value, kept rows in rewritten files and rows in
