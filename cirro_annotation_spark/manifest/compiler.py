@@ -3,10 +3,15 @@
 Pipeline per command (the reference's declared execution contract,
 SURVEY.md §3.2):
 
-    glob(source) → read DSV members by name (kwargs.read) as strings →
-    token columns from path regex → project+rename to cols, each column
-    cast to the type its members' head reads gave → melt if specified →
-    caller sinks to Parquet.
+    list the source's members → read DSV members by name (kwargs.read)
+    as strings → token columns from path regex → project+rename to cols,
+    each column cast to the type its members' head reads gave → melt if
+    specified → caller sinks to Parquet.
+
+Standard files and families resolve by the planner's one rule
+(:func:`template_members`): one glob listing per source, then the
+template's regex over paths relative to the data directory, which picks
+the members and extracts the tokens. No pattern holds the data directory.
 
 Scale design: files sharing a separator and a header are ONE multi-path
 scan, not N per-file jobs — tokens come from ``regexp_extract(
@@ -26,6 +31,7 @@ from __future__ import annotations
 import glob as globmod
 import os
 import re
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +39,7 @@ from pyspark.sql import functions as F
 from cirro_annotation_spark.manifest.model import TOKEN_RE, TransformCommand, extract_tokens
 from cirro_annotation_spark.operators.reshape import melt as melt_op
 from cirro_annotation_spark.operators.reshape import union_by_name
+from cirro_annotation_spark.sources.discovery import escape_glob
 from cirro_annotation_spark.sources.dsv import (
     column_type,
     join_kind,
@@ -46,33 +53,36 @@ from cirro_annotation_spark.sources.dsv import (
 
 # The types a typed column may widen to, tried in order before string.
 _WIDENINGS = {"bigint": ("bigint", "double"), "double": ("double",), "boolean": ("boolean",)}
+# What every manifest source starts with (run_annotate.py:190).
+_ROOT = "$data_directory/"
 
 
 def token_template_to_regex(template: str) -> str:
-    """``[tok]`` template → named-group regex, exactly the reference's
-    substitution semantics (run_annotate.py:134-136): each token matches
-    one path segment ``([^/]+)``; the rest of the template is literal."""
+    """``[tok]`` template → regex, one positional group per token in order
+    (run_annotate.py:134-136): each token one path segment ``([^/]+)``,
+    the rest literal, read alike by Python and Java. A family also
+    matches its ``.gz`` members (run_annotate.py:259 ext list); a token
+    named twice is rejected."""
     literals = TOKEN_RE.split(template)[::2]
-    groups = [f"(?P<{tok}>[^/]+)" for tok in extract_tokens(template)]
-    return "".join(re.escape(lit) + g for lit, g in zip(literals, groups)) + re.escape(literals[-1])
+    regex = "([^/]+)".join(map(re.escape, literals))
+    return regex + r"(?:\.gz)?" if extract_tokens(template) else regex
 
 
-def token_template_to_glob(template: str) -> str:
-    return TOKEN_RE.sub("*", template)
+def token_template_to_glob(template: str, escape: Callable[[str], str] = globmod.escape) -> str:
+    """The glob that lists what :func:`token_template_to_regex` can match:
+    each token a ``*``, the literals escaped by ``escape`` for the glob
+    dialect that lists, and for a family a trailing ``*`` for ``.gz``."""
+    literals = TOKEN_RE.split(template)[::2]
+    glob = "*".join(map(escape, literals))
+    return glob + "*" if len(literals) > 1 else glob
 
 
-def java_safe_regex(regex: str) -> str:
-    """Python named groups ``(?P<name>…)`` are a Python-only spelling —
-    Java regex (what regexp_extract runs) rejects them with
-    INVALID_PARAMETER_VALUE.PATTERN. Token extraction is positional
-    (the regexp_extract group index), so plain groups carry the same information."""
-    return re.sub(r"\(\?P<\w+>", "(", regex)
-
-
-def substitute_data_directory(source: str, data_directory: str) -> str:
-    """The manifest stores ``$data_directory``-anchored sources
-    (run_annotate.py:190); execution substitutes the real root."""
-    return source.replace("$data_directory", data_directory.rstrip("/"))
+def template_members(template: str, paths: Iterable[str]) -> list[str]:
+    """The ``paths`` (relative to the data directory) that ``template``
+    picks, sorted: the one member rule, which the planner applies to the
+    walked tree and :func:`compile_command` to a source's listing."""
+    regex = re.compile(token_template_to_regex(template))
+    return sorted(p for p in paths if regex.fullmatch(p))
 
 
 class TypeCheck:
@@ -129,22 +139,15 @@ def compile_command(
 ) -> DataFrame:
     """Compile one hot.Parquet command to a lazy DataFrame; no Spark job
     starts. ``check`` is the executor's write-path type check."""
-    source = substitute_data_directory(cmd.source, data_directory)
-    tokens = extract_tokens(source)
-
+    if not cmd.source.startswith(_ROOT):
+        raise ValueError(f"{cmd.source!r}: a manifest source starts with {_ROOT}")
+    template = cmd.source[len(_ROOT):]
+    tokens = cmd.tokens
+    members = template_members(template, _list(spark, data_directory, template))
+    if not members:
+        raise FileNotFoundError(f"no files match {template} under {data_directory}")
+    df, types = _read_members(spark, [os.path.join(data_directory, m) for m in members], cmd)
     if tokens:
-        pattern = token_template_to_glob(source)
-        # gz is transparent (reference ext list includes .gz variants,
-        # run_annotate.py:259) — accept it as an optional suffix.
-        regex = token_template_to_regex(source) + r"(?:\.gz)?"
-        matched = sorted(
-            p
-            for p in _expand_glob(spark, pattern) + _expand_glob(spark, pattern + ".gz")
-            if re.fullmatch(regex, p)
-        )
-        if not matched:
-            raise FileNotFoundError(f"no files match {pattern}")
-        df, types = _read_members(spark, matched, cmd)
         # input_file_name() is a percent-ENCODED file: URI; the regex is
         # built from the raw template, so match against the decoded path
         # or any space/special char in the tree silently yields ''
@@ -155,20 +158,13 @@ def compile_command(
         decoded = F.url_decode(
             F.regexp_replace(F.input_file_name(), r"\+", "%2B")
         )
-        # input_file_name() is a file: URL; anchor the path regex at its
-        # end. Group i is the i-th token (groups are ordered by position).
-        url_regex = f".*{java_safe_regex(regex)}$"
+        # Anchored at the '/' before the template and at the end, the
+        # regex sees only the relative path (a token never spans a '/').
+        # Group i is the i-th token.
+        regex = f"/{token_template_to_regex(template)}$"
         df = df.withColumns(
-            {tok: F.regexp_extract(decoded, url_regex, i) for i, tok in enumerate(tokens, 1)}
+            {tok: F.regexp_extract(decoded, regex, i) for i, tok in enumerate(tokens, 1)}
         )
-    else:
-        # Local-only existence pre-check: a URI-scheme source (s3a://,
-        # gs://, abfss://) is handed straight to the reader — the dsv
-        # sniffer and spark.read both speak Hadoop FS, and os.path.exists
-        # would wrongly reject every cloud path (code-review r15).
-        if "://" not in source and not os.path.exists(source):
-            raise FileNotFoundError(source)
-        df, types = _read_members(spark, [source], cmd)
 
     # Projection + rename with dictionary metadata (run_annotate.py:183-184,
     # 194, 233): keep only dictionary-resolved columns (plus tokens),
@@ -185,7 +181,7 @@ def compile_command(
     if idx in names:
         names = [idx, *(c for c in names if c != idx)]
         meta[idx] = {**meta.get(idx, {}), "index": True}
-    # Normalize the manifest's value_cols the same way sniff normalized
+    # Normalize the manifest's value_cols the same way the head read normalized
     # the frame's columns: a mixed-case manifest name would otherwise
     # stay an id while Spark's case-insensitive resolver still unpivots
     # it (code-review r15). Melted values are read as double, pandas
@@ -264,16 +260,18 @@ def _read_members(
     return df, {c: column_type(k) for c, k in kinds.items()}
 
 
-def _expand_glob(spark: SparkSession, pattern: str) -> list[str]:
-    """Glob expansion that follows the source's filesystem: plain paths
-    use Python glob; URI-scheme patterns (s3a://, gs://, abfss://) go
-    through Hadoop's FileSystem.globStatus — glob.glob returns [] for
-    them, which used to read as 'no files match' (code-review r15)."""
-    if "://" not in pattern:
-        return globmod.glob(pattern)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(pattern)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    statuses = fs.globStatus(hpath)
-    return [] if statuses is None else [str(st.getPath()) for st in statuses]
-
+def _list(spark: SparkSession, data_directory: str, template: str) -> list[str]:
+    """The paths, relative to ``data_directory``, that the glob of
+    ``template`` lists: Python's glob for a local root, Hadoop's
+    ``globStatus`` for a URI root (s3a://, gs://, file://)."""
+    if "://" not in data_directory:
+        return globmod.glob(
+            token_template_to_glob(template), root_dir=data_directory, include_hidden=True
+        )
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    root = data_directory.rstrip("/")
+    fs = path(root).getFileSystem(spark._jsc.hadoopConfiguration())
+    # Listed paths come back as Hadoop qualifies them (file:/x for file:///x).
+    prefix = str(fs.makeQualified(path(root))).rstrip("/") + "/"
+    pattern = path(f"{escape_glob(root)}/{token_template_to_glob(template, escape_glob)}")
+    return [str(st.getPath()).removeprefix(prefix) for st in fs.globStatus(pattern) or ()]

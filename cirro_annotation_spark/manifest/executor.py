@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from cirro_annotation_spark.manifest.compiler import TypeCheck, compile_command
 from cirro_annotation_spark.manifest.model import Manifest
 from cirro_annotation_spark.publish import publish
+from cirro_annotation_spark.sources.discovery import escape_glob
 
 
 def _targets(manifest: Manifest, output_directory: str) -> list[str]:
@@ -90,7 +91,7 @@ def execute_manifest(
                 df.write.mode("overwrite").parquet(staging)
 
         publish(target, write)
-        return spark.read.schema(df.schema).parquet(target)
+        return spark.read.schema(df.schema).parquet(escape_glob(target))
 
     # Without pinned-thread mode (PYSPARK_PIN_THREAD=false) PySpark has
     # no per-thread properties to copy and returns the session itself;

@@ -1,4 +1,4 @@
-"""Manifest-level pre-pass: drop the commands that resolved to nothing.
+"""Manifest-level pre-pass: drop the commands whose sources have no columns.
 
 The reference planned an optimize step but never built it —
 ``run_optimize.py:1-5`` is a ``print("HI")`` stub wired to nothing
@@ -19,9 +19,11 @@ from cirro_annotation_spark.manifest.model import Manifest
 
 
 def prune_empty_commands(manifest: Manifest) -> Manifest:
-    """Drop commands whose planner resolved NO columns and that carry no
-    tokens and no melt — the dictionary matched nothing, so the command
-    would write an untyped full copy nobody asked for.
+    """Drop commands with no cols, no tokens and no melt. The planner
+    keeps every header column, known to the dictionary or not
+    (``planner._resolve_cols``), so a planned command has no cols only
+    when its source's header gave none (an empty file): it would write
+    a target without columns.
 
     A command with a melt is real work even with empty cols (the
     compiler treats empty cols as keep-all), so it survives; and every
@@ -34,8 +36,8 @@ def prune_empty_commands(manifest: Manifest) -> Manifest:
             dropped.append(c.target)
     if dropped:
         warnings.warn(
-            "prune_empty_commands dropped manifest targets with no "
-            f"resolved columns: {dropped} (write them explicitly with cols)",
+            "prune_empty_commands dropped manifest targets whose sources "
+            f"have no columns: {dropped}",
             stacklevel=2,
         )
     return Manifest(commands=tuple(kept))

@@ -17,7 +17,7 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import SparkSession
 
-from cirro_annotation_spark.manifest.compiler import token_template_to_regex
+from cirro_annotation_spark.manifest.compiler import template_members
 from cirro_annotation_spark.manifest.fields import (
     FieldsDictionary,
     load_fields_dictionary,
@@ -42,10 +42,7 @@ def group_variable_files(
     remaining = list(files)
     groups: dict[str, list[str]] = {}
     for template in templates:
-        # gz is a transparent suffix (run_annotate.py:259 ext list).
-        regex = re.compile(token_template_to_regex(template) + r"(?:\.gz)?$")
-        matched = [f for f in remaining if regex.match(f)]
-        groups[template] = sorted(matched)
+        matched = groups[template] = template_members(template, remaining)
         taken = set(matched)
         remaining = [f for f in remaining if f not in taken]
     return groups, remaining

@@ -13,6 +13,7 @@ manifest/catalog listing — the planner accepts any iterable of paths.
 from __future__ import annotations
 
 import os
+import re
 
 EXTENSIONS = tuple(e + gz for e in (".txt", ".csv", ".tsv") for gz in ("", ".gz"))
 
@@ -27,3 +28,10 @@ def discover_files(root: str) -> list[str]:
                 out.append(os.path.relpath(full, root))
     out.sort()
     return out
+
+
+def escape_glob(path: str) -> str:
+    """``path`` as a Hadoop glob that matches only itself. Spark's reader
+    treats every path it is given as a glob, so a literal ``[`` or ``{``
+    in a directory name would otherwise select other files, or none."""
+    return re.sub(r"([\\\[\]{}*?])", r"\\\1", path)

@@ -4,9 +4,9 @@ The reference reads every file with ``pd.read_csv(sep=None,
 engine='python')`` — csv.Sniffer separator detection — lowercases/dedups
 the column names and concatenates the frames by name (run_annotate.py:
 20-28, 48-49). Spark has no sniffer and maps fields to columns by
-position, so :func:`sniff` reads the head of EVERY file once driver-side
-(metadata-scale IO) and decides its separator and column names there.
-:func:`sniff_kinds` also classifies each column's head values by pandas'
+position, so :func:`sniff_kinds` reads the head of EVERY file once
+driver-side (metadata-scale IO) and decides its separator and column
+names there. It also classifies each column's head values by pandas'
 rule (bigint, then double, then string; booleans; pandas' default NA
 tokens read as null), so no distributed inference pass is needed:
 :func:`read_dsv` scans files sharing a separator and header with an
@@ -23,6 +23,8 @@ from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
+
+from cirro_annotation_spark.sources.discovery import escape_glob
 
 SNIFF_BYTES = 4096
 MAX_HEAD_BYTES = 16 << 20  # the first line must end within this
@@ -101,15 +103,6 @@ def _read_head(path: str, spark: SparkSession | None = None) -> tuple[bytes, lis
         if n >= MAX_HEAD_BYTES:
             raise ValueError(f"{path}: the first line does not end within {n} bytes")
         n = min(n * 8, MAX_HEAD_BYTES)
-
-
-def sniff(
-    path: str, header: bool = True, sep: str | None = None, spark: SparkSession | None = None
-) -> tuple[str, list[str]]:
-    """``(separator, normalized column names)`` of one file: see
-    :func:`sniff_kinds`."""
-    sep, columns, _ = sniff_kinds(path, header, sep, spark)
-    return sep, columns
 
 
 def sniff_kinds(
@@ -242,21 +235,23 @@ def normalize_columns(cols: list[str]) -> list[str]:
 
 
 def read_dsv(
-    spark: SparkSession, paths: str | list[str], sep: str, columns: list[str], header: bool = True
+    spark: SparkSession, paths: list[str], sep: str, columns: list[str], header: bool = True
 ) -> DataFrame:
-    """Scan files sharing one separator and one header (see :func:`sniff`)
-    as a DataFrame of string columns named ``columns``; the explicit
-    schema means no job starts until the frame runs. Spark maps fields by
-    position, so callers group files by ``(sep, columns)`` and union
-    groups by name; types come from :func:`typed_sql` over the kinds the
-    head reads gave. gz is transparent to Spark's text source.
+    """Scan files sharing one separator and one header (see
+    :func:`sniff_kinds`) as a DataFrame of string columns named
+    ``columns``; the explicit schema means no job starts until the frame
+    runs. Spark maps fields by position, so callers group files by
+    ``(sep, columns)`` and union groups by name; types come from
+    :func:`typed_sql` over the kinds the head reads gave. gz is
+    transparent to Spark's text source. Each path is read as itself,
+    never as a glob.
     """
     schema = StructType([StructField(c, StringType()) for c in columns])
     reader = spark.read.schema(schema).options(header=header, sep=sep, mode="PERMISSIVE")
-    return reader.csv(paths)
+    return reader.csv([escape_glob(p) for p in paths])
 
 
 def harvest_columns(spark: SparkSession, root: str, rel_paths: list[str]) -> dict[str, list[str]]:
     """Per-file column inventory (run_annotate.py:30-50) from one head read
     per file; no Spark job (``spark`` only serves scheme-qualified paths)."""
-    return {rel: sniff(f"{root}/{rel}", spark=spark)[1] for rel in rel_paths}
+    return {rel: sniff_kinds(f"{root}/{rel}", spark=spark)[1] for rel in rel_paths}

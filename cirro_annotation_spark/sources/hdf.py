@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from cirro_annotation_spark.publish import publish
+from cirro_annotation_spark.sources.discovery import escape_glob
 
 try:  # pragma: no cover - exercised only where h5py exists
     import h5py  # type: ignore
@@ -168,5 +169,5 @@ def hdf_chunks_to_parquet(
         )
 
     publish(target, write)
-    return spark.read.schema(spark_schema).parquet(target)
+    return spark.read.schema(spark_schema).parquet(escape_glob(target))
 

@@ -24,12 +24,10 @@ manifests) a driver re-reads often — with the reference's exact
 idempotency rule: skip the fetch when the cache dir is non-empty.
 
 Catalog access is pluggable (:class:`Catalog`): :class:`LocalFsCatalog`
-is the fully tested implementation over a mounted directory layout
+is the implementation over a mounted directory layout
 (``root/<project>/<dataset>/data/**`` — the same ``data/`` subtree the
-reference's ``get_file_list`` walks at ``run_annotate.py:54-66``), and
-:class:`RemoteHttpCatalog` carries the HTTP client shape but is honestly
-env-gated (``REMOTE_CATALOG_URL``) because this container has no network
-— the same gate pattern as ``sources/hdf.py`` and the multimodal decoders.
+reference's ``get_file_list`` walks at ``run_annotate.py:54-66``). A
+portal client implements the same protocol.
 """
 
 from __future__ import annotations
@@ -48,7 +46,6 @@ __all__ = [
     "FileRef",
     "Catalog",
     "LocalFsCatalog",
-    "RemoteHttpCatalog",
     "resolve_id",
     "resolve_dataset_ref",
     "resolve_dataset_files",
@@ -250,90 +247,6 @@ class LocalFsCatalog:
         src = file.uri.removeprefix("file://")
         os.makedirs(os.path.dirname(target_path), exist_ok=True)
         shutil.copyfile(src, target_path)
-
-
-class RemoteHttpCatalog:
-    """HTTP portal catalog — the real client shape, honestly env-gated.
-
-    This container has no network, so construction requires
-    ``REMOTE_CATALOG_URL`` (or an explicit ``base_url``); absent that,
-    every method raises ``NotImplementedError`` naming the gate — the
-    same contract as the h5py gate in ``sources/hdf.py:40``. With the
-    env set, methods issue stdlib ``urllib`` GETs against
-    ``{base}/projects``, ``{base}/projects/{id}/datasets``,
-    ``{base}/projects/{pid}/datasets/{did}/files`` returning JSON lists
-    shaped like the dataclasses above.
-    """
-
-    def __init__(self, base_url: str | None = None):
-        self.base_url = base_url or os.environ.get("REMOTE_CATALOG_URL")
-
-    def _require(self) -> str:
-        if not self.base_url:
-            raise NotImplementedError(
-                "RemoteHttpCatalog requires REMOTE_CATALOG_URL (no network "
-                "in this environment); use LocalFsCatalog or cloud-native "
-                "spark.read against the storage URIs"
-            )
-        return self.base_url.rstrip("/")
-
-    def _get_json(self, path: str):
-        import urllib.request
-
-        base = self._require()
-        with urllib.request.urlopen(f"{base}{path}") as resp:  # pragma: no cover
-            return json.load(resp)
-
-    @staticmethod
-    def _q(segment: str) -> str:
-        """Percent-encode one URL path segment (ids are portal input —
-        a '/', '#', '?', or space must not re-shape the path)."""
-        from urllib.parse import quote
-
-        return quote(segment, safe="")
-
-    def list_projects(self) -> list[ProjectRef]:
-        rows = self._get_json("/projects")
-        return [ProjectRef(id=r["id"], name=r["name"]) for r in rows]
-
-    def find_datasets(self, project_id: str) -> list[DatasetRef]:
-        rows = self._get_json(f"/projects/{self._q(project_id)}/datasets")
-        return [
-            DatasetRef(
-                id=r["id"],
-                name=r["name"],
-                project_id=project_id,
-                process_id=r.get("process_id", "unknown"),
-            )
-            for r in rows
-        ]
-
-    def list_files(self, project_id: str, dataset_id: str) -> list[FileRef]:
-        rows = self._get_json(
-            f"/projects/{self._q(project_id)}/datasets/{self._q(dataset_id)}/files"
-        )
-        return [
-            FileRef(name=r["name"], uri=r["uri"], size=r.get("size", 0)) for r in rows
-        ]
-
-    def fetch_file(self, file: FileRef, target_path: str) -> None:
-        import urllib.request
-
-        self._require()
-        # The URI is catalog input: only http(s) may be fetched — a
-        # malicious portal returning file:///etc/... would otherwise
-        # have the driver copy LOCAL files into the dataset cache
-        # (code-review r15, same threat model as _safe_component).
-        scheme = file.uri.split("://", 1)[0].lower() if "://" in file.uri else ""
-        if scheme not in ("http", "https"):
-            raise ValueError(
-                f"refusing non-http(s) catalog uri for fetch: {file.uri!r}"
-            )
-        os.makedirs(os.path.dirname(target_path), exist_ok=True)
-        with urllib.request.urlopen(file.uri) as resp, open(  # pragma: no cover
-            target_path, "wb"
-        ) as out:
-            shutil.copyfileobj(resp, out)
 
 
 def _extension_filter(files: list[FileRef], extensions: list[str]) -> list[FileRef]:

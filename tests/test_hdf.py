@@ -39,6 +39,12 @@ def test_chunks_roundtrip_rowcount(spark, tmp_path):
     assert labels == {"c0", "c1", "c2", "c3"}
 
 
+def test_target_with_brackets_reads_back(spark, tmp_path):
+    """A target named ``m[1]`` is read back as itself, not as a glob."""
+    out = hdf_chunks_to_parquet(spark, _chunks(2, rows=3), str(tmp_path / "m[1]"))
+    assert sorted(r["id"] for r in out.collect()) == list(range(6))
+
+
 def test_chunks_schema_drift_tolerated(spark, tmp_path):
     """A chunk missing a column contributes nulls (unionByName discipline
     via parquet schema merge)."""

@@ -14,8 +14,6 @@ import pytest
 
 from cirro_annotation_spark.manifest.compiler import (
     compile_command,
-    extract_tokens,
-    java_safe_regex,
     token_template_to_glob,
     token_template_to_regex,
 )
@@ -25,7 +23,7 @@ from cirro_annotation_spark.manifest.fixtures import (
     GENES,
     build_fixture_tree,
 )
-from cirro_annotation_spark.manifest.model import load_manifest
+from cirro_annotation_spark.manifest.model import extract_tokens, load_manifest
 from cirro_annotation_spark.manifest.planner import build_manifest
 
 
@@ -66,24 +64,16 @@ def test_template_regex_roundtrip():
     template = "data/mageck/[gene]/rra.sgrna_summary.txt"
     regex = token_template_to_regex(template)
     m = re.fullmatch(regex, "data/mageck/GENE_A/rra.sgrna_summary.txt")
-    assert m and m.group("gene") == "GENE_A"
+    assert m and m.group(1) == "GENE_A"
     # dots in the template are literal, not wildcards
     assert not re.fullmatch(regex, "data/mageck/GENE_A/rraXsgrna_summary.txt")
     # tokens match exactly one path segment
     assert not re.fullmatch(regex, "data/mageck/a/b/rra.sgrna_summary.txt")
 
 
-def test_java_safe_regex_is_java_compatible():
-    regex = token_template_to_regex("data/[a]/x_[b].txt")
-    safe = java_safe_regex(regex)
-    assert "?P<" not in safe
-    # positional groups preserved in order
-    m = re.fullmatch(safe, "data/A1/x_B2.txt")
-    assert m and m.group(1) == "A1" and m.group(2) == "B2"
-
-
 def test_template_glob():
-    assert token_template_to_glob("d/[g]/f_[x].txt") == "d/*/f_*.txt"
+    assert token_template_to_glob("d/[g]/f_[x].txt") == "d/*/f_*.txt*"
+    assert token_template_to_glob("d/s.txt") == "d/s.txt"
 
 
 # --- golden end-to-end execution ------------------------------------------
@@ -716,3 +706,106 @@ def test_execute_manifest_without_pinned_threads(spark, manifest, data_dir, tmp_
     results = execute_manifest(spark, manifest, data_dir, str(tmp_path / "out"))
     assert len(results) == len(manifest.commands)
     assert all(os.path.exists(t) for t in results)
+
+
+# --- paths holding glob characters ------------------------------------------
+
+def _write_tree(root, genes=("G1", "G2")):
+    """A ``genes/[gene]/f.tsv`` family (the last member gzipped) and a
+    standard file ``s.tsv`` under ``root``."""
+    import gzip
+
+    for i, gene in enumerate(genes):
+        d = root / "genes" / gene
+        d.mkdir(parents=True)
+        text = f"id\tv\n{gene}-a\t{i}\n{gene}-b\t{i + 1}\n"
+        if i == len(genes) - 1:
+            with gzip.open(d / "f.tsv.gz", "wt") as f:
+                f.write(text)
+        else:
+            (d / "f.tsv").write_text(text)
+    (root / "s.tsv").write_text("k\tn\nx\t1\ny\t2\n")
+    return root
+
+
+def _rows(results):
+    """{target basename: sorted rows} of an executed manifest."""
+    return {
+        os.path.basename(t): sorted(tuple(r) for r in df.collect())
+        for t, df in results.items()
+    }
+
+
+@pytest.mark.parametrize(
+    "name, sibling", [("run[x]", "runzz"), ("d[1-2]", "d1")], ids=["bracket_word", "char_class"]
+)
+def test_data_directory_name_is_literal(spark, tmp_path, name, sibling):
+    """A data directory whose name holds glob characters is read as
+    itself: ``[x]`` in it is no token, and no sibling that the name
+    would match as a glob is read."""
+    from cirro_annotation_spark.manifest import annotate
+
+    templates = ["genes/[gene]/f.tsv"]
+    _, expected = annotate(
+        spark, str(_write_tree(tmp_path / "plain")), str(tmp_path / "o1"), templates
+    )
+    _write_tree(tmp_path / sibling, genes=("G1", "G2", "G9"))
+    man, results = annotate(
+        spark, str(_write_tree(tmp_path / name)), str(tmp_path / "o2"), templates
+    )
+    assert [c.tokens for c in man.commands] == [("gene",), ()]
+    assert all("x" not in df.columns for df in results.values())
+    assert _rows(results) == _rows(expected)
+
+
+def test_file_uri_data_directory(spark, tmp_path):
+    """A ``file://`` data directory lists through Hadoop and gives the
+    rows the plain path gives; a missing standard file raises the same
+    FileNotFoundError for both roots."""
+    from cirro_annotation_spark.manifest.model import Manifest, TransformCommand
+
+    root = str(_write_tree(tmp_path / "data"))
+    man = build_manifest(spark, root, variable_templates=["genes/[gene]/f.tsv"])
+    expected = execute_manifest(spark, man, root, str(tmp_path / "o1"))
+    results = execute_manifest(spark, man, "file://" + root, str(tmp_path / "o2"))
+    assert _rows(results) == _rows(expected)
+
+    missing = TransformCommand(source="$data_directory/none.tsv", target="none.parquet")
+    for data_directory in (root, "file://" + root):
+        with pytest.raises(FileNotFoundError):
+            execute_manifest(spark, Manifest((missing,)), data_directory, str(tmp_path / "o3"))
+
+
+def test_source_outside_the_data_directory_is_rejected(spark, tmp_path):
+    """A source is a template under ``$data_directory/``; any other path
+    is refused rather than read from wherever it points."""
+    from cirro_annotation_spark.manifest.model import TransformCommand
+
+    root = _write_tree(tmp_path / "data")
+    cmd = TransformCommand(source=str(root / "s.tsv"), target="s.parquet")
+    with pytest.raises(ValueError, match=re.escape("starts with $data_directory/")):
+        compile_command(spark, cmd, str(root))
+
+
+def test_member_directory_with_brackets(spark, tmp_path):
+    """A member directory ``G[1]`` is read, and its token is ``G[1]``."""
+    from cirro_annotation_spark.manifest.model import TransformCommand
+
+    root = _write_tree(tmp_path / "data", genes=("G[1]", "G{2,3}*?"))
+    cmd = TransformCommand(source="$data_directory/genes/[gene]/f.tsv", target="f.parquet")
+    rows = {(r["id"], r["gene"]) for r in compile_command(spark, cmd, str(root)).collect()}
+    assert rows == {
+        ("G[1]-a", "G[1]"), ("G[1]-b", "G[1]"),
+        ("G{2,3}*?-a", "G{2,3}*?"), ("G{2,3}*?-b", "G{2,3}*?"),
+    }
+
+
+def test_output_directory_with_brackets(spark, tmp_path):
+    """Targets under ``out[1]`` are published and read back."""
+    from cirro_annotation_spark.manifest import annotate
+
+    root = str(_write_tree(tmp_path / "data"))
+    _, results = annotate(spark, root, str(tmp_path / "out[1]"), ["genes/[gene]/f.tsv"])
+    assert {os.path.basename(t): df.count() for t, df in results.items()} == {
+        "f.parquet": 4, "s.parquet": 2,
+    }

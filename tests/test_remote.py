@@ -13,7 +13,6 @@ import pytest
 
 from cirro_annotation_spark.sources.remote import (
     LocalFsCatalog,
-    RemoteHttpCatalog,
     cache_dataset,
     dataset_cache_dir,
     read_dataset,
@@ -141,18 +140,6 @@ def test_read_dataset_empty_resolution_raises(portal, spark):
         read_dataset(spark, LocalFsCatalog(portal), "proj-a", "ds2", [".parquet"])
 
 
-def test_http_catalog_env_gated(monkeypatch):
-    monkeypatch.delenv("REMOTE_CATALOG_URL", raising=False)
-    cat = RemoteHttpCatalog()
-    with pytest.raises(NotImplementedError, match="REMOTE_CATALOG_URL"):
-        cat.list_projects()
-    with pytest.raises(NotImplementedError):
-        cat.fetch_file(None, "/tmp/never-written")
-    # with a base_url the gate opens (the request itself needs network,
-    # so only the gating logic is assertable here)
-    assert RemoteHttpCatalog("http://portal.example").base_url
-
-
 def test_missing_project_and_dataset_raise(portal):
     cat = LocalFsCatalog(portal)
     with pytest.raises(KeyError):
@@ -236,17 +223,3 @@ def test_catalog_supplied_paths_are_sanitized(portal, tmp_path):
     cat.list_files = lambda *a: [abs_file]
     with pytest.raises(ValueError, match="unsafe file name"):
         cache_dataset(cat, "proj-a", "d-111", ["passwd"], str(tmp_path / "t2"))
-
-
-def test_http_catalog_percent_encodes_path_segments():
-    from cirro_annotation_spark.sources.remote import RemoteHttpCatalog
-
-    cat = RemoteHttpCatalog("http://portal.example")
-    seen = []
-    cat._get_json = lambda path: seen.append(path) or []
-    cat.find_datasets("proj a/b")
-    cat.list_files("p#1", "d?2")
-    assert seen == [
-        "/projects/proj%20a%2Fb/datasets",
-        "/projects/p%231/datasets/d%3F2/files",
-    ]

@@ -89,19 +89,19 @@ def test_sniff_via_hadoop_fs_scheme_path(spark, tmp_path):
     """A scheme-qualified path ('file://...') must sniff through the
     Hadoop FileSystem API — the cloud-storage code path — and agree
     with the local-open result."""
-    from cirro_annotation_spark.sources.dsv import sniff
+    from cirro_annotation_spark.sources.dsv import sniff_kinds
 
     p = tmp_path / "t.tsv"
     p.write_text("a\tb\tc\n1\t2\t3\n")
-    assert sniff(str(p)) == ("\t", ["a", "b", "c"])
-    assert sniff("file://" + str(p), spark=spark) == ("\t", ["a", "b", "c"])
+    assert sniff_kinds(str(p))[:2] == ("\t", ["a", "b", "c"])
+    assert sniff_kinds("file://" + str(p), spark=spark)[:2] == ("\t", ["a", "b", "c"])
 
 
 def test_sniff_scheme_path_without_session_raises(tmp_path, monkeypatch):
     """A head read of a scheme-qualified path uses the caller's session
     and never starts one of its own."""
     from cirro_annotation_spark import session
-    from cirro_annotation_spark.sources.dsv import sniff
+    from cirro_annotation_spark.sources.dsv import sniff_kinds
 
     def no_new_session(*args, **kwargs):
         raise AssertionError("a head read started a SparkSession")
@@ -110,7 +110,7 @@ def test_sniff_scheme_path_without_session_raises(tmp_path, monkeypatch):
     p = tmp_path / "t.tsv"
     p.write_text("a\tb\n1\t2\n")
     with pytest.raises(ValueError, match="needs a SparkSession"):
-        sniff("file://" + str(p))
+        sniff_kinds("file://" + str(p))
 
 
 def test_sniff_gz_truncation_tolerant(tmp_path):
@@ -119,13 +119,13 @@ def test_sniff_gz_truncation_tolerant(tmp_path):
     window."""
     import gzip as _gzip
 
-    from cirro_annotation_spark.sources.dsv import sniff
+    from cirro_annotation_spark.sources.dsv import sniff_kinds
 
     p = tmp_path / "big.csv.gz"
     body = "x,y,z\n" + "\n".join(f"{i},{i},{i}" for i in range(200_000))
     with _gzip.open(p, "wt") as f:
         f.write(body)
-    assert sniff(str(p)) == (",", ["x", "y", "z"])
+    assert sniff_kinds(str(p))[:2] == (",", ["x", "y", "z"])
 
 
 def test_sniff_names_follow_spark_header_rules(tmp_path):
@@ -133,12 +133,12 @@ def test_sniff_names_follow_spark_header_rules(tmp_path):
     header gives, normalized: an empty name is ``_c<i>``, names that
     repeat case-insensitively get their index, blank lines before the
     header are skipped, and ``header=False`` names fields ``_c0..``."""
-    from cirro_annotation_spark.sources.dsv import sniff
+    from cirro_annotation_spark.sources.dsv import sniff_kinds
 
     p = tmp_path / "t.csv"
     p.write_text("\n,Gene,gene,Score \n1,a,b,2\n")
-    assert sniff(str(p)) == (",", ["_c0", "gene1", "gene2", "score"])
-    assert sniff(str(p), header=False) == (",", ["_c0", "_c1", "_c2", "_c3"])
+    assert sniff_kinds(str(p))[:2] == (",", ["_c0", "gene1", "gene2", "score"])
+    assert sniff_kinds(str(p), header=False)[:2] == (",", ["_c0", "_c1", "_c2", "_c3"])
 
 
 def test_sniff_rejects_first_line_longer_than_head_bound(tmp_path, monkeypatch):
@@ -150,7 +150,7 @@ def test_sniff_rejects_first_line_longer_than_head_bound(tmp_path, monkeypatch):
     p = tmp_path / "wide.tsv"
     p.write_text("\t".join(f"col{i}" for i in range(20_000)) + "\n1\n")
     with pytest.raises(ValueError, match="first line"):
-        dsv.sniff(str(p))
+        dsv.sniff_kinds(str(p))
 
 
 def test_harvest_columns_launches_no_spark_job(tmp_path):
