@@ -42,7 +42,6 @@ def annotate(
     variable_templates=(),
     melt_groups=None,
     dictionary=None,
-    index_cols=None,
     process: str = "*",
 ):
     """One-call equivalent of the reference's full ``annotate`` flow
@@ -57,7 +56,6 @@ def annotate(
         variable_templates=variable_templates,
         melt_groups=melt_groups,
         dictionary=dictionary,
-        index_cols=index_cols,
         process=process,
     )
     m = optimize_manifest(m)

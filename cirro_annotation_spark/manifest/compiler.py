@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from cirro_annotation_spark.manifest.model import TOKEN_RE, TransformCommand, extract_tokens
 from cirro_annotation_spark.operators.reshape import melt as melt_op
 from cirro_annotation_spark.operators.reshape import union_by_name
-from cirro_annotation_spark.sources.discovery import escape_glob
+from cirro_annotation_spark.sources.discovery import check_readable, escape_glob
 from cirro_annotation_spark.sources.dsv import (
     column_type,
     join_kind,
@@ -146,6 +146,7 @@ def compile_command(
     members = template_members(template, _list(spark, data_directory, template))
     if not members:
         raise FileNotFoundError(f"no files match {template} under {data_directory}")
+    check_readable(members)
     df, types = _read_members(spark, [os.path.join(data_directory, m) for m in members], cmd)
     if tokens:
         # input_file_name() is a percent-ENCODED file: URI; the regex is

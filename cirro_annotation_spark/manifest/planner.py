@@ -26,7 +26,6 @@ from cirro_annotation_spark.manifest.model import (
     ColumnSpec,
     Manifest,
     MeltSpec,
-    ReadOptions,
     TransformCommand,
 )
 from cirro_annotation_spark.sources.discovery import discover_files
@@ -73,7 +72,6 @@ def build_manifest(
     melt_groups: Mapping[str, Sequence[str]] | None = None,
     dictionary=None,
     process: str = "*",
-    index_cols: Mapping[str, str] | None = None,
 ) -> Manifest:
     """Walk ``data_directory``, classify files, harvest columns, emit the
     manifest: one command per variable family (template order), then one
@@ -87,12 +85,9 @@ def build_manifest(
       are named ``sample`` and ``reads``.
     - dictionary: any fields.json shape (rich alias/scoped, flat, mapping).
     - process: pipeline process id for scoped dictionary resolution.
-    - index_cols: {file_or_template: row-identity column}
-      (transform.json:16-19 ``kwargs.read.index_col``).
     """
     melt_groups = dict(melt_groups or {})
     dictionary = load_fields_dictionary(dictionary or {})
-    index_cols = dict(index_cols or {})
     families, standard = group_variable_files(
         discover_files(data_directory), variable_templates
     )
@@ -113,7 +108,6 @@ def build_manifest(
                 desc=f"{'variable family' if family else 'standard file'} {rel}",
                 cols=_resolve_cols(cols, dictionary, process=process, file=rel),
                 melt=_melt_for(rel, cols, melt_groups),
-                read=ReadOptions(index_col=index_cols.get(rel)),
             )
         )
     return Manifest(commands=tuple(commands))

@@ -25,7 +25,7 @@ stays O(1) in rounds.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 PR_SCALE = 10**12
@@ -52,11 +52,43 @@ def pagerank_fixed_point(
     out-edges) is dropped, as in the common simplified formulation —
     both engines apply the identical rule so parity holds.
     """
+    e, nodes = _pagerank_graph(edges, src, dst, checkpoint, assume_distinct)
+    n_nodes = nodes.count()  # scalar model state: one number
+    if n_nodes == 0:
+        raise ValueError(
+            "pagerank_fixed_point: empty edge frame (no vertices) — "
+            "an upstream filter matched nothing"
+        )
+    teleport = (PR_SCALE - PR_D_NUM * PR_SCALE // PR_D_DEN) // n_nodes
+    ranks = nodes.withColumn("pr", F.lit(PR_SCALE // n_nodes).cast("long"))
+    return _power_iterate(e, nodes, F.lit(teleport), ranks, iterations, checkpoint)
+
+
+def pagerank_oracle_sql(
+    edges_cte: str, iterations: int = 5, scale: int = PR_SCALE
+) -> str:
+    """Unrolled-CTE DuckDB oracle for pagerank_fixed_point. ``edges_cte``
+    is a SQL query yielding (src, dst)."""
+    n = "COUNT(*) OVER ()"
+    return _pagerank_oracle_sql(
+        edges_cte,
+        f"SELECT node, ({scale} - {PR_D_NUM} * {scale} // {PR_D_DEN}) // {n} "
+        "AS tele FROM nodes",
+        f"SELECT node, CAST({scale} // {n} AS BIGINT) AS pr FROM nodes",
+        iterations,
+    )
+
+
+def _pagerank_graph(
+    edges: DataFrame, src: str, dst: str, checkpoint: bool, assume_distinct: bool
+) -> tuple[DataFrame, DataFrame]:
+    """The edge frame (src, dst) and the node set (node) of both PageRank
+    forms; with ``checkpoint`` the node set is materialized here."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not assume_distinct:
         e = e.distinct()
     if checkpoint:
-        # The edge frame feeds BOTH static derivations below (node set,
+        # The edge frame feeds BOTH static derivations (node set,
         # degree-annotated list) — without this lazy checkpoint the
         # upstream edge pipeline (often a fact-table join + distinct)
         # runs twice, once per eager materialization (optimization r15:
@@ -71,26 +103,30 @@ def pagerank_fixed_point(
         # Materialize the static frames ONCE — without this, every
         # power iteration re-derives the upstream edge pipeline (joins,
         # distincts) from scratch: 5 rounds cost 5x the input scan.
-        # e_deg is pre-partitioned on the per-round join key so the
-        # iteration's join reuses the partitioning instead of
-        # re-exchanging the (large) edge side each round.
         nodes = nodes.repartition("node").localCheckpoint(eager=True)
-    n_nodes = nodes.count()  # scalar model state: one number
-    if n_nodes == 0:
-        raise ValueError(
-            "pagerank_fixed_point: empty edge frame (no vertices) — "
-            "an upstream filter matched nothing"
-        )
-    teleport = (PR_SCALE - PR_D_NUM * PR_SCALE // PR_D_DEN) // n_nodes
+    return e, nodes
+
+
+def _power_iterate(
+    e: DataFrame,
+    nodes: DataFrame,
+    tele: Column,
+    ranks: DataFrame,
+    iterations: int,
+    checkpoint: bool,
+) -> DataFrame:
+    """``iterations`` rounds of
+    pr_{k+1}(v) = tele(v) + Σ_{u→v} (pr_k(u) * 85) // (outdeg(u) * 100)
+    from ``ranks`` (node, pr), with ``tele`` a column over ``nodes``."""
     # outdeg via a src-partitioned window: ONE exchange yields the
     # degree-annotated edge list already partitioned on the per-round
-    # join key (a groupBy+join formulation costs two more).
+    # join key (a groupBy+join formulation costs two more), so the
+    # iteration's join reuses the partitioning instead of re-exchanging
+    # the (large) edge side each round.
     w_src = Window.partitionBy("src")
     e_deg = e.select("src", "dst", F.count("*").over(w_src).alias("outdeg"))
     if checkpoint:
         e_deg = e_deg.localCheckpoint(eager=True)
-
-    ranks = nodes.withColumn("pr", F.lit(PR_SCALE // n_nodes).cast("long"))
     for _ in range(iterations):
         contribs = (
             e_deg.join(ranks, e_deg.src == ranks.node)
@@ -101,35 +137,25 @@ def pagerank_fixed_point(
             .groupBy("node")
             .agg(F.sum("c").alias("inflow"))
         )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (F.lit(teleport) + F.coalesce(F.col("inflow"), F.lit(0)))
-                .cast("long")
-                .alias("pr"),
-            )
+        ranks = nodes.join(contribs, "node", "left").select(
+            "node",
+            (tele + F.coalesce(F.col("inflow"), F.lit(0))).cast("long").alias("pr"),
         )
         if checkpoint:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
-def pagerank_oracle_sql(
-    edges_cte: str, iterations: int = 5, scale: int = PR_SCALE
-) -> str:
-    """Unrolled-CTE DuckDB oracle for pagerank_fixed_point: one CTE per
-    power iteration, identical integer arithmetic. ``edges_cte`` is a
-    SQL query yielding (src, dst)."""
+def _pagerank_oracle_sql(edges_cte: str, nt: str, it0: str, iterations: int) -> str:
+    """The unrolled-CTE DuckDB chain of :func:`_power_iterate`: one CTE
+    per power iteration, identical integer arithmetic. ``nt`` selects
+    (node, tele) and ``it0`` the starting (node, pr), both from ``nodes``."""
     parts = [
         f"WITH e AS (SELECT DISTINCT src, dst FROM ({edges_cte})),",
         "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),",
-        "nn AS (SELECT COUNT(*) AS n FROM nodes),",
-        f"tele AS (SELECT ({scale} - {PR_D_NUM} * {scale} // {PR_D_DEN}) // n "
-        "AS t FROM nn),",
+        f"nt AS ({nt}),",
         "deg AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY src),",
-        f"it0 AS (SELECT node, CAST({scale} // nn.n AS BIGINT) AS pr "
-        "FROM nodes CROSS JOIN nn),",
+        f"it0 AS ({it0}),",
     ]
     for k in range(iterations):
         parts.append(
@@ -139,9 +165,9 @@ def pagerank_oracle_sql(
             "GROUP BY e.dst),"
         )
         parts.append(
-            f"it{k + 1} AS (SELECT nodes.node, "
-            f"CAST(tele.t + COALESCE(c{k}.inflow, 0) AS BIGINT) AS pr "
-            f"FROM nodes LEFT JOIN c{k} USING (node) CROSS JOIN tele),"
+            f"it{k + 1} AS (SELECT nt.node, "
+            f"CAST(nt.tele + COALESCE(c{k}.inflow, 0) AS BIGINT) AS pr "
+            f"FROM nt LEFT JOIN c{k} USING (node)),"
         )
     body = "\n".join(parts).rstrip(",")
     return body + f"\nSELECT node, pr FROM it{iterations}"
@@ -300,23 +326,10 @@ def pagerank_personalized_fixed_point(
     pr_{k+1}(v) = tele(v) + Σ_{u→v} (pr_k(u) * 85) // (outdeg(u) * 100)
     tele(v)     = (15 * SCALE // 100) // |seeds| if v in seeds else 0
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
-    if checkpoint:
-        # Shared by the node set and e_deg below — see
-        # pagerank_fixed_point (optimization r15).
-        e = e.localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    if checkpoint:
-        nodes = nodes.repartition("node").localCheckpoint(eager=True)
     n_seeds = len(seeds)
     if n_seeds == 0:
         raise ValueError("pagerank_personalized_fixed_point: empty seeds list")
+    e, nodes = _pagerank_graph(edges, src, dst, checkpoint, assume_distinct)
     seed_tele = (PR_SCALE - PR_D_NUM * PR_SCALE // PR_D_DEN) // n_seeds
     seed_frame = nodes.sparkSession.createDataFrame(
         [(s,) for s in seeds], "node long"
@@ -335,11 +348,6 @@ def pagerank_personalized_fixed_point(
     ).select("node", F.coalesce("tele", F.lit(0)).cast("long").alias("tele"))
     if checkpoint:
         nodes_t = nodes_t.localCheckpoint(eager=True)
-    w_src = Window.partitionBy("src")
-    e_deg = e.select("src", "dst", F.count("*").over(w_src).alias("outdeg"))
-    if checkpoint:
-        e_deg = e_deg.localCheckpoint(eager=True)
-
     ranks = nodes_t.select(
         "node",
         F.when(F.col("tele") > 0, F.lit(PR_SCALE // n_seeds))
@@ -347,25 +355,7 @@ def pagerank_personalized_fixed_point(
         .cast("long")
         .alias("pr"),
     )
-    for _ in range(iterations):
-        contribs = (
-            e_deg.join(ranks, e_deg.src == ranks.node)
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(f"(pr * {PR_D_NUM}) div (outdeg * {PR_D_DEN})").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = nodes_t.join(contribs, "node", "left").select(
-            "node",
-            (F.col("tele") + F.coalesce(F.col("inflow"), F.lit(0)))
-            .cast("long")
-            .alias("pr"),
-        )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+    return _power_iterate(e, nodes_t, F.col("tele"), ranks, iterations, checkpoint)
 
 
 def pagerank_personalized_oracle_sql(
@@ -373,31 +363,17 @@ def pagerank_personalized_oracle_sql(
 ) -> str:
     """Unrolled-CTE oracle for the personalized variant."""
     seed_list = ", ".join(str(s) for s in seeds)
-    n_seeds = len(seeds)
-    tele = (scale - PR_D_NUM * scale // PR_D_DEN) // n_seeds
-    parts = [
-        f"WITH e AS (SELECT DISTINCT src, dst FROM ({edges_cte})),",
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),",
-        f"nt AS (SELECT node, CASE WHEN node IN ({seed_list}) "
-        f"THEN CAST({tele} AS BIGINT) ELSE 0 END AS tele FROM nodes),",
-        "deg AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY src),",
-        f"it0 AS (SELECT node, CASE WHEN node IN ({seed_list}) "
-        f"THEN CAST({scale // n_seeds} AS BIGINT) ELSE 0 END AS pr FROM nodes),",
-    ]
-    for k in range(iterations):
-        parts.append(
-            f"c{k} AS (SELECT e.dst AS node, "
-            f"SUM((it{k}.pr * {PR_D_NUM}) // (deg.outdeg * {PR_D_DEN})) AS inflow "
-            f"FROM e JOIN deg USING (src) JOIN it{k} ON it{k}.node = e.src "
-            "GROUP BY e.dst),"
+    tele = (scale - PR_D_NUM * scale // PR_D_DEN) // len(seeds)
+
+    def per_seed(value: int, name: str) -> str:
+        return (
+            f"SELECT node, CASE WHEN node IN ({seed_list}) "
+            f"THEN CAST({value} AS BIGINT) ELSE 0 END AS {name} FROM nodes"
         )
-        parts.append(
-            f"it{k + 1} AS (SELECT nt.node, "
-            f"CAST(nt.tele + COALESCE(c{k}.inflow, 0) AS BIGINT) AS pr "
-            f"FROM nt LEFT JOIN c{k} USING (node)),"
-        )
-    body = "\n".join(parts).rstrip(",")
-    return body + f"\nSELECT node, pr FROM it{iterations}"
+
+    return _pagerank_oracle_sql(
+        edges_cte, per_seed(tele, "tele"), per_seed(scale // len(seeds), "pr"), iterations
+    )
 
 
 def kcore_peel(

@@ -113,34 +113,6 @@ def write_zordered(
     return [(c, cuts) for c, (cuts, _) in cuts_and_exprs]
 
 
-def rowgroup_overlap_fraction(path: str, col: str, lo, hi) -> float:
-    """Audit helper: the fraction of parquet row groups whose [min, max]
-    stats for ``col`` overlap [lo, hi] — i.e. the fraction a stats-aware
-    reader must actually read. Uses the public pyarrow footer API."""
-    import glob as _glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    files = sorted(
-        _glob.glob(os.path.join(path, "*.parquet"))
-        + _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
-    total = 0
-    overlapping = 0
-    for f in set(files):
-        md = pq.ParquetFile(f).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}[col]
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            total += 1
-            if st is None or st.min is None:
-                overlapping += 1
-            elif not (st.max < lo or st.min > hi):
-                overlapping += 1
-    return overlapping / max(total, 1)
-
-
 def compact_parquet(
     spark,
     src: str,

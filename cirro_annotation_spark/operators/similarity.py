@@ -69,10 +69,6 @@ def _cosine(dotp: F.Column, norm_prod: F.Column) -> F.Column:
     )
 
 
-def cosine(a: F.Column, b: F.Column) -> F.Column:
-    return _cosine(dot(a, b), l2_norm(a) * l2_norm(b))
-
-
 def _vector_lit(vec: list[float]) -> F.Column:
     """A driver-side float vector as ONE array<double> literal. Passing
     the numpy array hands Py4J a Java double[] (37 commands for a 16-d

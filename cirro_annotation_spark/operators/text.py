@@ -32,23 +32,6 @@ def token_count(col: str | Column) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: str | Column) -> Column:
-    """Regex token count approximating BPE pre-tokenization (GPT-2 style
-    word/number/punct split): counts word-pieces, digit runs, punct runs."""
-    c = F.col(col) if isinstance(col, str) else col
-    # Drop ALL whitespace elements, not just the literal space: the
-    # zero-width split makes every non-alnum char its own element, and
-    # keeping \n/\t/\r inflated a 100-line document by ~99 phantom
-    # tokens (code-review r15; no real pre-tokenizer emits
-    # whitespace-only tokens). Oracle twin: [A-Za-z0-9\s] class.
-    return F.size(
-        F.filter(
-            F.split(c, r"(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
-            lambda x: (x != "") & (~x.rlike(r"^\s+$")),
-        )
-    )
-
-
 def stopword_ratio(col: str | Column, stopwords: list[str]) -> Column:
     toks = tokens(col)
     sw = F.array(*[F.lit(w) for w in stopwords])
@@ -152,18 +135,6 @@ def fingerprint_sha(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     normalized = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
     return F.sha2(normalized, 256)
-
-
-def rolling_hash(col: str | Column, base: int = 257, mod: int = 2**61 - 1) -> Column:
-    """Polynomial rolling hash over characters (Rabin-Karp style), computed
-    with F.aggregate over the char array — stays JVM-side."""
-    c = F.col(col) if isinstance(col, str) else col
-    chars = F.split(c, "")
-    return F.aggregate(
-        F.filter(chars, lambda x: x != ""),
-        F.lit(0).cast("decimal(38,0)"),
-        lambda acc, x: (acc * base + F.ascii(x)) % F.lit(mod).cast("decimal(38,0)"),
-    ).cast("long")
 
 
 # ---------------------------------------------------------------------------

@@ -19,7 +19,20 @@ EXTENSIONS = tuple(e + gz for e in (".txt", ".csv", ".tsv") for gz in ("", ".gz"
 
 
 def discover_files(root: str) -> list[str]:
-    """Relative paths (like the reference) of delimited files under root."""
+    """Relative paths (like the reference) of delimited files under root.
+
+    Raises rather than return nothing for a root that is not a local
+    directory, and rather than let Spark drop their rows for files its
+    reader skips (:func:`check_readable`)."""
+    if "://" in root:
+        raise ValueError(
+            f"{root!r}: annotate walks a local data directory; "
+            "execute accepts URI data directories"
+        )
+    if not os.path.exists(root):
+        raise FileNotFoundError(f"data directory {root!r} does not exist")
+    if not os.path.isdir(root):
+        raise NotADirectoryError(f"data directory {root!r} is not a directory")
     out: list[str] = []
     for dirpath, _dirnames, filenames in os.walk(root):
         for fn in filenames:
@@ -27,7 +40,21 @@ def discover_files(root: str) -> list[str]:
                 full = os.path.join(dirpath, fn)
                 out.append(os.path.relpath(full, root))
     out.sort()
+    check_readable(out)
     return out
+
+
+def check_readable(paths: list[str]) -> None:
+    """Raise a ValueError naming the ``paths`` that Spark's reader skips
+    as hidden even when named explicitly, reading 0 rows and no error: a
+    leaf name starting with ``.``, or with ``_`` and holding no ``=``
+    (Hadoop's ``shouldFilterOutPathName``; directory names do not
+    count). Pandas reads them, so the reference would have their rows."""
+    hidden = [p for p in paths if re.match(r"\.|_(?!.*=)", os.path.basename(p))]
+    if hidden:
+        raise ValueError(
+            f"Spark's reader skips files named '.*' or '_*' (without '='): {hidden}"
+        )
 
 
 def escape_glob(path: str) -> str:

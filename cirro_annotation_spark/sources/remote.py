@@ -40,6 +40,8 @@ from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cirro_annotation_spark.sources.discovery import escape_glob
+
 __all__ = [
     "ProjectRef",
     "DatasetRef",
@@ -341,8 +343,9 @@ def read_dataset(
     **options,
 ) -> DataFrame:
     """The scale path: resolve the dataset to URIs and let ``spark.read``
-    scan them in place — no download hop, so predicate pushdown, column
-    pruning, and split planning all act on the original columnar files.
+    scan them in place, each as itself, not as a glob — no download hop,
+    so predicate pushdown, column pruning, and split planning all act on
+    the original columnar files.
     Raises on an empty resolution (a silent empty scan would mask a bad
     extension filter — the reference would download nothing and then fail
     downstream; we fail at the source)."""
@@ -354,4 +357,4 @@ def read_dataset(
     reader = spark.read.format(format)
     if options:
         reader = reader.options(**options)
-    return reader.load([f.uri for f in files])
+    return reader.load([escape_glob(f.uri) for f in files])

@@ -5,13 +5,17 @@ kwargs.read.index_col (transform.json:16-19).
 """
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 
 from cirro_annotation_spark.manifest.compiler import compile_command
 from cirro_annotation_spark.manifest.fields import load_fields_dictionary
 from cirro_annotation_spark.manifest.fixtures import build_fixture_tree
 from cirro_annotation_spark.manifest.model import (
+    Manifest,
     ManifestValidationError,
+    ReadOptions,
     load_manifest,
 )
 from cirro_annotation_spark.manifest.planner import build_manifest
@@ -83,14 +87,17 @@ def test_rich_dictionary_through_planner(spark, tmp_path):
     assert specs["sgrna"].desc == "guide"
 
 
+def _counts_command(spark, data, index_col):
+    """The planned command of the fixture's counts file, with
+    ``kwargs.read.index_col`` set as a hand-written manifest sets it."""
+    m = build_manifest(spark, data)
+    cmd = next(c for c in m.commands if c.target == "counts.parquet")
+    return dataclasses.replace(cmd, read=ReadOptions(index_col=index_col))
+
+
 def test_index_col_hoisted_and_tagged(spark, tmp_path):
     data = build_fixture_tree(str(tmp_path))
-    m = build_manifest(
-        spark,
-        data,
-        index_cols={"mageck/count/combined/counts.txt": "sgRNA"},
-    )
-    cmd = next(c for c in m.commands if c.target == "counts.parquet")
+    cmd = _counts_command(spark, data, "sgRNA")
     assert cmd.read.index_col == "sgRNA"
     df = compile_command(spark, cmd, data)
     assert df.columns[0] == "sgrna"
@@ -99,9 +106,7 @@ def test_index_col_hoisted_and_tagged(spark, tmp_path):
 
 def test_index_col_survives_json_roundtrip(spark, tmp_path):
     data = build_fixture_tree(str(tmp_path))
-    m = build_manifest(
-        spark, data, index_cols={"mageck/count/combined/counts.txt": "sgrna"}
-    )
+    m = Manifest(commands=(_counts_command(spark, data, "sgrna"),))
     loaded = load_manifest(m.to_json())
     cmd = next(c for c in loaded.commands if c.target == "counts.parquet")
     assert cmd.read.index_col == "sgrna"

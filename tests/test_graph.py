@@ -133,6 +133,42 @@ def test_personalized_oracle_generator_matches_spark(spark):
     assert got == want
 
 
+def test_uniform_pagerank_is_personalized_with_every_node_a_seed(spark):
+    """The contract both PageRank forms share: with every node a seed,
+    tele(v) and pr_0(v) are the uniform ones, so the personalized ranks
+    equal the uniform ranks exactly, on Spark and in the oracle SQL."""
+    import random
+
+    import duckdb
+
+    from cirro_annotation_spark.operators.graph import (
+        pagerank_oracle_sql,
+        pagerank_personalized_fixed_point,
+        pagerank_personalized_oracle_sql,
+    )
+
+    rng = random.Random(15)
+    for trial in range(3):
+        n_nodes = rng.randint(4, 15)
+        pairs = [(rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(3 * n_nodes)]
+        pairs = [(a, b) for a, b in pairs if a != b] or [(0, 1)]
+        seeds = sorted({n for pair in pairs for n in pair})
+        iters = rng.randint(1, 5)
+        edges = spark.createDataFrame(pairs, "src long, dst long")
+        uniform = pagerank_fixed_point(edges, iterations=iters).collect()
+        personalized = pagerank_personalized_fixed_point(edges, seeds, iterations=iters)
+        assert sorted(uniform) == sorted(personalized.collect()), f"trial {trial}"
+
+        con = duckdb.connect()
+        con.execute("CREATE TABLE raw (src BIGINT, dst BIGINT)")
+        con.executemany("INSERT INTO raw VALUES (?, ?)", pairs)
+        cte = "SELECT src, dst FROM raw"
+        want = sorted(con.execute(pagerank_oracle_sql(cte, iterations=iters)).fetchall())
+        sql = pagerank_personalized_oracle_sql(cte, seeds, iterations=iters)
+        assert sorted(con.execute(sql).fetchall()) == want, f"trial {trial}"
+        assert sorted(tuple(r) for r in uniform) == want, f"trial {trial}"
+
+
 # ---------------------------------------------------------------------------
 # triangle_count_per_node
 

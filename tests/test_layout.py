@@ -6,14 +6,39 @@ a range predicate on EITHER column prunes most row groups, whereas the
 single-key-sorted layout prunes only on its sort key.
 """
 
+import glob
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from cirro_annotation_spark.operators import layout as L
 from cirro_annotation_spark.suites.util import t
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def rowgroup_overlap_fraction(path: str, col: str, lo, hi) -> float:
+    """The fraction of parquet row groups whose [min, max] stats for
+    ``col`` overlap [lo, hi] — i.e. the fraction a stats-aware reader
+    must actually read. Uses the public pyarrow footer API."""
+    files = sorted(
+        glob.glob(os.path.join(path, "*.parquet"))
+        + glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    )
+    total = 0
+    overlapping = 0
+    for f in set(files):
+        md = pq.ParquetFile(f).metadata
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}[col]
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx).statistics
+            total += 1
+            if st is None or st.min is None:
+                overlapping += 1
+            elif not (st.max < lo or st.min > hi):
+                overlapping += 1
+    return overlapping / max(total, 1)
 
 
 @pytest.fixture(scope="module")
@@ -39,8 +64,8 @@ def test_zorder_prunes_on_both_columns(spark, events, tmp_path):
         .parquet(linear)
     )
     lo, hi = _value_band(events)
-    z_value = L.rowgroup_overlap_fraction(zpath, "value", lo, hi)
-    lin_value = L.rowgroup_overlap_fraction(linear, "value", lo, hi)
+    z_value = rowgroup_overlap_fraction(zpath, "value", lo, hi)
+    lin_value = rowgroup_overlap_fraction(linear, "value", lo, hi)
     # The user_id-sorted layout has useless value stats: essentially every
     # row group overlaps a 10% value band. Z-order must skip a majority
     # and be strictly better. (The curve splits its boundary bits across
@@ -56,8 +81,8 @@ def test_zorder_prunes_on_both_columns(spark, events, tmp_path):
     # ... while still pruning on user_id (impossible for the value-sorted
     # layout: every file would contain all 15 users at this sf).
     uid = events.selectExpr("min(user_id) as m").first()["m"]
-    z_uid = L.rowgroup_overlap_fraction(zpath, "user_id", uid, uid)
-    lin_uid = L.rowgroup_overlap_fraction(linear, "user_id", uid, uid)
+    z_uid = rowgroup_overlap_fraction(zpath, "user_id", uid, uid)
+    lin_uid = rowgroup_overlap_fraction(linear, "user_id", uid, uid)
     assert z_uid <= 0.5, z_uid
     assert lin_uid < 0.2, lin_uid  # sanity: the linear layout's own key
 
@@ -93,8 +118,6 @@ def test_interleave_bits_is_morton_order(spark):
 def test_compact_parquet_bounds_file_count(spark, events, tmp_path):
     """64 tiny files compact to ceil(n/target) evenly-sized files with
     rows preserved; sorted variant also leaves tight per-file stats."""
-    import glob
-
     src = str(tmp_path / "small")
     dst = str(tmp_path / "compact")
     events.repartition(64).write.parquet(src)
@@ -107,7 +130,7 @@ def test_compact_parquet_bounds_file_count(spark, events, tmp_path):
     assert spark.read.parquet(dst).count() == n
     # sorted compaction -> a mid-range value band skips at least half
     lo, hi = _value_band(events)
-    assert L.rowgroup_overlap_fraction(dst, "value", lo, hi) <= 0.5
+    assert rowgroup_overlap_fraction(dst, "value", lo, hi) <= 0.5
 
 
 def test_zorder_stats_zone_maps_narrow(spark):

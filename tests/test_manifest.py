@@ -809,3 +809,66 @@ def test_output_directory_with_brackets(spark, tmp_path):
     assert {os.path.basename(t): df.count() for t, df in results.items()} == {
         "f.parquet": 4, "s.parquet": 2,
     }
+
+
+@pytest.mark.parametrize(
+    "files, template, hidden",
+    [
+        (("_x.tsv", "z.tsv"), None, "_x.tsv"),
+        ((".y.tsv", "z.tsv"), None, ".y.tsv"),
+        (("runs/a.tsv", "runs/_b.tsv"), "runs/[run].tsv", "runs/_b.tsv"),
+        (("._name.csv", "name.csv"), None, "._name.csv"),
+    ],
+    ids=["underscore", "dot", "family", "appledouble"],
+)
+def test_file_spark_skips_fails_loudly(spark, tmp_path, files, template, hidden):
+    """A file Spark's reader skips as hidden (a leaf name starting with
+    '.', or with '_' and no '=') raises, naming it, in ``annotate``
+    before any write and in ``execute``, instead of losing its rows."""
+    from cirro_annotation_spark.manifest import annotate
+    from cirro_annotation_spark.manifest.model import Manifest, TransformCommand
+
+    root = tmp_path / "data"
+    for rel in files:
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_text("k\tn\nx\t1\n")
+    out = tmp_path / "out"
+    templates = [template] if template else []
+    with pytest.raises(ValueError, match=re.escape(hidden)):
+        annotate(spark, str(root), str(out), templates)
+    assert not out.exists()
+
+    cmd = TransformCommand(source=f"$data_directory/{template or hidden}", target="t.parquet")
+    with pytest.raises(ValueError, match=re.escape(hidden)):
+        execute_manifest(spark, Manifest((cmd,)), str(root), str(out))
+
+
+def test_names_spark_reads_are_not_hidden(spark, tmp_path):
+    """'_' with '=' in the leaf, and '_' or '.' in a directory name only,
+    are read like any other file."""
+    from cirro_annotation_spark.manifest import annotate
+
+    root = tmp_path / "data"
+    for rel in ("_k=1.tsv", "_dir/a.tsv", ".dot/b.tsv"):
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_text("k\tn\nx\t1\n")
+    _, results = annotate(spark, str(root), str(tmp_path / "out"))
+    assert {os.path.basename(t): df.count() for t, df in results.items()} == {
+        "_k=1.parquet": 1, "a.parquet": 1, "b.parquet": 1,
+    }
+
+
+@pytest.mark.parametrize("kind", ["missing", "file", "uri"])
+def test_data_directory_annotate_cannot_walk_raises(spark, tmp_path, kind):
+    """``annotate`` raises for a data directory it cannot walk instead of
+    returning an empty manifest; a URI root points to ``execute``."""
+    from cirro_annotation_spark.manifest import annotate
+
+    (tmp_path / "f.tsv").write_text("k\tn\nx\t1\n")
+    root, error, match = {
+        "missing": (str(tmp_path / "none"), FileNotFoundError, "does not exist"),
+        "file": (str(tmp_path / "f.tsv"), NotADirectoryError, "not a directory"),
+        "uri": ("s3a://nobucket/x", ValueError, "execute accepts URI"),
+    }[kind]
+    with pytest.raises(error, match=match):
+        annotate(spark, root, str(tmp_path / "out"))

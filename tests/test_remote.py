@@ -135,6 +135,20 @@ def test_read_dataset_parquet(portal, spark, tmp_path):
     assert df.columns == ["k"]
 
 
+def test_read_dataset_directory_with_brackets(portal, spark):
+    """A dataset directory ``d[1]`` is read as itself, not as a glob
+    (which would match ``d1``, or nothing)."""
+    for name, rows in (("d[1]", "s,1\n"), ("d1", "wrong,9\n")):
+        data = os.path.join(portal, "proj-b", name, "data")
+        os.makedirs(data)
+        with open(os.path.join(data, "x.csv"), "w") as f:
+            f.write("k,v\n" + rows)
+    df = read_dataset(
+        spark, LocalFsCatalog(portal), "proj-b", "d[1]", [".csv"], format="csv", header=True
+    )
+    assert [tuple(r) for r in df.collect()] == [("s", "1")]
+
+
 def test_read_dataset_empty_resolution_raises(portal, spark):
     with pytest.raises(ValueError, match="no files matching"):
         read_dataset(spark, LocalFsCatalog(portal), "proj-a", "ds2", [".parquet"])

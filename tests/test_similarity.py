@@ -596,10 +596,9 @@ def test_zero_norm_vector_excluded_everywhere(spark):
 
 def test_zero_norm_cosine_is_null_not_nan(spark):
     df = spark.createDataFrame([(1,)], "x long")
+    zero, v = F.array(F.lit(0.0), F.lit(0.0)), F.array(F.lit(1.0), F.lit(2.0))
     row = df.select(
-        S.cosine(
-            F.array(F.lit(0.0), F.lit(0.0)), F.array(F.lit(1.0), F.lit(2.0))
-        ).alias("c"),
+        S._cosine(S.dot(zero, v), S.l2_norm(zero) * S.l2_norm(v)).alias("c"),
     ).first()
     assert row["c"] is None
 

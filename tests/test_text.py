@@ -5,11 +5,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cirro_annotation_spark.operators.text import (
-    bpe_ish_token_count,
     fingerprint_sha,
     langid_stopword_votes,
     quality_score,
-    rolling_hash,
     token_count,
 )
 
@@ -33,8 +31,6 @@ def test_langid_english_vs_spanish(spark):
 def test_token_counts(spark):
     assert _one(spark, "  a  b   c ", token_count(F.col("text"))) == 3
     assert _one(spark, "", token_count(F.col("text"))) == 0
-    # BPE-ish splits punctuation and digit runs apart from words
-    assert _one(spark, "hello, world42!", bpe_ish_token_count(F.col("text"))) >= 4
 
 
 def test_quality_score_bounds_and_ordering(spark):
@@ -49,13 +45,6 @@ def test_fingerprint_normalizes_whitespace_and_case(spark):
     a = _one(spark, "Hello   World", fingerprint_sha(F.col("text")))
     b = _one(spark, "  hello world ", fingerprint_sha(F.col("text")))
     c = _one(spark, "hello worlds", fingerprint_sha(F.col("text")))
-    assert a == b != c
-
-
-def test_rolling_hash_deterministic_and_discriminating(spark):
-    a = _one(spark, "abcdef", rolling_hash(F.col("text")))
-    b = _one(spark, "abcdef", rolling_hash(F.col("text")))
-    c = _one(spark, "abcdeg", rolling_hash(F.col("text")))
     assert a == b != c
 
 
@@ -946,11 +935,3 @@ def test_vocab_overlap_identical_disjoint_and_stopword_cap(spark):
     assert out[("s3", "s4")]["n_shared"] == 0
     assert out[("s3", "s4")]["jaccard_ppm"] == 0
     assert out[("s1", "s3")]["jaccard_ppm"] == 0
-
-
-def test_bpe_count_ignores_all_whitespace(spark):
-    """Newlines/tabs are not tokens: 'a\\nb' is 2, not 3 (code-review
-    r15); punct still counts per char, digits as runs."""
-    assert _one(spark, "a\nb", bpe_ish_token_count(F.col("text"))) == 2
-    assert _one(spark, "a\tb\r\nc", bpe_ish_token_count(F.col("text"))) == 3
-    assert _one(spark, "hi!! 42", bpe_ish_token_count(F.col("text"))) == 4
