@@ -54,8 +54,7 @@ def _targets(manifest: Manifest, output_directory: str) -> list[str]:
     for cmd in manifest.commands:
         # cmd.target is manifest input: confine it to output_directory
         # (an absolute or '..'-laden target would replace arbitrary
-        # writable paths — code-review r15, same contract as
-        # sources/remote.py's catalog-path validation).
+        # writable paths — code-review r15).
         if os.path.isabs(cmd.target) or ".." in cmd.target.split("/"):
             raise ValueError(
                 f"manifest target escapes the output directory: {cmd.target!r}"

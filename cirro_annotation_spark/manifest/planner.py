@@ -23,6 +23,7 @@ from cirro_annotation_spark.manifest.fields import (
     load_fields_dictionary,
 )
 from cirro_annotation_spark.manifest.model import (
+    TOKEN_RE,
     ColumnSpec,
     Manifest,
     MeltSpec,
@@ -91,6 +92,14 @@ def build_manifest(
     families, standard = group_variable_files(
         discover_files(data_directory), variable_templates
     )
+    # A source path's [word] is a token (the reference's syntax has no
+    # escape), so such a file would be read as a family of its siblings.
+    tokened = [rel for rel in standard if TOKEN_RE.search(rel)]
+    if tokened:
+        raise ValueError(
+            "a standard file whose path holds a [token] would be read as a "
+            f"template; rename it: {tokened}"
+        )
     # (rel path or template, file whose header names the columns, is a family)
     sources = [(t, members[0], True) for t, members in families.items() if members]
     sources += [(rel, rel, False) for rel in standard]

@@ -111,46 +111,3 @@ def write_zordered(
         .parquet(path)
     )
     return [(c, cuts) for c, (cuts, _) in cuts_and_exprs]
-
-
-def compact_parquet(
-    spark,
-    src: str,
-    dst: str,
-    target_rows_per_file: int,
-    sort_col: str | None = None,
-) -> int:
-    """Small-files compaction — the other half of the layout story at
-    100 TB: streaming sinks and over-parallel writers leave thousands
-    of KB-scale files whose per-file open/footer cost dominates reads.
-    Rewrite to ceil(rows / target) evenly-sized files; with ``sort_col``
-    the rewrite is a repartitionByRange + in-partition sort (one range
-    exchange, same cost shape as write_zordered) so the compacted files
-    also carry tight min/max stats on the sort key.
-
-    The row count comes from the parquet FOOTERS directly (pyarrow
-    driver-side, the file_key_bounds/manifest-read class) — the
-    previous ``df.count()`` was metadata-only on the executors but
-    still a full Spark job in a write path that is already job-heavy
-    (optimization r15, guide §5 driver/actions). Returns the number of
-    files written."""
-    import math
-    import os
-
-    import pyarrow.parquet as pq
-
-    df = spark.read.parquet(src)
-    n = sum(
-        pq.ParquetFile(os.path.join(src, f)).metadata.num_rows
-        for f in os.listdir(src)
-        if f.endswith(".parquet")
-    )
-    nfiles = max(1, math.ceil(n / max(target_rows_per_file, 1)))
-    if sort_col is not None:
-        out = df.repartitionByRange(nfiles, sort_col).sortWithinPartitions(
-            sort_col
-        )
-    else:
-        out = df.repartition(nfiles)
-    out.write.mode("overwrite").parquet(dst)
-    return nfiles

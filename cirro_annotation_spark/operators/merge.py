@@ -11,16 +11,17 @@ contain matched keys, rewrite ONLY those plus an append for new keys,
 and leave every other file physically untouched.
 
 Why this matters at 100 TB: a naive MERGE rewrites the whole table. A
-key-clustered table (write_zordered / compact_parquet(sort_by=key))
-bounds the rewrite to |touched key ranges| — the footer min/max stats
-that prune reads (operators/layout.py) prune WRITES here. Untouched
-files are hard-linked into the new table version, so the rewrite cost
-is proportional to the update's locality, not the table size.
+key-clustered table (range-partitioned and sorted on the key, or
+write_zordered) bounds the rewrite to |touched key ranges| — the footer
+min/max stats that prune reads (operators/layout.py) prune WRITES here.
+Untouched files are hard-linked into the new table version, so the
+rewrite cost is proportional to the update's locality, not the table
+size.
 
 Crash safety is the shared publish helper (``publish.py``): stage the
 full next version (links + rewritten files + _SUCCESS), rename base
-aside, rename staging in, drop the old (or keep it as a snapshot) — a
-crash at any point leaves a complete base on disk.
+aside, rename staging in, drop the old — a crash at any point leaves a
+complete base on disk.
 """
 
 from __future__ import annotations
@@ -74,7 +75,6 @@ def merge_into_parquet(
     source: DataFrame,
     key: str,
     delete: bool = False,
-    keep_old: bool = False,
 ) -> dict[str, int]:
     """Upsert ``source`` into the parquet table at ``base_dir`` on
     ``key``: matched base rows are replaced by the source row, new keys
@@ -85,15 +85,9 @@ def merge_into_parquet(
     (the GDPR/opt-out rewrite a training corpus must support): matched
     keys are REMOVED instead of replaced — ``source`` needs only the
     key column and nothing is appended. Same pruning: only files whose
-    range contains a deleted key are rewritten.
-
-    ``keep_old=True`` retains the pre-merge table as a time-travel
-    snapshot (``<base>.v<millis>``, see read_table_version) instead of
-    deleting it. Because untouched files are hard links, a retained
-    snapshot costs only the rewritten files' bytes. NOTE: a
-    right-to-erasure delete with ``keep_old=True`` retains the erased
-    rows in the snapshot — purge the snapshots (or run with
-    keep_old=False, the default) when the point is actual erasure.
+    range contains a deleted key are rewritten. The pre-merge version
+    is deleted once the new one is in place, so erased rows do not
+    survive on disk.
 
     Returns {"files_total": n, "files_rewritten": m} for observability
     (m is the pruning evidence the tests pin).
@@ -120,8 +114,7 @@ def merge_into_parquet(
     )
     untouched = [f for f, _, _ in bounds if f not in affected]
 
-    # the millis stamp names this merge's rewritten files and orders the
-    # retained snapshots (list_table_versions)
+    # the millis stamp names this merge's rewritten files
     millis = int(time.time() * 1000)
 
     def write(staging: str) -> None:
@@ -133,8 +126,8 @@ def merge_into_parquet(
         # the table — kept base rows take NULL for it (the Delta/
         # Iceberg mergeSchema semantics). Untouched files keep the old
         # physical schema, so reads of an evolved table must go through
-        # read_table_version / option("mergeSchema", "true") — plain
-        # parquet has no table-level schema manifest to consult.
+        # option("mergeSchema", "true") — plain parquet has no
+        # table-level schema manifest to consult.
         new_data = None if delete else source
         if affected:
             # mergeSchema is mandatory, not cosmetic: after a prior
@@ -175,7 +168,7 @@ def merge_into_parquet(
         for path in untouched:
             os.link(path, os.path.join(staging, os.path.basename(path)))
 
-    publish(base_dir, write, keep_as=f"{base_dir}.v{millis}" if keep_old else None)
+    publish(base_dir, write)
     return {"files_total": len(bounds), "files_rewritten": len(affected)}
 
 
@@ -227,40 +220,3 @@ def table_diff(
         j.select(F.col(key), status.alias("status"))
         .filter(F.col("status").isNotNull())
     )
-
-
-def list_table_versions(base_dir: str) -> list[str]:
-    """Retained snapshot directories for ``base_dir``, oldest first.
-    Versions are created by ``merge_into_parquet(..., keep_old=True)``
-    as ``<base>.v<millis>`` siblings; the live table is ``base_dir``
-    itself. Hard links make retention near-free: an unchanged file is
-    one inode shared by every version that contains it — the same
-    economics as a table format's snapshot manifest."""
-    parent = os.path.dirname(base_dir) or "."
-    prefix = os.path.basename(base_dir) + ".v"
-    return sorted(
-        os.path.join(parent, d)
-        for d in os.listdir(parent)
-        if d.startswith(prefix) and d[len(prefix):].isdigit()
-    )
-
-
-def read_table_version(
-    spark: SparkSession, base_dir: str, version: int | None = None
-) -> DataFrame:
-    """Time-travel read: ``version=None`` → the live table; ``version=k``
-    → the k-th retained snapshot (0 = oldest).
-
-    Always reads with ``mergeSchema`` — after a schema-evolving merge
-    the table directory legitimately holds files of BOTH the old and
-    the widened schema (untouched files are never rewritten), and a
-    single-footer read would silently drop the new columns."""
-    if version is None:
-        return spark.read.option("mergeSchema", "true").parquet(base_dir)
-    versions = list_table_versions(base_dir)
-    if not 0 <= version < len(versions):
-        raise IndexError(
-            f"version {version} out of range: {len(versions)} retained "
-            f"snapshots at {base_dir}"
-        )
-    return spark.read.option("mergeSchema", "true").parquet(versions[version])

@@ -4,8 +4,8 @@ Images/audio/video ride through the engine as ``binary`` columns next to
 structured metadata (the lakehouse-standard layout). The Spark-side
 plumbing — schema, Arrow batch shape, mapInPandas signatures,
 partition-size control — is real and tested; the actual codec calls are
-STUBBED (image/audio libraries are not in this container) behind
-``FakeCodec`` / NotImplementedError, clearly marked below.
+STUBBED (image/audio libraries are not in this container) by
+``FakeCodec``'s deterministic byte arithmetic, clearly marked below.
 
 Scale: payload columns dominate bytes, so the rules are (1) never shuffle
 payloads — extract features first, then drop the blob; (2) bound
@@ -47,7 +47,7 @@ class FakeCodec:
 
     STUB: a real deployment plugs Pillow/torchaudio/ffmpeg in here; the
     container has none of them, so decode() synthesizes features from the
-    bytes themselves (stable, testable) and resize()/frame_sample() raise.
+    bytes themselves (stable, testable) and resize_fake() decimates them.
     """
 
     @staticmethod
@@ -58,19 +58,11 @@ class FakeCodec:
         }
 
     @staticmethod
-    def resize(payload: bytes, w: int, h: int) -> bytes:
-        raise NotImplementedError("image resize requires Pillow — not in container")
-
-    @staticmethod
     def resize_fake(payload: bytes, factor: int = 2) -> bytes:
         """Deterministic stand-in for a downscale: keep every
         ``factor``-th byte. Exercises the binary→binary plumbing with
-        verifiable arithmetic; a real deployment swaps resize() in."""
+        verifiable arithmetic; a real deployment swaps a Pillow resize in."""
         return payload[::factor]
-
-    @staticmethod
-    def frame_sample(payload: bytes, every_n: int) -> list[bytes]:
-        raise NotImplementedError("video frame sampling requires ffmpeg — not in container")
 
 
 def frame_sample(df: DataFrame, n_frames: int = 4) -> DataFrame:
@@ -79,7 +71,7 @@ def frame_sample(df: DataFrame, n_frames: int = 4) -> DataFrame:
     — the one-to-many Arrow-batch shape real video frame extraction uses.
 
     The DECODE is the deterministic fake chunker (a real deployment swaps
-    FakeCodec.frame_sample / ffmpeg in): frame k of a payload of length L
+    an ffmpeg frame extractor in): frame k of a payload of length L
     is bytes [k*(L//n) : (k+1)*(L//n)) with the remainder folded into the
     last frame; checksum = sum of the frame's first 16 bytes % 997. Being
     byte arithmetic, the whole path gets a real DuckDB oracle — the

@@ -14,14 +14,15 @@ Search methods, each a top-k by cosine (ties by id ascending):
 One rule: each kernel has ONE body.
 - A search's body is its ``_q`` form, which takes the query as a 1-row
   ``(__qv, __qn)`` frame (:func:`query_vector_frame`). A literal-vector
-  form (``topk_cosine_bruteforce``, ``topk_cosine_lsh``,
-  ``ivf_topk_cosine``) is a wrapper that builds that frame from the
-  vector (:func:`_literal_query_frame`) and calls the ``_q`` form.
+  form (``topk_cosine_bruteforce``, ``ivf_topk_cosine``) is a wrapper
+  that builds that frame from the vector (:func:`_literal_query_frame`)
+  and calls the ``_q`` form.
 - Within-key cosine pairs (LSH near-dups, SemDeDup cells) are one
   norm-once self-join, :func:`_cosine_pairs_within`.
-- SemDeDup is the SQL reference :func:`semantic_dedup_removed` plus one
-  Arrow operator, :func:`semantic_dedup_removed_capped`, whose within-
-  and cross-chunk stages both run :func:`_semdedup_block_kernel`.
+- SemDeDup is one Arrow operator, :func:`semantic_dedup_removed_capped`,
+  whose within- and cross-chunk stages both run
+  :func:`_semdedup_block_kernel`; its SQL reference (cell-local
+  :func:`_cosine_pairs_within` pairs) lives with its tests.
 - PQ and IVF-PQ share the ADC ranking tail, :func:`_adc_topk`.
 """
 
@@ -210,23 +211,6 @@ def topk_cosine_lsh_q(
         F.broadcast(qf), F.col("__bucket") == F.col("__qb")
     )
     return _topk_cosine(joined, v, id_col, k)
-
-
-def topk_cosine_lsh(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """:func:`topk_cosine_lsh_q` against one literal query vector; the
-    planes are drawn for the query's dimension."""
-    qf = _literal_query_frame(df.sparkSession, query_vec)
-    return topk_cosine_lsh_q(
-        df, vec_col, id_col, qf, k, n_planes, seed, dim=len(query_vec)
-    )
 
 
 def train_centroids_kmeans(
@@ -477,46 +461,6 @@ def knn_join(
     )
 
 
-def semantic_dedup_removed(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    centroids: list[list[float]],
-    threshold: float,
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster embeddings
-    with a pretrained coarse quantizer, then mark as duplicates the
-    vectors whose cosine to a LOWER-id member of the SAME cell meets the
-    threshold. Returns the removal list:
-    ``(vec_id, cell, n_dominators, keeper_id, max_cosine)``.
-
-    Scale shape (the reason SemDeDup works at 100 TB where all-pairs
-    cosine cannot): cell assignment is a map-side argmin against
-    broadcast centroid literals (no join), and the quadratic pair stage
-    runs ONLY within a cell — one shuffle on ``__cell``, pair count
-    bounded by k·(max cell size)². With k sized so cells hold ~1e5
-    vectors, the pair stage is ~1e10·k comparisons spread over the
-    cluster instead of (1e9)² globally. The keep-lowest-id rule makes
-    the output deterministic and engine-independent (the paper keeps a
-    random member; min-id is the reproducible choice, same as
-    dedup_first_wins).
-    """
-    v = F.col(vec_col).cast("array<double>")
-    pairs = _cosine_pairs_within(
-        df, v, id_col, _argmin_centroid(v, centroids), threshold
-    ).select(
-        "id_a",
-        F.col("id_b").alias("vec_id"),
-        F.col("key").alias("cell"),
-        F.col("cosine_sim").alias("__cs"),
-    )
-    return pairs.groupBy("vec_id", "cell").agg(
-        F.count("*").alias("n_dominators"),
-        F.min("id_a").alias("keeper_id"),
-        F.round(F.max("__cs"), 6).alias("max_cosine"),
-    )
-
-
 def _semdedup_block_kernel(
     pdf: pd.DataFrame,
     threshold: float,
@@ -524,8 +468,8 @@ def _semdedup_block_kernel(
     dominators: pd.DataFrame | None = None,
 ) -> pd.DataFrame:
     """SemDeDup scores for one pandas group of ``(vec_id, cell, __v)``
-    rows, in the output schema of :func:`semantic_dedup_removed`: per
-    row, how many ``dominators`` (default: the group itself) have a
+    rows, in the output schema of :func:`semantic_dedup_removed_capped`:
+    per row, how many ``dominators`` (default: the group itself) have a
     LOWER id and a cosine that reaches ``threshold`` at 6 dp, the lowest
     such id and the best such cosine; rows with none are dropped.
 
@@ -582,12 +526,15 @@ def semantic_dedup_removed_capped(
     cap: int = 1024,
     block: int = 1024,
 ) -> DataFrame:
-    """Occupancy-bounded SemDeDup: same schema as
-    :func:`semantic_dedup_removed`, exactly equal output ONLY when no
-    cell exceeds ``cap`` — above it, n_dominators/keeper_id may differ
-    (a vector whose only dominators live in another nonzero chunk is
-    kept). Within-cell pair work is capped
-    at O(cell_size · cap) instead of O(cell_size²) — the fix for the
+    """Occupancy-bounded SemDeDup (Abbas et al. 2023, arXiv:2303.09540):
+    cluster embeddings with a pretrained coarse quantizer, then remove
+    the vectors whose cosine to a LOWER-id member of the SAME cell meets
+    the threshold. Returns the removal list ``(vec_id, cell,
+    n_dominators, keeper_id, max_cosine)``, equal to the SQL reference's
+    (all within-cell pairs) ONLY when no cell exceeds ``cap`` — above
+    it, n_dominators/keeper_id may differ (a vector whose only
+    dominators live in another nonzero chunk is kept). Within-cell pair
+    work is capped at O(cell_size · cap) instead of O(cell_size²) — the fix for the
     hot-cell quadratic (one skewed quantizer cell holding millions of
     near-identical vectors makes the exact pair stage all-pairs).
 
@@ -605,7 +552,7 @@ def semantic_dedup_removed_capped(
     kept — the paper's own semantics are already approximate (it keeps
     a random cluster member; SemDeDup, Abbas et al. 2023,
     arXiv:2303.09540), and when no cell exceeds ``cap`` the output is
-    EXACTLY semantic_dedup_removed's (single chunk per cell — pinned by
+    EXACTLY the SQL reference's (single chunk per cell — pinned by
     tests/test_similarity.py parity).
 
     Scale shape: cell assignment stays a map-side argmin against

@@ -2,14 +2,13 @@
 
 Catalyst is the optimizer (SURVEY.md §4: the reference's optimization
 intents — column pruning, file skipping, dictionary encoding — are all
-built-in). These helpers read the physical plan back so tests can assert
-the properties that matter at 100 TB: filters pushed to the scan, scans
-pruned to referenced columns, small joins broadcast, codegen engaged.
+built-in). These helpers render the physical plan and parse the
+properties that matter at 100 TB out of its text: the columns each scan
+reads and the scans with pushed filters. The plan-fingerprint gate
+(:mod:`.fingerprint`) builds every query's plan shape from them.
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import DataFrame
 
@@ -22,9 +21,10 @@ def physical_plan(df: DataFrame) -> str:
 
 def read_schema_cols(plan: str) -> list[str]:
     """Column names across every ReadSchema line of a rendered plan —
-    the single text-level parser shared by scan_read_schema and the
-    fingerprint module (code-review r14: two independent parsers of the
-    same plan text can drift apart silently)."""
+    the single text-level parser of scan columns, shared by the
+    fingerprint module and the plan tests (code-review r14: two
+    independent parsers of the same plan text can drift apart
+    silently)."""
     out: list[str] = []
     for line in plan.splitlines():
         line = line.strip()
@@ -58,30 +58,3 @@ def pushed_filter_scan_count(plan: str) -> int:
         if line.strip().startswith("PushedFilters: [")
         and not line.strip().startswith("PushedFilters: []")
     )
-
-
-def has_pushed_filters(df: DataFrame) -> bool:
-    """Every scan's filter list non-empty (the strict form the audit
-    table reports: one unpushed scan among several reads as '—')."""
-    plan = physical_plan(df)
-    return "PushedFilters: [" in plan and "PushedFilters: []" not in plan
-
-
-def scan_read_schema(df: DataFrame) -> list[str]:
-    """Column names in the parquet ReadSchema (what the scan actually reads)."""
-    return read_schema_cols(physical_plan(df))
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    plan = physical_plan(df)  # one JVM explain render, not two
-    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def count_exchanges(df: DataFrame) -> int:
-    """Shuffle count in the plan — the number every operator should
-    minimize. Counts the formatted-explain node headers ``(N) Exchange``,
-    which are branch-prefix-proof (tree lines like ``:  +- Exchange (3)``
-    are easy to miss) and exclude ReusedExchange."""
-    plan = physical_plan(df)
-    return len(re.findall(r"^\(\d+\)\s+Exchange\b", plan, flags=re.MULTILINE))
-

@@ -60,15 +60,13 @@ def recover(base_path: str) -> None:
         os.rename(old, base_path)
 
 
-def publish(
-    target: str, write: Callable[[str], None], keep_as: str | None = None
-) -> None:
+def publish(target: str, write: Callable[[str], None]) -> None:
     """Replace the directory ``target`` with what ``write`` produces.
 
     ``write(staging)`` creates the complete new version at a path that
     does not exist yet. If it raises, the staging directory is deleted
     and the target is left as it was. The previous version is deleted
-    after the swap, or renamed to ``keep_as`` when given.
+    after the swap.
     """
     recover(target)
     staging = f"{target}.staging-{time.time_ns()}"
@@ -83,10 +81,7 @@ def publish(
         os.rename(target, old)
     os.rename(staging, target)
     if os.path.exists(old):
-        if keep_as:
-            os.rename(old, keep_as)
-        else:
-            shutil.rmtree(old)
+        shutil.rmtree(old)
     # A staging dir from an earlier crashed swap (complete but never
     # promoted) must not outlive a SUCCESSFUL swap: recovery prefers
     # the newest staged result, which after this point is strictly

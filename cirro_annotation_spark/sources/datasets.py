@@ -3,18 +3,12 @@ interactive prompt loop.
 
 The reference presents datasets newest-first and resolves the picked
 label back to an id (``annotation/commands/ask_dataset.py:13-34``: sort
-by ``created_at`` reverse, choices labeled ``"{name} - {id}"``, linear
-scan to map the answer back, ``InputError`` when nothing matches). An
+by ``created_at`` reverse, choices labeled ``"{name} - {id}"``). An
 engine has no prompt; the equivalent surface is
-
-- :func:`newest_first_listing` — the labeled, newest-first listing as a
-  DataFrame the caller renders (CLI, notebook, UI), and
-- :func:`resolve_label` — the exact-label → id resolver, raising on no
-  match exactly where the reference raises ``InputError``.
-
-Both are plain column expressions: the listing is a sort + project (a
-top-k under a limit → TakeOrderedAndProject, no global sort at scale),
-and the resolver is one pushdown-able equality filter.
+:func:`newest_first_listing`, the labeled, newest-first listing as a
+DataFrame the caller renders (the ``datasets`` CLI subcommand). It is a
+sort + project: a top-k under a limit → TakeOrderedAndProject, no global
+sort at scale.
 """
 
 from __future__ import annotations
@@ -64,17 +58,3 @@ def newest_first_listing(
     if limit is not None:
         out = out.limit(limit)
     return out.drop("__created")
-
-
-def resolve_label(
-    df: DataFrame, label: str, name_col: str, id_col: str
-):
-    """Map a picked label back to its dataset id (the reference's linear
-    scan over choices). One equality filter — pushdown-able — plus a
-    single-row driver fetch; raises ValueError on no match (the
-    reference's ``InputError`` path)."""
-    lbl = _label(name_col, id_col)
-    row = df.filter(lbl == F.lit(label)).select(F.col(id_col)).first()
-    if row is None:
-        raise ValueError(f"no dataset matches label {label!r}")
-    return row[0]

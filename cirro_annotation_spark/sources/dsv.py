@@ -244,10 +244,14 @@ def read_dsv(
     ``(sep, columns)`` and union groups by name; types come from
     :func:`typed_sql` over the kinds the head reads gave. gz is
     transparent to Spark's text source. Each path is read as itself,
-    never as a glob.
+    never as a glob. As in pandas and Python's ``csv`` (the head read),
+    ``""`` in a quoted field is one quote and a backslash is an ordinary
+    character: Spark's default escape is ``\\``.
     """
     schema = StructType([StructField(c, StringType()) for c in columns])
-    reader = spark.read.schema(schema).options(header=header, sep=sep, mode="PERMISSIVE")
+    reader = spark.read.schema(schema).options(
+        header=header, sep=sep, escape='"', mode="PERMISSIVE"
+    )
     return reader.csv([escape_glob(p) for p in paths])
 
 

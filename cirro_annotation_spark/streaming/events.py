@@ -194,10 +194,10 @@ def _drain(
 
     ``pin_state_partitions=False`` opts a drain out of the state-
     partition pin (see _drain_state_partitions): the Python-stateful
-    operators (applyInPandasWithState / transformWithStateInPandas)
-    are compute-bound in their Python workers and WANT the parallelism
-    (stream_stateful_counts measured 1.6 → 2.4 s under the pin — kept
-    at the session default deliberately).
+    operator (applyInPandasWithState) is compute-bound in its Python
+    workers and WANTS the parallelism (stream_stateful_counts measured
+    1.6 → 2.4 s under the pin — kept at the session default
+    deliberately).
 
     The memory sink's temp view is dropped AFTER the eager
     localCheckpoint (the checkpointed partitions no longer reference the
@@ -299,99 +299,6 @@ def stateful_user_counts(spark: SparkSession, parquet_path: str) -> DataFrame:
         spark, stream, "update", "stream_state_",
         pin_state_partitions=False,  # Python-stateful: wants parallelism
     )
-
-
-def stateful_user_stats_tws(spark: SparkSession, parquet_path: str) -> DataFrame:
-    """Per-user running (count, value-sum) via transformWithStateInPandas —
-    Spark 4's arbitrary-stateful API (the applyInPandasWithState
-    successor): typed state handles (ValueState/ListState/MapState),
-    explicit timers, and TTL, backed by the RocksDB state store.
-
-    This is the API a 100 TB deployment should target for custom
-    stateful operators: RocksDB spills state off-heap/to disk (the HDFS-
-    backed default holds state in executor memory), TTL bounds state for
-    keys that go quiet, and state is still keyed/partitioned by the
-    groupBy key so it scales horizontally with executors.
-
-    Semantics over a bounded drain: one micro-batch, each user's final
-    (n, total) emitted once in Update mode — equals the batch groupBy.
-
-    ENVIRONMENT GATE: transformWithState's Python driver worker imports
-    google.protobuf (its state-server wire format), which is absent from
-    this container (and installs are off-limits); without it the worker
-    crashes with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE. We
-    fail fast with a clear error instead — same honest-gate pattern as
-    sources/hdf.py (h5py) and operators/multimodal.py (Pillow/ffmpeg).
-    The applyInPandasWithState twin (stateful_user_counts above) covers
-    the custom-stateful slot end-to-end today; on a protobuf-equipped
-    cluster this operator runs as written (tests/test_streaming.py
-    exercises whichever path the environment allows).
-    """
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(google.protobuf) for its state-server protocol; not "
-            "installed in this environment"
-        ) from e
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._agg.get() or (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._agg.update((n, float(total)))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    # transformWithState requires the RocksDB state store provider; set it
-    # for this query and restore the session's previous provider after the
-    # bounded drain (other streaming queries keep their configured store).
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            _read_events_stream(spark, parquet_path)
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=UserStats(),
-                outputStructType="user_id long, n_events long, total_value double",
-                outputMode="Update",
-                timeMode="None",
-            )
-        )
-        out = _drain(
-            spark, stream, "update", "stream_tws_",
-            pin_state_partitions=False,  # Python-stateful: wants parallelism
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    return out
 
 
 def purchase_click_pairs(

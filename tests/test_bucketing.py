@@ -7,8 +7,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cirro_annotation_spark.plans import count_exchanges, physical_plan
+from cirro_annotation_spark.plans import physical_plan
 from cirro_annotation_spark.suites.util import t
+from test_plans import count_exchanges
 
 
 @pytest.fixture(scope="module")

@@ -2,12 +2,7 @@
 non-interactive)."""
 from __future__ import annotations
 
-import pytest
-
-from cirro_annotation_spark.sources.datasets import (
-    newest_first_listing,
-    resolve_label,
-)
+from cirro_annotation_spark.sources.datasets import newest_first_listing
 from cirro_annotation_spark.suites.util import t
 
 
@@ -21,17 +16,3 @@ def test_listing_is_newest_first_and_labeled(spark, sf_dir):
     assert days == sorted(days, reverse=True)
     for r in rows:
         assert r["label"].endswith(f" - {r['dataset_id']}")
-
-
-def test_resolve_label_roundtrip(spark, sf_dir):
-    o = t(spark, sf_dir, "orders")
-    first = newest_first_listing(
-        o, "o_orderpriority", "o_orderkey", "o_orderdate", limit=1
-    ).collect()[0]
-    assert resolve_label(o, first["label"], "o_orderpriority", "o_orderkey") == first["dataset_id"]
-
-
-def test_resolve_label_raises_on_no_match(spark, sf_dir):
-    o = t(spark, sf_dir, "orders")
-    with pytest.raises(ValueError, match="no dataset"):
-        resolve_label(o, "nope - 0", "o_orderpriority", "o_orderkey")

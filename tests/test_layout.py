@@ -115,24 +115,6 @@ def test_interleave_bits_is_morton_order(spark):
     assert z == [0, 1, 4, 5]
 
 
-def test_compact_parquet_bounds_file_count(spark, events, tmp_path):
-    """64 tiny files compact to ceil(n/target) evenly-sized files with
-    rows preserved; sorted variant also leaves tight per-file stats."""
-    src = str(tmp_path / "small")
-    dst = str(tmp_path / "compact")
-    events.repartition(64).write.parquet(src)
-    assert len(glob.glob(src + "/part-*.parquet")) == 64
-    n = spark.read.parquet(src).count()
-    target = (n + 3) // 4  # expect 4 files
-    wrote = L.compact_parquet(spark, src, dst, target, sort_col="value")
-    files = glob.glob(dst + "/part-*.parquet")
-    assert wrote == 4 and len(files) == 4
-    assert spark.read.parquet(dst).count() == n
-    # sorted compaction -> a mid-range value band skips at least half
-    lo, hi = _value_band(events)
-    assert rowgroup_overlap_fraction(dst, "value", lo, hi) <= 0.5
-
-
 def test_zorder_stats_zone_maps_narrow(spark):
     """layout_zorder_stats on the sf0.001 lineitem: 8 files, every
     row accounted for, and each file's zone map spans at most ~1/4 of

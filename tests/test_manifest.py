@@ -872,3 +872,40 @@ def test_data_directory_annotate_cannot_walk_raises(spark, tmp_path, kind):
     }[kind]
     with pytest.raises(error, match=match):
         annotate(spark, root, str(tmp_path / "out"))
+
+
+def test_doubled_quote_and_quoted_backslash_read_as_pandas_reads_them(spark, tmp_path):
+    """RFC 4180 CSV: ``""`` inside a quoted field is one quote, and a
+    backslash before the closing quote is a plain character."""
+    import pandas as pd
+
+    from cirro_annotation_spark.manifest import annotate
+
+    root = tmp_path / "data"
+    root.mkdir()
+    (root / "e.csv").write_text('id,path,score\n1,"C:\\dir\\",0.5\n2,"say ""hi""",0.7\n')
+    _, results = annotate(spark, str(root), str(tmp_path / "out"))
+    (df,) = results.values()
+    expected = pd.read_csv(root / "e.csv", sep=None, engine="python")
+    assert df.columns == list(expected.columns)
+    assert [tuple(r) for r in df.orderBy("id").collect()] == list(
+        expected.itertuples(index=False, name=None)
+    )
+    assert expected["path"].tolist() == ["C:\\dir\\", 'say "hi"']
+
+
+def test_standard_file_path_holding_a_token_raises(spark, tmp_path):
+    """A discovered standard file whose relative path holds ``[word]``
+    would be read as a template (``qc/[run]/s.tsv`` takes in
+    ``qc/x/s.tsv`` too, so that row is written twice): ``annotate``
+    raises, naming the file, before any write."""
+    from cirro_annotation_spark.manifest import annotate
+
+    root = tmp_path / "data"
+    for rel, row in (("qc/[run]/s.tsv", "1\t2"), ("qc/x/s.tsv", "3\t4")):
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_text(f"a\tb\n{row}\n")
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match=re.escape("qc/[run]/s.tsv")):
+        annotate(spark, str(root), str(out))
+    assert not out.exists()

@@ -145,74 +145,38 @@ def test_delete_mode_no_matches_links_everything(spark, tmp_path):
     assert spark.read.parquet(base).count() == 100
 
 
-def test_time_travel_snapshots(spark, tmp_path):
-    from cirro_annotation_spark.operators.merge import (
-        list_table_versions,
-        read_table_version,
-    )
-
+def test_merge_leaves_no_sibling_directory(spark, tmp_path):
+    """A merge replaces its base in place: no retained version, no
+    ``.old`` and no staging directory is left beside it."""
     base = str(tmp_path / "base")
     _build_base(spark, base, n=200, files=4)
-    v0 = {r.key: r.val for r in spark.read.parquet(base).collect()}
-
-    import time as _time
-
-    merge_into_parquet(
-        spark, base,
-        spark.createDataFrame([(5, -5)], "key long, val long"),
-        "key", keep_old=True,
-    )
-    _time.sleep(0.002)  # distinct millis stamps
-    merge_into_parquet(
-        spark, base,
-        spark.createDataFrame([(6, -6)], "key long, val long"),
-        "key", keep_old=True,
-    )
-
-    assert len(list_table_versions(base)) == 2
-    got_v0 = {r.key: r.val for r in read_table_version(spark, base, 0).collect()}
-    assert got_v0 == v0  # oldest snapshot is the original table
-    got_v1 = {r.key: r.val for r in read_table_version(spark, base, 1).collect()}
-    assert got_v1[5] == -5 and got_v1[6] == 60
-    live = {r.key: r.val for r in read_table_version(spark, base).collect()}
-    assert live[5] == -5 and live[6] == -6
-
-    # retention is hard-link cheap: the untouched files in snapshot v1
-    # share inodes with the live table
-    import os as _os
-
-    v1_dir = list_table_versions(base)[1]
-    live_inodes = {_os.stat(_os.path.join(base, f)).st_ino
-                   for f in _os.listdir(base) if f.endswith(".parquet")}
-    v1_inodes = {_os.stat(_os.path.join(v1_dir, f)).st_ino
-                 for f in _os.listdir(v1_dir) if f.endswith(".parquet")}
-    assert live_inodes & v1_inodes
-
-    import pytest as _pytest
-
-    with _pytest.raises(IndexError):
-        read_table_version(spark, base, 2)
+    src = spark.createDataFrame([(5, -5), (5000, 1)], "key long, val long")
+    merge_into_parquet(spark, base, src, "key")
+    merge_into_parquet(spark, base, src.select("key"), "key", delete=True)
+    assert os.listdir(tmp_path) == ["base"]
+    assert spark.read.parquet(base).count() == 199
 
 
 def test_merge_validated_by_table_diff(spark, tmp_path):
-    """Integration: merge with keep_old, then table_diff(snapshot, live)
+    """Integration: copy the table, merge, then table_diff(copy, live)
     must recover EXACTLY the edit script that was merged — the
     reconciliation loop a production pipeline runs after every merge."""
-    from cirro_annotation_spark.operators.merge import (
-        read_table_version,
-        table_diff,
-    )
+    import shutil
+
+    from cirro_annotation_spark.operators.merge import table_diff
 
     base = str(tmp_path / "base")
+    before = str(tmp_path / "before")
     _build_base(spark, base, n=400, files=4)
+    shutil.copytree(base, before)
     src = spark.createDataFrame(
         [(k, -k) for k in range(10, 20)] + [(5000, 1), (5001, 2)],
         "key long, val long",
     )
-    merge_into_parquet(spark, base, src, "key", keep_old=True)
+    merge_into_parquet(spark, base, src, "key")
     diff = table_diff(
-        read_table_version(spark, base, 0),
-        read_table_version(spark, base),
+        spark.read.parquet(before),
+        spark.read.parquet(base),
         "key",
         ["val"],
     ).collect()
@@ -228,12 +192,8 @@ def test_merge_schema_evolution_widens_table(spark, tmp_path):
     """A source bringing a NEW column widens the table: matched rows
     carry the value, kept rows in rewritten files and rows in
     untouched (never-rewritten, old-schema) files read back as NULL
-    through read_table_version's mergeSchema; a later plain merge
-    still works against the evolved table."""
-    from cirro_annotation_spark.operators.merge import (
-        merge_into_parquet,
-        read_table_version,
-    )
+    through a mergeSchema read; a later plain merge still works against
+    the evolved table."""
 
     base = str(tmp_path / "ev")
     # two files with disjoint key ranges -> the high-range file stays
@@ -253,7 +213,7 @@ def test_merge_schema_evolution_widens_table(spark, tmp_path):
     stats = merge_into_parquet(spark, base, src, key="k")
     assert stats["files_rewritten"] == 1  # high-range file untouched
 
-    live = read_table_version(spark, base)
+    live = spark.read.option("mergeSchema", "true").parquet(base)
     assert set(live.columns) == {"k", "v", "tier"}
     rows = {r["k"]: (r["v"], r["tier"]) for r in live.collect()}
     assert len(rows) == 100
@@ -272,7 +232,7 @@ def test_merge_schema_evolution_widens_table(spark, tmp_path):
     )
     rows2 = {
         r["k"]: (r["v"], r["tier"])
-        for r in read_table_version(spark, base).collect()
+        for r in spark.read.option("mergeSchema", "true").parquet(base).collect()
     }
     assert len(rows2) == 102
     assert rows2[99] == (5, None) and rows2[101] == (5, None)
@@ -284,10 +244,6 @@ def test_merge_mixed_schema_affected_set_keeps_evolved_column(spark, tmp_path):
     with mergeSchema — a plain read takes the schema from an arbitrary
     footer and can silently rewrite kept rows WITHOUT the evolved
     column (permanent, nondeterministic data loss)."""
-    from cirro_annotation_spark.operators.merge import (
-        merge_into_parquet,
-        read_table_version,
-    )
 
     base = str(tmp_path / "mixed")
     spark.range(50).select(
@@ -321,7 +277,7 @@ def test_merge_mixed_schema_affected_set_keeps_evolved_column(spark, tmp_path):
 
     rows = {
         r["k"]: (r["v"], r["tier"])
-        for r in read_table_version(spark, base).collect()
+        for r in spark.read.option("mergeSchema", "true").parquet(base).collect()
     }
     assert len(rows) == 100
     assert rows[0] == (0, "gold")   # evolved value SURVIVES the mixed rewrite

@@ -1,8 +1,7 @@
-"""Multimodal plumbing tests: Arrow-batch shapes, fan-out arithmetic,
-honest codec stubs (operators/multimodal.py)."""
+"""Multimodal plumbing tests: Arrow-batch shapes, fan-out arithmetic
+(operators/multimodal.py)."""
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from cirro_annotation_spark.operators import multimodal as M
@@ -42,13 +41,6 @@ def test_extract_features_drops_payload(spark, sf_dir):
     row = out.first()
     assert row["decoded_len"] == row["n_bytes"]
     assert 0 <= row["checksum"] < 997
-
-
-def test_codec_stubs_raise(spark):
-    with pytest.raises(NotImplementedError):
-        M.FakeCodec.resize(b"x", 2, 2)
-    with pytest.raises(NotImplementedError):
-        M.FakeCodec.frame_sample(b"x", 2)
 
 
 def test_resize_payloads_decimates_bytes(spark, sf_dir):

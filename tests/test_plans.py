@@ -7,15 +7,39 @@ broadcast, the manifest pipeline shuffle-free.
 """
 from __future__ import annotations
 
+import re
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cirro_annotation_spark.plans import (
-    count_exchanges,
-    has_broadcast_join,
-    has_pushed_filters,
-    scan_read_schema,
-)
+from cirro_annotation_spark.plans import physical_plan, read_schema_cols
 from cirro_annotation_spark.suites.util import t
+
+
+def has_pushed_filters(df: DataFrame) -> bool:
+    """Every scan's filter list non-empty (the strict form the audit
+    table reports: one unpushed scan among several reads as '—')."""
+    plan = physical_plan(df)
+    return "PushedFilters: [" in plan and "PushedFilters: []" not in plan
+
+
+def scan_read_schema(df: DataFrame) -> list[str]:
+    """Column names in the parquet ReadSchema (what the scan actually reads)."""
+    return read_schema_cols(physical_plan(df))
+
+
+def has_broadcast_join(df: DataFrame) -> bool:
+    plan = physical_plan(df)  # one JVM explain render, not two
+    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def count_exchanges(df: DataFrame) -> int:
+    """Shuffle count in the plan — the number every operator should
+    minimize. Counts the formatted-explain node headers ``(N) Exchange``,
+    which are branch-prefix-proof (tree lines like ``:  +- Exchange (3)``
+    are easy to miss) and exclude ReusedExchange."""
+    plan = physical_plan(df)
+    return len(re.findall(r"^\(\d+\)\s+Exchange\b", plan, flags=re.MULTILINE))
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -94,7 +118,6 @@ def test_q1_scan_is_pruned_and_pushed(spark, sf_dir):
 def test_multiway_join_broadcasts_all_dims(spark, sf_dir):
     """3 dimension tables → 3 BroadcastHashJoins; the fact side shuffles
     once for the aggregation, never for the joins."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("join_multiway")(spark, sf_dir)
     plan = physical_plan(df)
@@ -111,7 +134,6 @@ def test_dedup_exact_shuffles_fingerprint_not_text(spark, sf_dir):
     """The dedup shuffle must carry the 32-byte fingerprint, not the
     document body: 'text' may appear only below the Exchange (scan side),
     never in the Exchange's output attributes."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("dedup_exact")(spark, sf_dir)
     plan = physical_plan(df)
@@ -126,7 +148,6 @@ def test_tfidf_single_dag_no_driver_count(spark, sf_dir):
     PLAN (the old d.count() ran a separate eager job and baked a
     literal in). Construction may only launch the parquet footer-read
     jobs a plain table read launches — not a count aggregation."""
-    from cirro_annotation_spark.plans import physical_plan
 
     tracker = spark.sparkContext.statusTracker()
 
@@ -148,7 +169,6 @@ def test_salted_join_spreads_hot_key(spark, sf_dir):
     (hinted — broadcast would make salting moot), and no broadcast join
     sneaks in. With ~80% of rows on one key, partitioning WITHOUT the
     salt would put 80% of the fact table on one reducer."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("join_salted_skew")(spark, sf_dir)
     plan = physical_plan(df)
@@ -184,7 +204,6 @@ def test_q6_predicates_all_pushed_single_exchange(spark, sf_dir):
 
 
 def test_q3_broadcast_chain_no_sortmerge(spark, sf_dir):
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("q3_shipping_priority")(spark, sf_dir)
     plan = physical_plan(df)
@@ -196,7 +215,6 @@ def test_q3_broadcast_chain_no_sortmerge(spark, sf_dir):
 def test_q7_broadcast_dims_no_sortmerge(spark, sf_dir):
     """Two-sided nation chain: dimension joins broadcast; at most the
     lineitem⋈orders join and the final agg shuffle."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("q7_nation_volume")(spark, sf_dir)
     plan = physical_plan(df)
@@ -208,7 +226,6 @@ def test_q7_broadcast_dims_no_sortmerge(spark, sf_dir):
 def test_q13_left_join_preserved(spark, sf_dir):
     """The ON-clause priority filter must not degrade the LEFT join to
     inner — zero-order customers are the point of the query."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("q13_customer_distribution")(spark, sf_dir)
     assert "LeftOuter" in physical_plan(df)
@@ -218,7 +235,6 @@ def test_q13_left_join_preserved(spark, sf_dir):
 def test_q17_decorrelated_two_aggs(spark, sf_dir):
     """Correlated scalar subquery decorrelated: brand-pruned per-part
     avg + final sum — exactly two shuffles, everything else broadcast."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("q17_small_quantity_revenue")(spark, sf_dir)
     plan = physical_plan(df)
@@ -235,7 +251,6 @@ def test_q19_disjunction_single_exchange(spark, sf_dir):
 def test_q22_anti_join_with_broadcast_threshold(spark, sf_dir):
     """Global-average threshold arrives as a broadcast 1-row frame; the
     urgent-orders exclusion is an anti join, never a collected IN-list."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("q22_dormant_high_balance")(spark, sf_dir)
     plan = physical_plan(df)
@@ -247,7 +262,6 @@ def test_q22_anti_join_with_broadcast_threshold(spark, sf_dir):
 def test_cdc_merge_single_window_exchange(spark, sf_dir):
     """Latest-wins collapse shuffles ONLY the changelog (window by key);
     the base table joins broadcast — it is never repartitioned."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("cdc_merge_upsert")(spark, sf_dir)
     assert "LeftOuter" in physical_plan(df)
@@ -270,7 +284,6 @@ def test_scan_local_doc_queries_shuffle_free(spark, sf_dir):
 def test_int8_cosine_broadcast_only(spark, sf_dir):
     """Quantized cosine: the query vector joins as a broadcast 1-row
     frame; the corpus never shuffles."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("sim_cosine_int8")(spark, sf_dir)
     assert count_exchanges(df) == 0
@@ -279,7 +292,6 @@ def test_int8_cosine_broadcast_only(spark, sf_dir):
 
 def test_left_outer_band_join_no_cartesian(spark, sf_dir):
     """The time-band left join keeps its equi-key: never a cartesian."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("stream_join_left_batch")(spark, sf_dir)
     plan = physical_plan(df)
@@ -298,7 +310,6 @@ def test_q2_shared_partitioning_single_exchange(spark, sf_dir):
     """The explicit repartition(l_partkey) must serve BOTH the
     (partkey, suppkey) aggregate and the per-part min window — one
     exchange total, dims broadcast, never a sort-merge."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("q2_min_cost_supplier")(spark, sf_dir)
     plan = physical_plan(df)
@@ -310,7 +321,6 @@ def test_q2_shared_partitioning_single_exchange(spark, sf_dir):
 def test_q4_exists_is_semi_join(spark, sf_dir):
     """EXISTS compiles to a semi join (one output row per order, state
     bounded by the orders side) — never an inner join + distinct."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("q4_order_priority")(spark, sf_dir)
     plan = physical_plan(df)
@@ -322,7 +332,6 @@ def test_q4_exists_is_semi_join(spark, sf_dir):
 def test_q8_q9_broadcast_dims_no_cartesian(spark, sf_dir):
     """The 7-table chains: every dimension subtree broadcasts; only the
     lineitem⋈orders fact join and the final agg may shuffle."""
-    from cirro_annotation_spark.plans import physical_plan
 
     for name, min_bc in (("q8_market_share", 3), ("q9_product_profit", 3)):
         df = _q(name)(spark, sf_dir)
@@ -337,7 +346,6 @@ def test_q11_q15_threshold_is_broadcast_one_row(spark, sf_dir):
     a broadcast 1-row frame — the cross join must build on the broadcast
     side (BNLJ or BHJ-cross depending on stats), never materialize as a
     CartesianProduct or a collected literal."""
-    from cirro_annotation_spark.plans import physical_plan
 
     for name in ("q11_important_stock", "q15_top_supplier"):
         df = _q(name)(spark, sf_dir)
@@ -350,7 +358,6 @@ def test_q11_q15_threshold_is_broadcast_one_row(spark, sf_dir):
 def test_q16_denylist_is_anti_join(spark, sf_dir):
     """The supplier exclusion is a broadcast anti join; the variety count
     is the standard two-exchange distinct aggregate."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("q16_part_supplier_variety")(spark, sf_dir)
     plan = physical_plan(df)
@@ -362,7 +369,6 @@ def test_q20_q21_nested_correlations_no_cartesian(spark, sf_dir):
     """Nested semi (q20) and semi+anti self-joins with inequality
     residuals (q21) must stay keyed hash joins — an inequality-only plan
     would be a cartesian explosion at scale."""
-    from cirro_annotation_spark.plans import physical_plan
 
     for name, kinds in (
         ("q20_excess_suppliers", ("LeftSemi",)),
@@ -380,7 +386,6 @@ def test_q20_q21_nested_correlations_no_cartesian(spark, sf_dir):
 def test_pack_sequences_single_window_exchange(spark, sf_dir):
     """Concat-and-chunk packing costs exactly the per-source window
     shuffle, and that shuffle carries token COUNTS, never text."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("pipeline_pack_sequences")(spark, sf_dir)
     assert count_exchanges(df) == 1
@@ -394,7 +399,6 @@ def test_pack_sequences_single_window_exchange(spark, sf_dir):
 def test_segment_dedup_shuffles_fingerprints_not_text(spark, sf_dir):
     """After the explode, every exchange carries (doc_id, md5) — the
     document body must never enter a shuffle."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("docs_segment_dedup_ratio")(spark, sf_dir)
     plan = physical_plan(df)
@@ -411,7 +415,6 @@ def test_mixture_sampling_corpus_never_shuffles(spark, sf_dir):
     twice pre-AQE, so up to 3 aggregate exchanges) — but the corpus side
     itself is filtered scan-locally: no exchange may sit between the
     documents scan and the broadcast joins."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("sample_mixture_weighted")(spark, sf_dir)
     plan = physical_plan(df)
@@ -435,7 +438,6 @@ def test_resample_ffill_single_window_pass(spark, sf_dir):
     per-bucket correlated join, no as-of fan-out: exactly the union's
     two input shuffles plus the grid's distinct, and exactly one Window
     operator."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("events_resample_ffill")(spark, sf_dir)
     plan = physical_plan(df)
@@ -447,7 +449,6 @@ def test_resample_ffill_single_window_pass(spark, sf_dir):
 def test_token_entropy_two_narrow_shuffles(spark, sf_dir):
     """Explode → (doc, token) count → per-doc rollup: two map-side-
     combining exchanges, text never shuffles."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("docs_token_entropy")(spark, sf_dir)
     assert count_exchanges(df) == 2
@@ -470,7 +471,6 @@ def test_rag_retrieval_broadcasts_topk(spark, sf_dir):
     """The k-row top-k side must broadcast onto the documents scan — the
     corpus itself never shuffles (only the top-k's own
     TakeOrderedAndProject funnel appears)."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("rag_retrieve_context")(spark, sf_dir)
     assert has_broadcast_join(df)
@@ -481,7 +481,6 @@ def test_rag_retrieval_broadcasts_topk(spark, sf_dir):
 def test_survivor_corpus_broadcasts_and_never_shuffles_text(spark, sf_dir):
     """Survivor hydration: broadcast join onto documents; every Exchange
     argument carries ids/cluster labels, never the text column."""
-    from cirro_annotation_spark.plans import physical_plan
 
     df = _q("dedup_survivor_corpus")(spark, sf_dir)
     assert has_broadcast_join(df)
@@ -563,7 +562,6 @@ def test_forecast_folds_are_single_exchange_per_stage(spark, sf_dir):
     """EWMA / Holt / backtest: one shuffle to the (type, day) rollup,
     one to the per-type series — the fold itself adds NO exchange
     (it is one codegen'd expression, not an iterative join)."""
-    from cirro_annotation_spark.plans import count_exchanges
     from cirro_annotation_spark.registry import QUERIES, load_all_suites
 
     load_all_suites()
@@ -616,7 +614,6 @@ def test_r10_final_wave_plan_shapes(spark, sf_dir):
     single-partition global-sort trap its distributed ranks exist to
     avoid); the burst/conformal folds add no exchange beyond rollup +
     series (the forecast-fold discipline)."""
-    from cirro_annotation_spark.plans import count_exchanges
     from cirro_annotation_spark.registry import QUERIES, load_all_suites
 
     load_all_suites()
@@ -703,7 +700,6 @@ def test_r12b_plan_shapes(spark, sf_dir):
     user_id (no CartesianProduct); (e) sim_silhouette_ivf is pure
     scan-side codegen — no explode (Generate) and no shuffle before
     the final 8-cell aggregate's single exchange."""
-    from cirro_annotation_spark.plans import count_exchanges
     from cirro_annotation_spark.registry import QUERIES, load_all_suites
 
     load_all_suites()
@@ -739,7 +735,6 @@ def test_read_schema_cols_nested_struct_counts_top_level():
     """Bracket-depth parsing: nested struct/map fields are ONE top-level
     column each — the naive comma split miscounted them, and the count
     feeds the committed fingerprint scan_cols axis (ADVICE r14)."""
-    from cirro_annotation_spark.plans import read_schema_cols
 
     plan = (
         "(1) Scan parquet\n"

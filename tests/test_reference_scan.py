@@ -24,23 +24,7 @@ PKG = "cirro_annotation_spark"
 ENTRY = ("perfbench", "scripts", "bench.py", "__spark_entry__.py", f"{PKG}/__main__.py")
 
 KEEP = {
-    "sources.remote": "the reference's get_dataset: catalog, cache and direct read",
     "sources.hdf.iter_hdf_chunks": "the HDF decoder; it needs h5py, which is not installed",
-    "sources.datasets.resolve_label": "a capability COVERAGE.md lists",
-    "operators.layout.compact_parquet": "a capability COVERAGE.md lists",
-    "operators.merge.read_table_version": "a capability COVERAGE.md lists",
-    "streaming.events.stateful_user_stats_tws": "a capability COVERAGE.md lists",
-    "operators.similarity.semantic_dedup_removed": (
-        "the SQL reference the Arrow SemDeDup operator is tested against"
-    ),
-    "operators.similarity.topk_cosine_lsh": (
-        "the literal-vector form of the LSH search, which works out dim from the query"
-    ),
-    "plans.has_pushed_filters": "a plan assertion helper",
-    "plans.scan_read_schema": "a plan assertion helper",
-    "plans.has_broadcast_join": "a plan assertion helper",
-    "plans.count_exchanges": "a plan assertion helper",
-    "operators.multimodal.FakeCodec.resize": "completes the codec protocol of the fake",
 }
 
 

@@ -67,7 +67,9 @@ def test_literal_search_matches_query_frame_form(spark, method):
             S.topk_cosine_bruteforce_q(*args, qf),
         ),
         "lsh": lambda: (
-            S.topk_cosine_lsh(*args, q, n_planes=6),
+            S.topk_cosine_lsh_q(
+                *args, S._literal_query_frame(spark, q), n_planes=6, dim=len(q)
+            ),
             S.topk_cosine_lsh_q(*args, qf, n_planes=6, dim=len(q)),
         ),
         "ivf": lambda: (
@@ -89,7 +91,10 @@ def test_literal_search_construction_launches_no_job(spark):
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None))
     S.topk_cosine_bruteforce(df, "embedding", "vec_id", q)
-    S.topk_cosine_lsh(df, "embedding", "vec_id", q, n_planes=4)
+    S.topk_cosine_lsh_q(
+        df, "embedding", "vec_id", S._literal_query_frame(spark, q),
+        n_planes=4, dim=len(q),
+    )
     S.ivf_topk_cosine(df, "embedding", "vec_id", q, cents, nprobe=1)
     assert len(tracker.getJobIdsForGroup(None)) == before
 
@@ -125,7 +130,10 @@ def test_lsh_bucket_contains_query_neighbors(spark, sf_dir):
     definition) and only returns vectors from the query's bucket."""
     emb = t(spark, sf_dir, "embeddings")
     q = _query_vec(spark, sf_dir)
-    top = S.topk_cosine_lsh(emb, "embedding", "vec_id", q, k=10, n_planes=6).collect()
+    qf = S._literal_query_frame(spark, q)
+    top = S.topk_cosine_lsh_q(
+        emb, "embedding", "vec_id", qf, k=10, n_planes=6, dim=len(q)
+    ).collect()
     assert top and top[0]["vec_id"] == 0
 
 
@@ -210,6 +218,28 @@ def test_ivf_pinned_centroids_not_stale(spark):
             )
 
 
+def semantic_dedup_removed(df, vec_col, id_col, centroids, threshold):
+    """The SQL reference SemDeDup that the Arrow operator
+    (``S.semantic_dedup_removed_capped``) is tested against: assign each
+    vector its nearest centroid's cell, then remove every vector whose
+    cosine to a LOWER-id member of the SAME cell meets the threshold.
+    Returns ``(vec_id, cell, n_dominators, keeper_id, max_cosine)``."""
+    v = F.col(vec_col).cast("array<double>")
+    pairs = S._cosine_pairs_within(
+        df, v, id_col, S._argmin_centroid(v, centroids), threshold
+    ).select(
+        "id_a",
+        F.col("id_b").alias("vec_id"),
+        F.col("key").alias("cell"),
+        F.col("cosine_sim").alias("__cs"),
+    )
+    return pairs.groupBy("vec_id", "cell").agg(
+        F.count("*").alias("n_dominators"),
+        F.min("id_a").alias("keeper_id"),
+        F.round(F.max("__cs"), 6).alias("max_cosine"),
+    )
+
+
 def test_semantic_dedup_planted_pair_same_cell(spark):
     """A planted near-identical pair lands in the same quantizer cell
     (nearest centroid is distance-continuous) and the higher id is
@@ -227,7 +257,7 @@ def test_semantic_dedup_planted_pair_same_cell(spark):
     cents = [[rng.gauss(0.0, 1.0) for _ in range(8)] for _ in range(4)]
     out = {
         r["vec_id"]: r
-        for r in S.semantic_dedup_removed(
+        for r in semantic_dedup_removed(
             df, "embedding", "vec_id", cents, threshold=0.95
         ).collect()
     }
@@ -251,7 +281,7 @@ def test_semantic_dedup_respects_cell_boundary(spark):
     rows = [(0, [1.0, 0.05]), (1, [1.0, -0.05])]  # cosine ~0.995
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = [[1.0, 0.5], [1.0, -0.5]]
-    out = S.semantic_dedup_removed(
+    out = semantic_dedup_removed(
         df, "embedding", "vec_id", cents, threshold=0.9
     ).collect()
     assert out == []  # same-cell pairs only; cross-cell near-dup ignored
@@ -281,7 +311,7 @@ def test_semantic_dedup_capped_exact_when_under_cap(spark, sf_dir):
 
     emb = t(spark, sf_dir, "embeddings")
     ref = _canon_removed(
-        S.semantic_dedup_removed(
+        semantic_dedup_removed(
             emb, "embedding", "vec_id", CENTROIDS, 0.43
         ).collect()
     )
@@ -587,7 +617,7 @@ def test_zero_norm_vector_excluded_everywhere(spark):
     assert 2 not in ids
 
     # SemDeDup: zero vector neither removed nor a keeper
-    removed = S.semantic_dedup_removed(
+    removed = semantic_dedup_removed(
         df, "embedding", "vec_id", centroids=[[1.0, 0.0]], threshold=0.0
     )
     touched = {x for r in removed.collect() for x in (r["vec_id"], r["keeper_id"])}

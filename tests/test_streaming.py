@@ -59,38 +59,6 @@ def test_session_window_merges_gaps(spark):
     assert by_start["2024-01-01 03:00:00"] == 1
 
 
-def test_stateful_tws_runs_or_gates_cleanly(spark, sf_dir):
-    """transformWithStateInPandas (Spark 4 arbitrary-stateful API): on a
-    protobuf-equipped environment the per-user (count, sum) must equal
-    the batch groupBy; in this container (no google.protobuf) the
-    operator must fail fast with the documented gate, not crash the
-    streaming runtime mid-query."""
-    import pytest
-
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-        have_protobuf = True
-    except ImportError:
-        have_protobuf = False
-
-    path = os.path.join(sf_dir, "events.parquet")
-    if not have_protobuf:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            STRM.stateful_user_stats_tws(spark, path)
-        return
-    from pyspark.sql import functions as F
-
-    out = STRM.stateful_user_stats_tws(spark, path)
-    batch = (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 2).alias("total_value"))
-    )
-    cols = ["user_id", "n_events", "total_value"]
-    assert _sorted_rows(out, cols) == _sorted_rows(batch, cols)
-
-
 def test_stream_dedup_watermark_counts(spark, sf_dir):
     """Stateful dedup on event_id: counts equal the batch distinct counts
     (testdata event_ids are unique, so dedup is a no-op — the point is the
