@@ -5,11 +5,11 @@ of its top-level classes, that span 15 lines or more; the query suites
 are left out (their functions are queries, not engine code). Each body
 is unparsed from the AST without its docstring, so comments and layout
 do not count, and every pair is scored with ``difflib``'s ratio
-(``autojunk=False``). Pairs above the threshold are printed, highest
+(``autojunk=False``). Pairs above THRESHOLD are printed, highest
 first, and their count last. A pair here is a candidate for one shared
 body, not a verdict: two functions of one idiom also score high.
 
-Usage: python scripts/twin_scan.py [--threshold 0.45] [REPO_ROOT]
+Usage: python scripts/twin_scan.py [REPO_ROOT]
 """
 
 from __future__ import annotations
@@ -20,7 +20,9 @@ import difflib
 import itertools
 from pathlib import Path
 
+PKG = "cirro_annotation_spark"
 MIN_LINES = 15
+THRESHOLD = 0.45
 
 
 def _body(node: ast.AST) -> str:
@@ -52,16 +54,16 @@ def candidates(package: Path) -> dict[str, str]:
     return out
 
 
-def twins(bodies: dict[str, str], threshold: float) -> list[tuple[float, str, str]]:
-    """(ratio, a, b) of each pair whose ratio exceeds ``threshold``."""
+def twins(bodies: dict[str, str]) -> list[tuple[float, str, str]]:
+    """(ratio, a, b) of each pair whose ratio exceeds THRESHOLD."""
     out = []
     for (a, ta), (b, tb) in itertools.combinations(bodies.items(), 2):
         sm = difflib.SequenceMatcher(None, ta, tb, autojunk=False)
         # both quick ratios bound ratio() from above
-        if sm.real_quick_ratio() <= threshold or sm.quick_ratio() <= threshold:
+        if sm.real_quick_ratio() <= THRESHOLD or sm.quick_ratio() <= THRESHOLD:
             continue
         r = sm.ratio()
-        if r > threshold:
+        if r > THRESHOLD:
             out.append((r, a, b))
     return sorted(out, key=lambda t: (-t[0], t[1], t[2]))
 
@@ -69,15 +71,12 @@ def twins(bodies: dict[str, str], threshold: float) -> list[tuple[float, str, st
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("root", nargs="?", default=Path(__file__).resolve().parent.parent, type=Path)
-    ap.add_argument("--threshold", type=float, default=0.45)
     args = ap.parse_args()
-    # the package is the one directory of the repo that runs as a program
-    (main_py,) = args.root.glob("*/__main__.py")
-    bodies = candidates(main_py.parent)
-    pairs = twins(bodies, args.threshold)
+    bodies = candidates(args.root / PKG)
+    pairs = twins(bodies)
     for r, a, b in pairs:
         print(f"{r:.2f}  {a}  {b}")
-    print(f"{len(pairs)} pairs above {args.threshold} among {len(bodies)} functions")
+    print(f"{len(pairs)} pairs above {THRESHOLD} among {len(bodies)} functions")
 
 
 if __name__ == "__main__":

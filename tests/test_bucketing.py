@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from cirro_annotation_spark.plans import physical_plan
 from cirro_annotation_spark.suites.util import t
-from test_plans import count_exchanges
+from tests.plan_helpers import count_exchanges
 
 
 @pytest.fixture(scope="module")
